@@ -13,7 +13,8 @@ reported: one-shot numbers on this box carry +/-50% ambient noise
 code), and a median-of-3 in one session is the cheapest robust
 estimator. Reps run back-to-back per query (plan compile amortizes into
 rep 1; the median discards it when warm reps are faster, which is the
-steady-state number a user sees). No per-query caching — every rep
+steady-state number a user sees), with persisted RDDs released after
+every rep, outside the timer. No per-query caching — every rep
 re-scans parquet, so the real scan cost stays in.
 
 Timing action — RE-BASELINED in round 8. Through BENCH_r07 the action
@@ -27,6 +28,11 @@ output column to be computed while still collecting one row. r8 window
 cross-round continuity for the unaffected queries is unchanged and the
 legacy-14 subtotal is emitted for the diff.
 
+Measurement core: ``fingerprint`` (the timed action), ``time_median``
+(median-of-reps with persisted-RDD release after every sample),
+``start_session`` (session start + warm-up) and ``HEADLINE`` are the one
+copy every measuring tool uses; ``tools/measure.py`` is their CLI.
+
 Input layout — CHANGED in round 15 (measurement fix, declared in
 OPTIMIZATION_r15.md): the queries read a per-invocation scan-parallel
 copy of the SF dir (each table split into contiguous row-range part
@@ -35,8 +41,7 @@ scans parallelize the way any 100 TB input's thousands of splits
 would, and the low-core scaling dimension becomes measurable. Same
 rows, same schema, same results (full-registry layout differential);
 rebuilt from the parquet inputs on every invocation, nothing persisted
-across runs. SPARK_GRAFT_BENCH_LAYOUT=original restores the pre-r15
-layout for continuity comparisons.
+across runs. ``tools/measure.py layout`` compares the two layouts.
 """
 
 from __future__ import annotations
@@ -46,10 +51,10 @@ import os
 import shutil
 import sys
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_table_spark import get_spark
 from data_table_spark.queries import QUERIES
 
 # Headline set: one per operator family, heaviest-shuffle variants chosen
@@ -107,8 +112,7 @@ def scan_parallel_copy(sf_dir: str, target_bytes: int = 512 << 10,
     The copy is rebuilt from the parquet inputs on EVERY invocation
     into a fresh temp dir and deleted at exit: nothing is persisted or
     reused across runs, and no query work is precomputed — this is an
-    input-layout fix, not caching. Set SPARK_GRAFT_BENCH_LAYOUT=original
-    to bench the single-file layout instead (the pre-r15 series)."""
+    input-layout fix, not caching."""
     import glob as _glob
     import math
     import tempfile
@@ -150,22 +154,74 @@ def scan_parallel_copy(sf_dir: str, target_bytes: int = 512 << 10,
     return out_root, {"mode": "scan_parallel", "n_parts": n_parts}
 
 
-def _release_persisted(spark) -> int:
+def start_session(app: str, data_dir: str):
+    """Session start plus untimed warm-up (JVM, codegen and scan paths).
+    The nation count alone was NOT enough: the first real aggregate
+    query still paid ~3s of codegen/scan warm-up, which made probe_start
+    read ~3-4x probe_end on an IDLE box (r8/r9 both). The imports are
+    resolved at call time, so a caller that installed another tree's
+    modules (``measure.py ab``) gets that tree's session and query."""
+    from data_table_spark import get_spark
+    from data_table_spark.queries import QUERIES
+
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.read.parquet(f"{data_dir}/nation.parquet").count()
+    fingerprint(QUERIES["gforce_q1"](spark, data_dir))
+    return spark
+
+
+def median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
+
+
+class Timed(NamedTuple):
+    median: float
+    samples: list[float]  # sorted
+    n: int
+    h: int | None
+    released: int  # persisted RDDs released across all samples
+
+
+def time_median(build: Callable[[], object], reps: int) -> Timed:
+    """Median wall seconds of ``reps`` (at least 1) samples of
+    build-then-force: ``build()`` returns a DataFrame or DT, and the
+    timer covers its construction plus ``fingerprint``. Persisted RDDs
+    are released after EVERY sample, outside the timer, so no sample
+    inherits another's checkpoint blocks. Exceptions propagate (after
+    the release); callers record the failure and move on."""
+    from pyspark.sql import SparkSession
+
+    samples: list[float] = []
+    released = 0
+    for _ in range(max(1, reps)):
+        try:
+            t0 = time.perf_counter()
+            n, h = fingerprint(build())
+            samples.append(time.perf_counter() - t0)
+        finally:
+            released += release_persisted(SparkSession.active())
+    return Timed(median(samples), sorted(samples), n, h, released)
+
+
+def release_persisted(spark) -> int:
     """Unpersist every block-manager-resident RDD (bench-session
     hygiene, VERDICT r14 item 5): lazy localCheckpoints inside query
     paths leave their materialized blocks behind until ContextCleaner
     runs after a JVM GC, and accumulated blocks were measured to
-    inflate LATER entries of a long one-session run (up to 5x in
-    full-registry sweeps). Between bench entries nothing may
-    legitimately stay persisted — every rep rebuilds its DataFrames —
-    so an explicit, deterministic release beats waiting for GC.
+    inflate LATER samples of a long one-session run (up to 5x in
+    full-registry sweeps). Every sample rebuilds its DataFrames, so
+    nothing may legitimately stay persisted between samples, and an
+    explicit, deterministic release beats waiting for GC. The
+    unpersist BLOCKS until the blocks are removed, so the cleanup never
+    overlaps the next sample's timer.
     Returns the number of RDDs released (additive diagnostics)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     ids = list(jmap.keySet().toArray())
     for rid in ids:
         rdd = jmap.get(rid)
         if rdd is not None:
-            rdd.unpersist(False)
+            rdd.unpersist(True)
     return len(ids)
 
 
@@ -180,47 +236,35 @@ def _hashable_cols(sdf):
     ]
 
 
-def force_count(sdf) -> int:
-    """Row count via a reduction that forces EVERY output column (see
-    module docstring: a bare count() lets Catalyst prune Window
-    operators). pmod bounds the per-row term so the 64-bit sum cannot
-    overflow under ANSI mode."""
+def fingerprint(sdf) -> tuple[int, int | None]:
+    """The timed action: ``(row count, sum(pmod(xxhash64(all cols), p)))``
+    in one collected row, forcing EVERY output column (see module
+    docstring: a bare count() lets Catalyst prune Window operators).
+    Order-insensitive, so it doubles as a cheap value fingerprint. pmod
+    bounds the per-row term so the 64-bit sum cannot overflow under ANSI
+    mode. Accepts a DT or a DataFrame."""
     from pyspark.sql import functions as F
 
+    sdf = getattr(sdf, "df", sdf)
     row = sdf.select(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.pmod(F.xxhash64(*_hashable_cols(sdf)), F.lit(1000003))).alias("h"),
     ).collect()[0]
-    return row["n"]
+    return row["n"], row["h"]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # scan-parallel input layout (see scan_parallel_copy): default on;
-    # SPARK_GRAFT_BENCH_LAYOUT=original restores the single-file series.
-    # Any failure building the copy falls back to the original dir —
-    # the bench line must come out either way.
-    layout_mode = os.environ.get("SPARK_GRAFT_BENCH_LAYOUT", "split")
-    data_dir, layout_info = sf_dir, {"mode": "original"}
-    if layout_mode != "original":
-        try:
-            data_dir, layout_info = scan_parallel_copy(sf_dir)
-        except Exception as e:  # pragma: no cover — defensive fallback
-            print(f"# scan_parallel_copy failed ({e}); using {sf_dir}",
-                  file=sys.stderr)
-            data_dir, layout_info = sf_dir, {"mode": "original", "error": str(e)}
-    spark = get_spark("data-table-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # session warm-up (JVM + codegen paths), excluded from timings. The
-    # nation count alone was NOT enough: the first real aggregate query
-    # still paid ~3s of codegen/scan warm-up, which made probe_start
-    # read ~3-4x probe_end on an IDLE box (r8/r9 both) — i.e. the start
-    # probe measured cold-start, not ambient load, defeating the
-    # probe-pair's purpose. Run the probe query once untimed so both
-    # probes measure the warm steady state.
-    spark.read.parquet(f"{data_dir}/nation.parquet").count()
-    force_count(QUERIES["gforce_q1"](spark, data_dir))
+    # scan-parallel input layout (see scan_parallel_copy). Any failure
+    # building the copy falls back to the original dir — the bench line
+    # must come out either way.
+    try:
+        data_dir, layout_info = scan_parallel_copy(sf_dir)
+    except Exception as e:  # pragma: no cover — defensive fallback
+        print(f"# scan_parallel_copy failed ({e}); using {sf_dir}",
+              file=sys.stderr)
+        data_dir, layout_info = sf_dir, {"mode": "original", "error": str(e)}
+    spark = start_session("data-table-spark-bench", data_dir)
 
     # Ambient probes (VERDICT r6 item 2): the same fixed query timed once
     # at session start and once at session end, plus the session conf that
@@ -229,9 +273,8 @@ def main() -> None:
     # measurable from the JSON itself (probe_end/probe_start far from 1
     # == the box moved under us mid-run).
     def probe() -> float:
-        t0 = time.perf_counter()
-        force_count(QUERIES["gforce_q1"](spark, data_dir))
-        return round(time.perf_counter() - t0, 4)
+        t = time_median(lambda: QUERIES["gforce_q1"](spark, data_dir), 1)
+        return round(t.median, 4)
 
     conf_keys = [
         "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
@@ -263,38 +306,23 @@ def main() -> None:
     released: dict[str, int] = {}
     for name in names:
         fn = QUERIES[name]
-        samples: list[float] = []
-        n = 0
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, data_dir)
-                sdf = df.df if hasattr(df, "df") else df
-                n = force_count(sdf)
-            except Exception as e:  # one broken query must not kill the line
-                print(f"# {name}: FAILED {e}", file=sys.stderr)
-                samples = []
-                break
-            samples.append(time.perf_counter() - t0)
-        # checkpoint-block hygiene BETWEEN entries (r15, additive): the
-        # finished block's lazy localCheckpoints otherwise pile up in
-        # the block manager and contaminate later entries
-        df = sdf = None
-        rel = _release_persisted(spark)
-        if rel:
-            released[name] = rel
-        if not samples:
+        try:
+            t = time_median(lambda: fn(spark, data_dir), reps)
+        except Exception as e:  # one broken query must not kill the line
+            print(f"# {name}: FAILED {e}", file=sys.stderr)
             # still close the probe bracket so the series stays an
             # honest record of the whole run
             probes.append(probe())
             continue
-        timings[name] = round(sorted(samples)[len(samples) // 2], 4)
+        if t.released:
+            released[name] = t.released
+        timings[name] = round(t.median, 4)
         probes.append(probe())
         probe_pair[name] = (probes[-2], probes[-1])
-        detail = "/".join(f"{s:.2f}" for s in sorted(samples))
+        detail = "/".join(f"{s:.2f}" for s in t.samples)
         print(
             f"# {name}: median {timings[name]:.3f}s of [{detail}] "
-            f"({n} rows; local probe {probes[-2]:.2f}/{probes[-1]:.2f})",
+            f"({t.n} rows; local probe {probes[-2]:.2f}/{probes[-1]:.2f})",
             file=sys.stderr,
         )
 
@@ -353,7 +381,7 @@ def main() -> None:
         "conf": conf,
         # r15 additive diagnostics: input layout of this run (see
         # scan_parallel_copy) and the per-entry count of persisted RDDs
-        # released by the between-entries hygiene pass
+        # released by time_median's after-every-sample hygiene pass
         "input_layout": layout_info,
         "released_rdds": released,
     }))

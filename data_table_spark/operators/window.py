@@ -68,7 +68,7 @@ def win(dt: DT, by=None, order=None) -> WindowSpec:
 
 
 # Measured break-even for the hot-key chunk-stitches (SCALE.md "Skewed
-# keys"; probes in tools/chunk_probe.py): at 1M rows in ONE key the
+# keys"; probes in `tools/measure.py chunk`): at 1M rows in ONE key the
 # stitch is break-even-to-slightly-worse (frank 1.53s vs 1.68s, rleid
 # 1.62s vs 1.75s, asof 1.5s -> 2.8s), at 10M it wins 3.3-6.7x. AUTO
 # splits only safely past the crossover; the per-chunk target matches

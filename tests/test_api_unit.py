@@ -2897,7 +2897,7 @@ def test_cc_reliable_checkpoint_identical(spark, tables):
 def test_auto_n_chunks_heuristic(spark, tables):
     """n_chunks="auto" (round-9 verdict item 6): a cheap hottest-key
     probe decides split vs unsplit against the MEASURED 1M break-even
-    (SCALE.md / tools/chunk_probe.py). Uniform small keys stay
+    (SCALE.md / tools/measure.py chunk). Uniform small keys stay
     unsplit; a key past the break-even splits to ~target-row chunks
     capped at defaultParallelism; ints/None pass through untouched."""
     from pyspark.sql import functions as F

@@ -24,7 +24,7 @@ workload's characteristics instead of degenerating:
 region/nation stay single-copy (fixed-size dims, as in TPC-H).
 
 Usage: python tools/make_scale_data.py <K> <out_dir> [src_dir]
-e.g.   python tools/make_scale_data.py 10 /root/repo/.tmp/sf1
+e.g.   python tools/make_scale_data.py 10 .tmp/sf1
 """
 
 from __future__ import annotations

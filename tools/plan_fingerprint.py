@@ -26,6 +26,27 @@ import sys
 sys.path.insert(0, ".")
 
 
+def scrub(plan: str) -> str:
+    """Replace the plan text's volatile tokens with stable ones."""
+    norm = re.sub(r"#\d+", "#x", plan)
+    # HOF lambda variable names carry a SESSION-GLOBAL counter
+    # (`lambda x_71` in a fresh session vs `lambda x_91` after other
+    # queries built lambdas). Renumber them per plan by first
+    # occurrence, so the counter drops out but WHICH variable a nested
+    # lambda body references stays in the fingerprint.
+    ordinal: dict[str, int] = {}
+    norm = re.sub(
+        r"lambda (\w+?)_\d+\b",
+        lambda m: f"lambda {m[1]}_{ordinal.setdefault(m[0], len(ordinal))}",
+        norm,
+    )
+    norm = re.sub(r"plan_id=\d+", "plan_id=x", norm)
+    norm = re.sub(r"application_\d+", "app", norm)
+    norm = re.sub(r"appattempt[^ ,\)\]]*", "app", norm)
+    norm = re.sub(r"/tmp/[^ ,\)\]]*", "/tmp/x", norm)
+    return re.sub(r"spark-warehouse[^ ,\)\]]*", "wh", norm)
+
+
 def main():
     out_path = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
@@ -41,19 +62,7 @@ def main():
         try:
             df = fn(spark, sf)
             plan = df._jdf.queryExecution().optimizedPlan().toString()
-            norm = re.sub(r"#\d+", "#x", plan)
-            # HOF lambda variable names carry a SESSION-GLOBAL counter
-            # (`lambda x_71` in a fresh session vs `lambda x_91` after
-            # other queries built lambdas) — the r15 "one-session
-            # run-order context" spurious-diff mechanism, confirmed by
-            # plan-text diff (round-close re-verification session)
-            norm = re.sub(r"lambda ([a-zA-Z]+)_\d+", r"lambda \1_n", norm)
-            norm = re.sub(r"plan_id=\d+", "plan_id=x", norm)
-            norm = re.sub(r"application_\d+", "app", norm)
-            norm = re.sub(r"appattempt[^ ,\)\]]*", "app", norm)
-            norm = re.sub(r"/tmp/[^ ,\)\]]*", "/tmp/x", norm)
-            norm = re.sub(r"spark-warehouse[^ ,\)\]]*", "wh", norm)
-            fps[name] = hashlib.md5(norm.encode()).hexdigest()
+            fps[name] = hashlib.md5(scrub(plan).encode()).hexdigest()
         except Exception as ex:  # keep sweeping; record the failure
             fps[name] = f"ERR:{type(ex).__name__}:{ex}"[:200]
     json.dump(fps, open(out_path, "w"), indent=0, sort_keys=True)
