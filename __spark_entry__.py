@@ -3,10 +3,17 @@
 Each entry in ``queries()`` exercises one operator family from SURVEY.md §2
 through the data_table_spark API; ``oracle_sql()`` holds the DuckDB-
 runnable ANSI-SQL equivalent. Aggregates over doubles are cast to
-DECIMAL(18,4) before summation in BOTH engines: decimal addition is
-order-independent and exact, so the value-hash comparison is immune to
-float summation-order differences between Spark partial aggregation and
-DuckDB, then cast back to DOUBLE for a common output schema.
+DECIMAL(18,4) (a few sites use scale 2 or 6) before summation in BOTH
+engines: decimal addition is order-independent and exact, so the
+value-hash comparison is immune to float summation-order differences
+between Spark partial aggregation and DuckDB, then cast back to DOUBLE
+for a common output schema. Both halves live in data_table_spark/exact.py.
+Its oracle half does not use DuckDB 1.0.0's own casts, which differ from
+Spark's twice: the addend cast scales the binary double (Spark rounds
+HALF_UP on Double.toString, so 1314.51625 is .5163, not .5162), and the
+back cast goes through a double, inexact once |sum| * 10^4 > 2^53
+(9.007e11). With both matched, the only limit is the per-addend cap
+|x| < 10^14, at which both engines raise.
 """
 
 from __future__ import annotations

@@ -711,12 +711,9 @@ _TABLE_ORDER = {
 }
 
 
-# events.parquet stores ts as parquet TIMESTAMP(NANOS). How Spark surfaces
-# that column changed across major versions:
-#   - Spark 3.x with spark.sql.legacy.parquet.nanosAsLong=true: int64 nanos.
-#   - Spark 4.x: the conf was removed; the column arrives as TIMESTAMP_NTZ,
-#     truncated to micros (same floor-to-µs DuckDB applies on read, so the
-#     oracle agrees).
+# events.parquet stores ts as parquet TIMESTAMP(NANOS). Spark 4 reads that
+# column as TIMESTAMP_NTZ, truncated to micros (the same floor-to-µs DuckDB
+# applies on read, so the oracle agrees).
 # _EPOCH_US_FROM_NTZ converts the NTZ wall clock to epoch micros WITHOUT
 # consulting spark.sql.session.timeZone (unix_date/hour/minute/date_part on
 # NTZ are pure wall-clock field extractions), so the result is identical on
@@ -732,23 +729,15 @@ _EPOCH_US_FROM_NTZ = (
 def derive_event_time(df: DataFrame) -> DataFrame:
     """Normalize the raw events frame to the engine's event-time contract:
     ``ts_us`` bigint epoch-micros, ``ts_ns`` bigint epoch-nanos, ``ts``
-    TimestampType (micros instant). Handles both physical readings of the
-    parquet TIMESTAMP(NANOS) column (int64 nanos on nanosAsLong-capable
-    Sparks; TIMESTAMP_NTZ on Spark 4+, where sub-µs precision is already
-    floored away by the reader)."""
-    from pyspark.sql.types import LongType, TimestampNTZType
+    TimestampType (micros instant). The parquet TIMESTAMP(NANOS) column
+    arrives as TIMESTAMP_NTZ, its sub-µs precision already floored away
+    by the reader."""
+    from pyspark.sql.types import TimestampNTZType
 
     dtype = df.schema["ts"].dataType
-    if isinstance(dtype, LongType):
-        # lossless int64 nanos (legacy read path)
-        return (
-            df.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts_us", F.expr("ts_ns div 1000"))
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
     if isinstance(dtype, TimestampNTZType):
-        # column order mirrors the legacy branch: original columns with
-        # ts replaced by ts_ns in place, then ts_us and ts appended
+        # original columns with ts replaced by ts_ns in place, then ts_us
+        # and ts appended
         order = [
             "ts_ns" if c == "ts" else c for c in df.columns
         ] + ["ts_us", "ts"]
@@ -761,8 +750,8 @@ def derive_event_time(df: DataFrame) -> DataFrame:
             .select(*order)
         )
     # already TimestampType (e.g. a re-written micros parquet) — same
-    # column contract as the other branches: ts_ns in place of ts, then
-    # ts_us and ts appended, so every read path yields one schema
+    # column contract as the NTZ branch: ts_ns in place of ts, then ts_us
+    # and ts appended, so every read path yields one schema
     order = ["ts_ns" if c == "ts" else c for c in df.columns] + ["ts_us", "ts"]
     return (
         df.withColumn("ts_us", F.unix_micros(F.col("ts")))
@@ -779,14 +768,6 @@ class Tables:
         self.spark = spark
         self.sf_dir = sf_dir
         self._cache: dict[str, DT] = {}
-        # Harmless on Spark 4 (the conf is gone; set of an unknown legacy
-        # key is accepted); required on 3.x so TIMESTAMP(NANOS) reads as
-        # int64 instead of erroring. derive_event_time sniffs whichever
-        # dtype actually arrives.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
 
     def __getitem__(self, name: str) -> DT:
         if name not in self._cache:

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens_col, word_shingles
+from .text import tokens_col
 
 # MinHash parameters. b*r = 126 permutations; threshold curve midpoint
 # (1/b)^(1/r) ≈ 0.60. r=6 keeps band-collision odds for UNRELATED pairs
@@ -104,13 +104,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def _shingle_table(docs: DataFrame, n: int = 3) -> DataFrame:
-    toks = tokens_col("text")
-    return spread(docs).select(
-        "doc_id", word_shingles(toks, n).alias("shingles")
-    ).withColumn("sz", F.size("shingles"))
-
-
 def positional_ngrams(docs: DataFrame, n: int = 3) -> DataFrame:
     """POSITIONAL word-n-gram rows (doc_id, pos, g): one row per
     starting token position (0-based), NOT distinct — positions matter
@@ -152,10 +145,6 @@ def shingle_rows(docs: DataFrame, n: int = 3) -> DataFrame:
         .select("doc_id", F.col("g").alias("s"))
         .distinct()
     )
-
-
-def shingle_sizes(sr: DataFrame) -> DataFrame:
-    return sr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
 
 def ngram_jaccard_pairs(
@@ -465,25 +454,6 @@ def _perm_min_aggs() -> list[Column]:
     ]
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """126-permutation MinHash signature as an array<long> (array-column
-    form for API parity; `minhash_lsh_pairs` uses the faster relational
-    encoding of the same permutations — see _perm_min_aggs)."""
-    hs = F.transform(
-        shingles, lambda s: F.xxhash64(s).bitwiseAND(F.lit(_P31))
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hs, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P31))
-                )
-            )
-            for a, b in zip(_PERM_A, _PERM_B)
-        ]
-    )
-
-
 def lsh_band_index(
     docs: DataFrame, n: int = 3, with_shingles: bool = False,
     sr: DataFrame | None = None,
@@ -693,34 +663,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def simhash_col(shingles: Column) -> Column:
-    """48-bit SimHash over a shingle array, md5-based so the oracle can
-    reproduce it: feature hash = int(md5(s)[:12], 16); bit i of the
-    SimHash is set iff 2*(count of features with bit i set) > n_features.
-    (Array-column form; `simhash_table` computes the same hash
-    relationally for speed — array higher-order fns are interpreted.)"""
-    hs = F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    n = F.size(hs)
-    bits = [
-        F.when(
-            F.size(
-                F.filter(hs, lambda h: F.shiftright(h, i).bitwiseAND(1) == 1)
-            )
-            * 2
-            > n,
-            F.lit(1 << i).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for i in range(SIMHASH_BITS)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def simhash_table(sr: DataFrame) -> DataFrame:

@@ -2,8 +2,14 @@
 (spark, sf_dir) -> DataFrame, with a DuckDB oracle SQL string.
 
 Conventions (see __spark_entry__.py docstring):
-- double aggregates go through DECIMAL(18,4) for order-independent exact
-  sums, then cast to DOUBLE;
+- double aggregates follow the exact-sum convention of exact.py: the
+  Spark side calls ``dsum``/``dec`` and the ORACLE string calls
+  ``sql_dsum``/``sql_dec``/``sql_double``, never a DECIMAL cast of its
+  own. Addends are cast to DECIMAL(18, scale) (scale 4 unless a site says
+  2 or 6), summed exactly, cast back to DOUBLE. The oracle half rounds as
+  Spark does, where DuckDB 1.0.0's own casts do not: its addend cast
+  scales the binary double instead of rounding Double.toString HALF_UP,
+  and its back cast goes through a double once |sum| * 10^scale > 2^53;
 - every computed column is aliased identically in Spark and SQL;
 - ordered operators order by natural keys (never file order).
 """
@@ -13,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import DT, N, load_tables
+from .exact import dec, dsum, sql_dec, sql_double, sql_dsum
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -27,13 +34,10 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def dsum(c, alias):
-    """Order-independent exact sum of a double column → double."""
-    return F.sum(F.col(c).cast("decimal(18,4)")).cast("double").alias(alias)
-
-
-def dsum_expr(e, alias):
-    return F.sum(e.cast("decimal(18,4)")).cast("double").alias(alias)
+# oracle addend casts that several ORACLE strings below share
+_QTY = sql_dec("l_quantity")
+_XPRICE = sql_dec("l_extendedprice")
+_OPRICE2 = sql_dec("o_totalprice", 2)
 
 
 # --------------------------------------------------------------------------
@@ -42,12 +46,12 @@ def dsum_expr(e, alias):
 
 @query(
     "gforce_q1",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_qty,
+           {sql_dsum("l_quantity")} AS sum_qty,
+           {sql_dsum("l_extendedprice")} AS sum_base_price,
+           {sql_dsum("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+           CAST({sql_dsum("l_quantity")} / COUNT(*) AS DOUBLE) AS avg_qty,
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -64,15 +68,12 @@ def q_gforce_q1(spark, sf_dir):
     out = li.query(
         i=F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"),
         j={
-            "sum_qty": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"),
-            "sum_base_price": F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double"),
-            "sum_disc_price": F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-            ).cast("double"),
-            "avg_qty": (
-                F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-            ).cast("double"),
+            "sum_qty": dsum("l_quantity"),
+            "sum_base_price": dsum("l_extendedprice"),
+            "sum_disc_price": dsum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ),
+            "avg_qty": (dsum("l_quantity") / F.count(F.lit(1))).cast("double"),
             "count_order": F.count(F.lit(1)),
         },
         by=["l_returnflag", "l_linestatus"],
@@ -435,10 +436,10 @@ def q_merge_full(spark, sf_dir):
 
 @query(
     "eachi_join_agg",
-    """
+    f"""
     SELECT y.o_orderkey,
            COUNT(*) AS n_items,
-           CAST(SUM(CAST(x.l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS total_qty
+           {sql_dsum("x.l_quantity")} AS total_qty
     FROM (SELECT * FROM orders WHERE o_totalprice > 250000) y
     JOIN lineitem x ON x.l_orderkey = y.o_orderkey
     GROUP BY y.o_orderkey
@@ -455,7 +456,7 @@ def q_eachi(spark, sf_dir):
         t["lineitem"], y, on={"l_orderkey": "o_orderkey"},
         j={
             "n_items": F.count(F.lit(1)),
-            "total_qty": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"),
+            "total_qty": dsum("l_quantity"),
         },
     )
     return out.df
@@ -591,18 +592,18 @@ def q_ghead(spark, sf_dir):
 
 @query(
     "weighted_mean",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(CAST(SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-                / CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS DOUBLE) AS wmean_price
+           CAST({sql_dsum("l_extendedprice * l_quantity")}
+                / {sql_dsum("l_quantity")} AS DOUBLE) AS wmean_price
     FROM lineitem GROUP BY l_returnflag
     """,
 )
 def q_weighted_mean(spark, sf_dir):
     """weighted.mean via gsum ratio (reference R/data.table.R:3353-3363)."""
     t = load_tables(spark, sf_dir)
-    num = F.sum((F.col("l_extendedprice") * F.col("l_quantity")).cast("decimal(18,4)")).cast("double")
-    den = F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
+    num = dsum(F.col("l_extendedprice") * F.col("l_quantity"))
+    den = dsum("l_quantity")
     return t["lineitem"].query(
         j={"wmean_price": (num / den).cast("double")}, by=["l_returnflag"]
     ).df
@@ -636,16 +637,15 @@ def q_gforce_minmax(spark, sf_dir):
 
 @query(
     "gforce_var_sd",
-    """
+    f"""
     SELECT o_orderstatus,
            CAST((sxx - sx * sx / n) / (n - 1) AS DOUBLE) AS var_price,
            CAST(SQRT((sxx - sx * sx / n) / (n - 1)) AS DOUBLE) AS sd_price
     FROM (
         SELECT o_orderstatus,
                CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))
-                        * CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sxx
+               {sql_dsum("o_totalprice", 2)} AS sx,
+               {sql_double(f"SUM({_OPRICE2} * {_OPRICE2})")} AS sxx
         FROM orders GROUP BY o_orderstatus
     )
     """,
@@ -659,7 +659,7 @@ def q_gforce_var(spark, sf_dir):
     the identical double formula in both engines (NOTES_r1.md §6 recipe).
     """
     t = load_tables(spark, sf_dir)
-    d = F.col("o_totalprice").cast("decimal(18,2)")
+    d = dec("o_totalprice", 2)
     n = F.count(F.lit(1)).cast("double")
     sx = F.sum(d).cast("double")
     sxx = F.sum(d * d).cast("double")
@@ -675,10 +675,10 @@ def q_gforce_var(spark, sf_dir):
 
 @query(
     "rollup_agg",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus,
            GROUPING_ID(l_returnflag, l_linestatus) AS grp_id,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+           {sql_dsum("l_quantity")} AS sum_qty,
            COUNT(*) AS n
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
@@ -692,7 +692,7 @@ def q_rollup(spark, sf_dir):
     out = rollup(
         t["lineitem"], ["l_returnflag", "l_linestatus"],
         j={
-            "sum_qty": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"),
+            "sum_qty": dsum("l_quantity"),
             "n": F.count(F.lit(1)),
         },
         id_col="grp_id",
@@ -997,11 +997,13 @@ def q_nafill(spark, sf_dir):
 
 @query(
     "cumsum_running",
-    """
+    f"""
     SELECT event_id, user_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,4)))
-             OVER (PARTITION BY user_id ORDER BY event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS value_cumsum
+           {sql_double(
+               f"SUM({sql_dec('value')}) OVER (PARTITION BY user_id"
+               " ORDER BY event_id"
+               " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+           )} AS value_cumsum
     FROM events
     """,
 )
@@ -1010,7 +1012,7 @@ def q_cumsum(spark, sf_dir):
     from .operators.window import cumfn
 
     t = load_tables(spark, sf_dir)
-    ev = t["events"].let(__v=F.col("value").cast("decimal(18,4)"))
+    ev = t["events"].let(__v=dec("value"))
     out = cumfn(ev, "sum", ["__v"], by=["user_id"])
     return out.query(
         j={
@@ -1471,12 +1473,10 @@ def q_inrange_bucketed(spark, sf_dir):
 
 @query(
     "dcast_pivot",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(SUM(CASE WHEN l_linestatus = 'F'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS F,
-           CAST(SUM(CASE WHEN l_linestatus = 'O'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS O
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'F' THEN {_QTY} END)")} AS F,
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'O' THEN {_QTY} END)")} AS O
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -1488,7 +1488,7 @@ def q_dcast(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     out = dcast(
         t["lineitem"], ["l_returnflag"], "l_linestatus", "l_quantity",
-        fun_agg={"sum": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")},
+        fun_agg={"sum": dsum("l_quantity")},
         pivot_values=["F", "O"],
     )
     return out.df
@@ -1496,13 +1496,11 @@ def q_dcast(spark, sf_dir):
 
 @query(
     "dcast_multi_agg",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(SUM(CASE WHEN l_linestatus = 'F'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS F_s,
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'F' THEN {_QTY} END)")} AS F_s,
            COUNT(CASE WHEN l_linestatus = 'F' THEN 1 END) AS F_n,
-           CAST(SUM(CASE WHEN l_linestatus = 'O'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS O_s,
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'O' THEN {_QTY} END)")} AS O_s,
            COUNT(CASE WHEN l_linestatus = 'O' THEN 1 END) AS O_n
     FROM lineitem GROUP BY l_returnflag
     """,
@@ -1515,7 +1513,7 @@ def q_dcast_multi(spark, sf_dir):
     out = dcast(
         t["lineitem"], ["l_returnflag"], "l_linestatus", "l_quantity",
         fun_agg={
-            "s": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"),
+            "s": dsum("l_quantity"),
             "n": F.count(F.lit(1)),
         },
         pivot_values=["F", "O"],
@@ -1525,7 +1523,7 @@ def q_dcast_multi(spark, sf_dir):
 
 @query(
     "dcast_margins",
-    """
+    f"""
     WITH s AS (
       SELECT l_returnflag, CAST(year(l_shipdate) AS VARCHAR) AS l_year,
              l_linestatus, l_quantity
@@ -1537,10 +1535,8 @@ def q_dcast_multi(spark, sf_dir):
       UNION ALL
       SELECT '(all)', '(all)', l_linestatus, l_quantity FROM s)
     SELECT l_returnflag, l_year,
-           CAST(SUM(CASE WHEN l_linestatus = 'F'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS F,
-           CAST(SUM(CASE WHEN l_linestatus = 'O'
-                THEN CAST(l_quantity AS DECIMAL(18,4)) END) AS DOUBLE) AS O
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'F' THEN {_QTY} END)")} AS F,
+           {sql_double(f"SUM(CASE WHEN l_linestatus = 'O' THEN {_QTY} END)")} AS O
     FROM u GROUP BY l_returnflag, l_year
     """,
 )
@@ -1560,7 +1556,7 @@ def q_dcast_margins(spark, sf_dir):
     )
     out = dcast(
         s, ["l_returnflag", "l_year"], "l_linestatus", "l_quantity",
-        fun_agg={"s": F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")},
+        fun_agg={"s": dsum("l_quantity")},
         pivot_values=["F", "O"],
         margins=True,
     )
@@ -1569,7 +1565,7 @@ def q_dcast_margins(spark, sf_dir):
 
 @query(
     "dcast_drop_false",
-    """
+    f"""
     WITH s AS (
       SELECT l_returnflag, CAST(month(l_shipdate) AS INT) AS l_month,
              l_linestatus, l_extendedprice
@@ -1579,12 +1575,8 @@ def q_dcast_margins(spark, sf_dir):
     mo AS (SELECT DISTINCT l_month FROM s),
     agg AS (
       SELECT l_returnflag, l_month,
-             CAST(SUM(CASE WHEN l_linestatus = 'F'
-                  THEN CAST(l_extendedprice AS DECIMAL(18,4)) END)
-                  AS DOUBLE) AS F,
-             CAST(SUM(CASE WHEN l_linestatus = 'O'
-                  THEN CAST(l_extendedprice AS DECIMAL(18,4)) END)
-                  AS DOUBLE) AS O
+             {sql_double(f"SUM(CASE WHEN l_linestatus = 'F' THEN {_XPRICE} END)")} AS F,
+             {sql_double(f"SUM(CASE WHEN l_linestatus = 'O' THEN {_XPRICE} END)")} AS O
       FROM s GROUP BY l_returnflag, l_month)
     SELECT rf.l_returnflag, mo.l_month, agg.F, agg.O
     FROM rf CROSS JOIN mo
@@ -1607,7 +1599,7 @@ def q_dcast_drop_false(spark, sf_dir):
     )
     out = dcast(
         s, ["l_returnflag", "l_month"], "l_linestatus", "l_extendedprice",
-        fun_agg={"s": F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")},
+        fun_agg={"s": dsum("l_extendedprice")},
         pivot_values=["F", "O"],
         drop=(False, True),
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
+from .exact import dec, dsum, sql_dec, sql_double, sql_dsum
 from .queries import query
 
 
@@ -46,10 +47,11 @@ def q_mutation_let(spark, sf_dir):
 
 @query(
     "let_by_group",
-    """
+    f"""
     SELECT l_orderkey, l_linenumber, l_quantity,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)))
-                  OVER (PARTITION BY l_orderkey) AS DOUBLE) AS grp_qty,
+           {sql_double(
+               f"SUM({sql_dec('l_quantity')}) OVER (PARTITION BY l_orderkey)"
+           )} AS grp_qty,
            COUNT(*) OVER (PARTITION BY l_orderkey) AS n_items,
            CAST(MAX(l_extendedprice)
                   OVER (PARTITION BY l_orderkey) AS DOUBLE) AS max_price
@@ -64,7 +66,7 @@ def q_let_by_group(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     out = t["lineitem"].let_by(
         "l_orderkey",
-        grp_qty=F.sum(F.col("l_quantity").cast("decimal(18,4)")),
+        grp_qty=F.sum(dec("l_quantity")),
         n_items=F.count(F.lit(1)),
         max_price=F.max("l_extendedprice"),
     ).let(
@@ -79,20 +81,20 @@ def q_let_by_group(spark, sf_dir):
 
 @query(
     "froll_adaptive_sum",
-    """
+    f"""
     WITH b AS (
       SELECT event_id, user_id, value,
              1 + CAST(event_id % 5 AS INT) AS nn,
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id)
                AS pos,
-             SUM(CAST(value AS DECIMAL(18,4))) OVER (
+             SUM({sql_dec("value")}) OVER (
                PARTITION BY user_id ORDER BY event_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
       FROM events
     )
     SELECT a.event_id, a.user_id,
            CASE WHEN a.pos >= a.nn
-                THEN CAST(a.cs - COALESCE(p.cs, 0) AS DOUBLE) END
+                THEN {sql_double("a.cs - COALESCE(p.cs, 0)")} END
              AS roll_sum
     FROM b a LEFT JOIN b p
       ON a.user_id = p.user_id AND a.pos - a.nn = p.pos
@@ -215,12 +217,17 @@ def q_froll_adaptive_median(spark, sf_dir):
     return out.df.select("event_id", "user_id", "roll_med")
 
 
+# exact window sums of the froll_adaptive_var oracle, cast back as Spark does
+_S1 = sql_double("SUM(b2.d)")
+_S2 = sql_double("SUM(b2.d * b2.d)")
+
+
 @query(
     "froll_adaptive_var",
-    """
+    f"""
     WITH b AS (
       SELECT event_id, user_id,
-             CAST(value AS DECIMAL(18,4)) AS d,
+             {sql_dec("value")} AS d,
              1 + CAST(event_id % 6 AS INT) AS nn,
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id)
                AS pos
@@ -228,16 +235,16 @@ def q_froll_adaptive_median(spark, sf_dir):
     )
     SELECT a.event_id, a.user_id,
       CASE WHEN LEAST(a.nn, a.pos) >= 2 THEN (
-        SELECT GREATEST((CAST(SUM(b2.d * b2.d) AS DOUBLE)
-                 - CAST(SUM(b2.d) AS DOUBLE) * CAST(SUM(b2.d) AS DOUBLE)
+        SELECT GREATEST(({_S2}
+                 - {_S1} * {_S1}
                    / COUNT(*)) / (COUNT(*) - 1), 0.0)
         FROM b b2
         WHERE b2.user_id = a.user_id
           AND b2.pos BETWEEN a.pos - LEAST(a.nn, a.pos) + 1 AND a.pos)
       END AS roll_var,
       CASE WHEN LEAST(a.nn, a.pos) >= 2 THEN (
-        SELECT SQRT(GREATEST((CAST(SUM(b2.d * b2.d) AS DOUBLE)
-                 - CAST(SUM(b2.d) AS DOUBLE) * CAST(SUM(b2.d) AS DOUBLE)
+        SELECT SQRT(GREATEST(({_S2}
+                 - {_S1} * {_S1}
                    / COUNT(*)) / (COUNT(*) - 1), 0.0))
         FROM b b2
         WHERE b2.user_id = a.user_id
@@ -527,10 +534,9 @@ def q_time_parts(spark, sf_dir):
 
 @query(
     "salted_skew_agg",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-             AS sum_qty,
+           {sql_dsum("l_quantity")} AS sum_qty,
            COUNT(*) AS n
     FROM lineitem GROUP BY l_returnflag
     """,
@@ -545,9 +551,7 @@ def q_salted_agg(spark, sf_dir):
     out = salted_agg(
         t["lineitem"],
         by=["l_returnflag"],
-        sums={
-            "sum_qty": F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-        },
+        sums={"sum_qty": F.sum(dec("l_quantity"))},
         count_name="n",
     )
     return out.df.withColumn("sum_qty", F.col("sum_qty").cast("double"))
@@ -555,14 +559,11 @@ def q_salted_agg(spark, sf_dir):
 
 @query(
     "sdcols_agg",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*) AS l_quantity,
-           CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*) AS l_discount,
-           CAST(SUM(CAST(l_tax AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*) AS l_tax
+           {sql_dsum("l_quantity")} / COUNT(*) AS l_quantity,
+           {sql_dsum("l_discount")} / COUNT(*) AS l_discount,
+           {sql_dsum("l_tax")} / COUNT(*) AS l_tax
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -575,15 +576,14 @@ def q_sdcols(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     sdcols = ["l_quantity", "l_discount", "l_tax"]
     return t["lineitem"].query(
-        j={c: F.sum(F.col(c).cast("decimal(18,4)")).cast("double")
-           / F.count(F.lit(1)) for c in sdcols},
+        j={c: dsum(c) / F.count(F.lit(1)) for c in sdcols},
         by=["l_returnflag"],
     ).df
 
 
 @query(
     "composite_pipeline",
-    """
+    f"""
     WITH filtered AS (
       SELECT l_orderkey, l_quantity, l_extendedprice, l_shipdate
       FROM lineitem WHERE l_quantity > 5
@@ -602,12 +602,14 @@ def q_sdcols(spark, sf_dir):
     ),
     top3 AS (SELECT * FROM ranked WHERE rk <= 3)
     SELECT o_custkey,
-      CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
-           THEN CAST(l_quantity AS DECIMAL(18,4)) ELSE 0 END) AS DOUBLE)
-        AS qty_urgent,
-      CAST(SUM(CASE WHEN o_orderpriority <> '1-URGENT'
-           THEN CAST(l_quantity AS DECIMAL(18,4)) ELSE 0 END) AS DOUBLE)
-        AS qty_other,
+      {sql_double(
+          f"SUM(CASE WHEN o_orderpriority = '1-URGENT'"
+          f" THEN {sql_dec('l_quantity')} ELSE 0 END)"
+      )} AS qty_urgent,
+      {sql_double(
+          f"SUM(CASE WHEN o_orderpriority <> '1-URGENT'"
+          f" THEN {sql_dec('l_quantity')} ELSE 0 END)"
+      )} AS qty_other,
       COUNT(*) AS n
     FROM top3 GROUP BY o_custkey
     """,
@@ -639,13 +641,13 @@ def q_composite(spark, sf_dir):
         .filter(F.col("rk") <= 3)
     )
     urgent = F.col("o_orderpriority") == "1-URGENT"
-    dq = F.col("l_quantity").cast("decimal(18,4)")
+    dq = dec("l_quantity")
     return (
         top3.groupBy("o_custkey")
         .agg(
-            F.sum(F.when(urgent, dq).otherwise(F.lit(0).cast("decimal(18,4)")))
+            F.sum(F.when(urgent, dq).otherwise(dec(F.lit(0))))
             .cast("double").alias("qty_urgent"),
-            F.sum(F.when(~urgent, dq).otherwise(F.lit(0).cast("decimal(18,4)")))
+            F.sum(F.when(~urgent, dq).otherwise(dec(F.lit(0))))
             .cast("double").alias("qty_other"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -717,10 +719,9 @@ def q_quantiles(spark, sf_dir):
 
 @query(
     "cogroup_udtf",
-    """
+    f"""
     WITH o AS (SELECT o_custkey, COUNT(*) AS n_orders,
-                      CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-                           AS DOUBLE) AS total_spend
+                      {sql_dsum("o_totalprice")} AS total_spend
                FROM orders GROUP BY o_custkey)
     SELECT c.c_custkey AS custkey, c.c_mktsegment AS segment,
            COALESCE(o.n_orders, 0) AS n_orders,
@@ -733,7 +734,8 @@ def q_cogroup(spark, sf_dir):
     the customer row AND all their orders and emits a custom summary
     row — arbitrary two-table per-key logic (the oracle is the
     equivalent relational join+agg). Decimal-exact spend via Python
-    Decimal sum (exact, hence order-independent).
+    Decimal sum (exact, hence order-independent), each addend rounded
+    as exact.dec rounds it: HALF_UP on the shortest repr.
 
     Runs on the Arrow twin (`cogroup().applyInArrow`): the measured
     decomposition showed the applyInPandas cogroup machinery alone
@@ -743,7 +745,7 @@ def q_cogroup(spark, sf_dir):
     3.8s — the guide-§4 boundary cost, not the fn. The pandas cogroup
     surface stays exercised by `cogroup_apply` (unit tests) and the
     pandas dogroups path by `dogroups_udtf`."""
-    from decimal import Decimal
+    from decimal import ROUND_HALF_UP, Decimal
 
     import pyarrow as pa
 
@@ -769,7 +771,7 @@ def q_cogroup(spark, sf_dir):
             return empty
         spend = sum(
             (
-                Decimal(str(round(v, 4)))
+                Decimal(repr(v)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
                 for v in ot.column("o_totalprice").to_pylist()
             ),
             Decimal(0),
@@ -795,11 +797,10 @@ def q_cogroup(spark, sf_dir):
 
 @query(
     "setindex_bucketed",
-    """
+    f"""
     SELECT c_mktsegment,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-             AS total_price
+           {sql_dsum("o_totalprice")} AS total_price
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
@@ -818,29 +819,12 @@ def q_setindex_bucketed(spark, sf_dir):
     gate sessions (pytest + check_correctness, or two SFs) never race
     on shared catalog entries or part files."""
     import os
-    import re as _re
-    import shutil
-    import time as _time
 
+    from .core import session_scratch_dir
     from .sources import setindex_physical
 
-    tag = _re.sub(r"[^0-9a-zA-Z]", "_", spark.sparkContext.applicationId)
-    # tree-root-relative (not a hardcoded absolute path): a copied
-    # checkout writes under ITS OWN .tmp, never another tree's
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bucketed = os.path.join(root, ".tmp", "bucketed")
-    base = os.path.join(bucketed, tag)
-    os.makedirs(base, exist_ok=True)
-    # bound disk growth: sweep sibling tags from sessions that ended
-    # hours ago (live concurrent sessions keep fresh mtimes; best-effort)
-    try:
-        cutoff = _time.time() - 6 * 3600
-        for d in os.listdir(bucketed):
-            p = os.path.join(bucketed, d)
-            if d != tag and os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass
+    base = session_scratch_dir(spark, "bucketed")
+    tag = os.path.basename(base)
     t = load_tables(spark, sf_dir)
     orders = t["orders"].query(j=["o_orderkey", "o_custkey", "o_totalprice"])
     cust = t["customer"].query(j=["c_custkey", "c_mktsegment"])
@@ -857,9 +841,7 @@ def q_setindex_bucketed(spark, sf_dir):
     )
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_price"),
+        dsum("o_totalprice").alias("total_price"),
     )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
+from .exact import sql_dsum
 from .queries import query
 from .pipeline import (
     dedup_exact,
@@ -789,7 +790,7 @@ def q_winnow_dup_pairs(spark, sf_dir):
     return winnow_dup_pairs(t["documents"].df, k=12, w=8, min_shared=5)
 
 
-_SQL_CENTROIDS = """
+_SQL_CENTROIDS = f"""
     WITH idx AS (
       SELECT label, embedding,
              unnest(range(1, 65)) AS dim
@@ -800,8 +801,7 @@ _SQL_CENTROIDS = """
                  CAST(embedding[dim] AS DOUBLE) AS v
           FROM idx)
     SELECT label, dim,
-           CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-             AS centroid
+           {sql_dsum("v", 6)} / COUNT(*) AS centroid
     FROM e GROUP BY 1, 2
 """
 
@@ -2046,7 +2046,7 @@ def q_udtf_chunk_lateral(spark, sf_dir):
 # rests on the measured best-vs-second-best distance margin (8.2e-4 at
 # sf0.01, 2.7e-5 at sf0.1 — 7+ orders above the ~1e-12 double drift;
 # probed in tests/test_api_unit.py::test_kmeans_margin).
-_SQL_KMEANS_A2 = """
+_SQL_KMEANS_A2 = f"""
   e AS (
     SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     WHERE embedding IS NOT NULL AND len(embedding) = 64
@@ -2077,8 +2077,7 @@ _SQL_KMEANS_A2 = """
     SELECT cluster_id, list(cm ORDER BY pos) AS cent
     FROM (
       SELECT cluster_id, pos,
-             CAST(SUM(CAST(comp AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-               AS cm
+             {sql_dsum("comp", 6)} / COUNT(*) AS cm
       FROM x1 GROUP BY cluster_id, pos
     ) GROUP BY cluster_id
   ),

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .core import DT, load_tables
+from .exact import dsum, sql_dsum
 from .queries import query
 
 
@@ -285,7 +286,7 @@ def q_frollapply(spark, sf_dir):
 
 @query(
     "frollapply_corr",
-    """
+    f"""
     WITH w AS (
       SELECT l_suppkey, l_orderkey, l_linenumber,
              ROUND(corr(l_extendedprice, l_quantity) OVER roll, 4) AS c,
@@ -301,7 +302,7 @@ def q_frollapply(spark, sf_dir):
     )
     SELECT l_suppkey,
            CAST(COUNT(*) AS BIGINT) AS n_win,
-           CAST(SUM(CAST(c AS DECIMAL(18,4))) AS DOUBLE) AS sum_corr
+           {sql_dsum("c")} AS sum_corr
     FROM w WHERE wn >= 5 AND qlo < qhi
     GROUP BY l_suppkey
     """,
@@ -340,8 +341,7 @@ def q_frollapply_corr(spark, sf_dir):
         guarded.groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_win"),
-            F.sum(F.round("c", 4).cast("decimal(18,4)"))
-            .cast("double").alias("sum_corr"),
+            dsum(F.round("c", 4)).alias("sum_corr"),
         )
     )
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
+from .exact import sql_dsum
 from .queries import query
 from .streaming import (
     enrich_with_static,
@@ -35,7 +36,7 @@ _US_5MIN = 300_000_000
     f"""
     SELECT (epoch_us(ts) // {_US_HOUR}) * {_US_HOUR} AS win_start_us,
            event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+           {sql_dsum("value")} AS sum_value
     FROM events GROUP BY 1, 2
     """,
 )

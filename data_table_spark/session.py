@@ -37,13 +37,12 @@ _DEFAULTS = {
     # small-dim broadcast threshold: region/nation/customer/supplier/part
     # are broadcastable at any realistic SF; lineitem/orders never are.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # events.ts is parquet TIMESTAMP(NANOS). On Spark 3.x this conf reads
-    # it losslessly as int64 nanos; Spark 4 REMOVED the conf (the set is
-    # silently accepted, the column arrives TIMESTAMP_NTZ µs-floored).
-    # core.derive_event_time handles both physical readings.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # bucketed saveAsTable output (setkey-durable tables) lands in-repo
-    "spark.sql.warehouse.dir": "/root/repo/.tmp/warehouse",
+    # bucketed saveAsTable output (setkey-durable tables) lands in this
+    # tree's .tmp, like core.session_scratch_dir
+    "spark.sql.warehouse.dir": os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".tmp", "warehouse",
+    ),
 }
 
 

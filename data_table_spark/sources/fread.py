@@ -147,6 +147,21 @@ def _looks_numeric(tok: str) -> bool:
         return False
 
 
+def _tmp_dir(kind: str) -> str:
+    """fread's driver-side scratch directory ``<root>/<kind>``, created
+    on demand. Root: $DATA_TABLE_SPARK_TMPDIR, else the system tempfile
+    dir."""
+    import os
+    import tempfile
+
+    d = os.path.join(
+        os.environ.get("DATA_TABLE_SPARK_TMPDIR", tempfile.gettempdir()),
+        kind,
+    )
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
 def _unzip_to_tmp(path: str) -> str:
     """Driver-side unpack of a .zip archive (reference R/fread.R:1-35
     reopens compressed input through a decompressing connection; zip
@@ -168,8 +183,7 @@ def _unzip_to_tmp(path: str) -> str:
         tag = hashlib.md5(
             (path + str(os.path.getmtime(path))).encode()
         ).hexdigest()
-        out_dir = f"/root/repo/.tmp/fread_zip/{tag}"
-        os.makedirs(out_dir, exist_ok=True)
+        out_dir = _tmp_dir(os.path.join("fread_zip", tag))
         out = os.path.join(out_dir, os.path.basename(members[0]))
         if not os.path.exists(out):
             with zf.open(members[0]) as src, open(out, "wb") as dst:
@@ -296,10 +310,9 @@ def fread(
         import hashlib as _hl
         import os as _os
 
-        _os.makedirs("/root/repo/.tmp/fread_text", exist_ok=True)
-        path = "/root/repo/.tmp/fread_text/" + _hl.md5(
-            text.encode()
-        ).hexdigest() + ".csv"
+        path = _os.path.join(
+            _tmp_dir("fread_text"), _hl.md5(text.encode()).hexdigest() + ".csv"
+        )
         with open(path, "w", encoding=encoding) as fh:
             fh.write(text)
     if path is None:
@@ -444,10 +457,9 @@ def fread(
         # UTF-8 temp file driver-side — a single-local-file
         # compatibility path, like the reference's connection-based
         # re-encoding. Land UTF-8 shards for distributed reads at
-        # scale. Temp dir: $DATA_TABLE_SPARK_TMPDIR, else the system
-        # tempfile dir; the transcode STREAMS in 1 MiB text chunks
-        # (text-mode read handles multibyte boundaries) so the file
-        # never has to fit in driver memory.
+        # scale. Temp dir: _tmp_dir("fread_enc"); the transcode STREAMS
+        # in 1 MiB text chunks (text-mode read handles multibyte
+        # boundaries) so the file never has to fit in driver memory.
         import hashlib as _hl
         import os as _os
         import tempfile as _tf
@@ -457,11 +469,7 @@ def fread(
                 f"fread: encoding={encoding!r} is outside Spark's csv"
                 " charset set and transcoding needs a single local file"
             )
-        _tmp = _os.path.join(
-            _os.environ.get("DATA_TABLE_SPARK_TMPDIR", _tf.gettempdir()),
-            "fread_enc",
-        )
-        _os.makedirs(_tmp, exist_ok=True)
+        _tmp = _tmp_dir("fread_enc")
         out_path = _os.path.join(
             _tmp,
             _hl.md5((path + encoding).encode()).hexdigest() + ".csv",

@@ -34,19 +34,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..exact import dsum
+
 _RUN_COUNTER = itertools.count()
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """File streams require a declared schema; the physical type of the
-    TIMESTAMP(NANOS) ts column depends on the Spark version (int64 nanos
-    under 3.x nanosAsLong, TIMESTAMP_NTZ on 4.x). Probe the parquet
-    footer with a batch read — cheap, no data scan — and declare exactly
-    what this Spark will produce, so the stream and batch readers agree
-    to the microsecond."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    """File streams require a declared schema. Probe the parquet footer
+    with a batch read — cheap, no data scan — and declare exactly what
+    the batch reader produces (TIMESTAMP(NANOS) ts arrives as
+    TIMESTAMP_NTZ), so the stream and batch readers agree to the
+    microsecond."""
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
@@ -388,9 +385,7 @@ def tumbling_agg(
         .groupBy(F.window("ts", size), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_value"),
+            dsum("value").alias("sum_value"),
         )
         .select(
             F.unix_micros(F.col("window.start")).alias("win_start_us"),

@@ -10,11 +10,12 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_table_spark.core import DT
+from data_table_spark.exact import dec, dsum, sql_dec, sql_dsum
 from data_table_spark.operators.window import frank, rleid, shift
 from data_table_spark.operators.setops import fintersect, fsetdiff, funion
 
@@ -776,13 +777,15 @@ def test_retention_cohorts_matches_python_oracle(spark, events):
 
 # ---------------------------------------------------------------------------
 # The oracle methodology itself (VERDICT r5 item 8): every double-sum
-# comparison in the registry rides on the DECIMAL(18,4) convention --
-# "cast both engines' addends to DECIMAL(18,4), sum exactly, cast back".
-# This test attacks the convention directly with adversarial doubles
-# (half-ulp rounding boundaries, large magnitudes, sign cancellation)
-# and asserts the two engines agree UNDER THE CHECKER'S OWN cell
-# normalization, so an engine divergence in cast-rounding or overflow
-# behavior fails here before it can corrupt a query comparison.
+# comparison in the registry rides on the exact-sum convention of
+# data_table_spark/exact.py -- "cast both engines' addends to
+# DECIMAL(18,4), sum exactly, cast back", through its Spark half (dsum)
+# and its oracle half (sql_dsum). This test attacks the convention
+# directly with adversarial doubles (half-ulp rounding boundaries, large
+# magnitudes, sign cancellation) and asserts the two engines agree UNDER
+# THE CHECKER'S OWN cell normalization, so an engine divergence in
+# cast-rounding or overflow behavior fails here before it can corrupt a
+# query comparison.
 # ---------------------------------------------------------------------------
 
 
@@ -824,64 +827,67 @@ def _checker_sig(pdf):
         max_size=25,
     )
 )
+# the back cast: 900719925475.0001 * 10^4 is past 2^53, and DuckDB's own
+# cast returns the integral 900719925475.0
+@example(rows=[(0, 900719925475.0), (0, 6.103515625e-05)])
+# the addend cast: DuckDB scales the binary double, Spark rounds
+# Double.toString HALF_UP (...313.9968 vs ...314.0, which the
+# cancellation exposes; .5162 vs .5163)
+@example(rows=[(0, 43123705059314.0), (0, -43123705059313.0)])
+@example(rows=[(0, 1314.51625)])
+# exponent strings: a plain VARCHAR round trip parses '9e-06' as 0.0001
+@example(rows=[(0, 9e-06)])
+@example(rows=[(0, -7e-06)])
 def test_decimal_sum_convention_matches_duckdb(spark, rows):
     pdf = pd.DataFrame(rows, columns=["g", "x"])
     sdf = spark.createDataFrame(pdf)
-    got = (
-        sdf.groupBy("g")
-        .agg(
-            F.sum(F.col("x").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("s")
-        )
-        .toPandas()
-    )
+    got = sdf.groupBy("g").agg(dsum("x").alias("s")).toPandas()
     con = duckdb.connect()
     con.register("t", pdf)
     exp = con.execute(
-        "SELECT g, CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) AS s"
-        " FROM t GROUP BY g"
+        f"SELECT g, {sql_dsum('x')} AS s FROM t GROUP BY g"
     ).fetchdf()
     assert _checker_sig(got) == _checker_sig(exp)
 
 
 def test_decimal_sum_overflow_margin(spark):
-    """Pin the MEASURED overflow geometry of the DECIMAL(18,4) oracle
-    convention (VERDICT r5 worried sf100 sums approached the 10^14
-    cap): (a) the cap binds PER ADDEND, not per sum -- both engines
-    widen the accumulator (Spark decimal(28,4), DuckDB DECIMAL(38,4)),
-    so a 1.98e14 SUM of in-range addends is exact and equal in both;
-    (b) a single addend past 10^14 is LOUD in both engines (Spark 4
+    """Pin the MEASURED overflow geometry of the exact-sum convention
+    (VERDICT r5 worried sf100 sums approached the 10^14 cap):
+    (a) the cap binds PER ADDEND, not per sum -- both engines widen the
+    accumulator (Spark decimal(28,4), DuckDB DECIMAL(38,4)), so a
+    1.98e14 SUM of in-range addends is exact and equal in both;
+    (b) a sum past 9.007e11 keeps its fractional part in both: there
+    sum * 10^4 exceeds 2^53, where DuckDB's own back cast rounds
+    1000000000000.0001 to an integer and the checker sees a mismatch;
+    (c) a single addend past 10^14 is LOUD in both engines (Spark 4
     defaults ANSI on -> ArithmeticException; DuckDB ConversionException)
     -- never a silent NULL that could hash-mismatch. If either behavior
     shifts with a version bump (e.g. ansi.enabled flipped off), this
     test fails and the checker's margin logic must be revisited."""
-    big = 9.9e13
-    pdf = pd.DataFrame({"g": [0, 0], "x": [big, big]})
+    pdf = pd.DataFrame({
+        "g": [0, 0, 1, 1],
+        "x": [9.9e13, 9.9e13, 999999999999.5, 0.5001],
+    })
     got = (
-        spark.createDataFrame(pdf)
-        .groupBy("g")
-        .agg(F.sum(F.col("x").cast("decimal(18,4)")).cast("double").alias("s"))
-        .collect()
+        spark.createDataFrame(pdf).groupBy("g").agg(dsum("x").alias("s"))
+        .toPandas().sort_values("g", ignore_index=True)
     )
-    assert got[0]["s"] == pytest.approx(1.98e14)  # widened accumulator
+    assert got["s"].tolist() == [1.98e14, 1000000000000.0001]
     con = duckdb.connect()
     con.register("t", pdf)
     exp = con.execute(
-        "SELECT g, CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) AS s"
-        " FROM t GROUP BY g"
+        f"SELECT g, {sql_dsum('x')} AS s FROM t GROUP BY g"
     ).fetchdf()
-    assert exp["s"][0] == pytest.approx(1.98e14)
+    assert _checker_sig(got) == _checker_sig(exp)
 
     from pyspark.errors.exceptions.captured import ArithmeticException
 
     over = pd.DataFrame({"x": [2.0e14]})
     with pytest.raises(ArithmeticException):
-        spark.createDataFrame(over).select(
-            F.col("x").cast("decimal(18,4)").alias("c")
-        ).collect()
+        spark.createDataFrame(over).select(dec("x").alias("c")).collect()
+    con.register("over", over)
     with pytest.raises(duckdb.ConversionException):
-        con.execute("SELECT CAST(2.0e14 AS DECIMAL(18,4))").fetchall()
+        con.execute(f"SELECT {sql_dec('x')} FROM over").fetchall()
 
 
 @SET

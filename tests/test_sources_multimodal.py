@@ -131,8 +131,9 @@ def test_bucketed_join_is_shuffle_free(spark, tables):
     spark.sql("DROP TABLE IF EXISTS bk_lineitem")
     # a fresh session's in-memory catalog can't overwrite a leftover
     # managed-table location from a previous run — clear it
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for t in ("bk_orders", "bk_lineitem"):
-        shutil.rmtree(f"/root/repo/.tmp/warehouse/{t}", ignore_errors=True)
+        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
     fwrite_parquet(
         tables["orders"].df.select("o_orderkey", "o_totalprice"),
         path="", bucket_by="o_orderkey", n_buckets=8, table="bk_orders",

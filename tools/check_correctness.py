@@ -41,10 +41,20 @@ def norm_cell(v):
 def decimal_margin(pdf, cap=1e13):
     """Return a description of any FLOAT output cell within 10x of the
     DECIMAL(18,4) magnitude cap (10^14), else None. Only float columns:
-    the decimal-cast convention rides on double aggregates cast back to
-    double; integer columns are ids / epoch timestamps / counts that
-    never pass through the decimal cast (epoch-µs values sit at ~1e15
-    by nature and would be pure noise here)."""
+    the exact-sum convention (data_table_spark/exact.py) rides on double
+    aggregates cast back to double; integer columns are ids / epoch
+    timestamps / counts that never pass through the decimal cast
+    (epoch-µs values sit at ~1e15 by nature and would be pure noise
+    here).
+
+    Headroom: the oracle half reproduces Spark's two casts where DuckDB
+    1.0.0's own differ (its addend cast scales the binary double instead
+    of rounding Double.toString HALF_UP; its back cast goes through a
+    double, inexact past |sum| * 10^4 > 2^53 = 9.007e11), so sums agree
+    at any magnitude the accumulators hold (10^24 in Spark's
+    decimal(28,4)). The one limit is the per-ADDEND cap |x| < 10^14, at
+    which both engines raise; a sum in [10^13, 10^14) is the warning
+    that addends may reach it at a larger SF."""
     worst = None
     for c in pdf.columns:
         col = pdf[c]
