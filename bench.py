@@ -9,8 +9,8 @@ JSON line::
 
 Each query is measured REPS (3) times and the per-query MEDIAN is
 reported: one-shot numbers on this box carry +/-50% ambient noise
-(NOTES_r2 §10 / NOTES_r4 measured a 20% total delta on byte-identical
-code), and a median-of-3 in one session is the cheapest robust
+(a 20% total delta was measured on byte-identical code; see
+OPTIMIZATION_r15.md §Round-close for whole-run stalls), and a median-of-3 in one session is the cheapest robust
 estimator. Reps run back-to-back per query (plan compile amortizes into
 rep 1; the median discards it when warm reps are faster, which is the
 steady-state number a user sees), with persisted RDDs released after

@@ -7,8 +7,9 @@ DOUBLE. ``scale`` is 4 unless a site needs 2 or 6.
 Spark half: ``dec`` is the addend cast, ``dsum`` the whole rule.
 
 Oracle half: ``sql_dec`` is the addend cast, ``sql_double`` the back
-cast, ``sql_dsum`` the whole rule. They reproduce Spark's casts, which
-DuckDB 1.0.0's own casts do not:
+cast, ``sql_dsum`` the whole rule, and ``sql_round`` is Spark's
+``F.round`` of a double. They reproduce Spark's casts, which DuckDB
+1.0.0's own casts (and its ROUND) do not:
 
 - Spark's addend cast rounds HALF_UP on ``Double.toString(x)``, the
   shortest decimal that reads back as x. DuckDB scales the binary double
@@ -70,3 +71,12 @@ def sql_double(expr: str) -> str:
 def sql_dsum(expr: str, scale: int = 4) -> str:
     """Oracle exact sum of a DuckDB double expression -> DOUBLE."""
     return sql_double(f"SUM({sql_dec(expr, scale)})")
+
+
+def sql_round(expr: str, n: int) -> str:
+    """Oracle ROUND of a DuckDB double expression to ``n`` places, as
+    Spark's ``F.round`` does it: HALF_UP on ``Double.toString``, the
+    shortest decimal string. DuckDB's ROUND scales the binary double,
+    so ``ROUND(1314.51625, 4)`` is ``.5162`` there and ``.5163`` in
+    Spark. Same cap as ``sql_dec``: |x| < 10^(18 - n)."""
+    return sql_double(sql_dec(expr, n))

@@ -165,7 +165,7 @@ def ngram_jaccard_pairs(
     # same blocks. A repartition("doc_id") anchor is a silent no-op
     # here — the distinct's output is already hash(doc_id)-partitioned,
     # so the optimizer removes it and the duplication returns; the
-    # checkpoint vs anchor A/B read 0.88x (OPTIMIZATION_r14.md).
+    # checkpoint vs anchor A/B read 0.88x.
     sr = shingle_rows(docs, n).localCheckpoint(eager=False)
     # count("s") not count(1): s (concat_ws output) is never null so the
     # counts are identical, but consuming s keeps the size branch's
@@ -783,8 +783,8 @@ def jaccard_prefix_pairs(
     # consumer branches (df ranking, the ranked join probe, both
     # verification sides, and the prefix self-join) via a lazy
     # localCheckpoint — the checkpoint-vs-recompute A/B read 0.74x
-    # (OPTIMIZATION_r14.md; a repartition("doc_id") anchor is a silent
-    # no-op on the already-doc_id-partitioned distinct). The
+    # (a repartition("doc_id") anchor is a silent no-op on the
+    # already-doc_id-partitioned distinct). The
     # doc_id-notnull filter is output-invariant (pairs require
     # doc_a < doc_b) and count("doc_id") == count(1) under it.
     sr = shingle_rows(
@@ -1301,7 +1301,7 @@ def line_dedup(
     # posexplode over every document) from scratch. The checkpoint
     # measured 0.82x vs recompute and a further 0.92x vs the
     # exchange-anchor form, while needing none of the anchor's
-    # canonicalization scaffolding (OPTIMIZATION_r14.md).
+    # canonicalization scaffolding.
     h = F.md5(F.col(line_col)).alias("line_h")
     keyed = lines.select(
         F.col(doc_col).alias("doc_id"),

@@ -28,8 +28,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..exact import dsum
+
 N_TABLES = 4   # independent LSH hash tables (union of candidates)
 N_PLANES = 6   # sign bits per table => 2^6 buckets per table
+# Lloyd's rounds of the index trainers: enough to keep each recall
+# contract more than 0.1 above its bound at every generated SF (the PQ
+# curve is in pq_encode's docstring)
+_IVF_ITERS = 2
+_PQ_ITERS = 11
 
 
 def _as_double(vec: Column) -> Column:
@@ -160,8 +167,7 @@ def blocked_cosine_pairs(
     # (r14 note: anchoring the corpus prep below a vec_id exchange so
     # both grid replicas share one materialization was measured 10x
     # SLOWER at sf0.1 — the duplicated prep is a cheap narrow pass,
-    # and the anchor degraded the block join's execution — reverted;
-    # see OPTIMIZATION_r14.md)
+    # and the anchor degraded the block join's execution — reverted)
     c = _corpus(emb)
     blk = F.pmod(F.hash(F.col("vec_id")), F.lit(n_blocks))
     grid = F.array(*[F.lit(k) for k in range(n_blocks)])
@@ -295,17 +301,6 @@ def _hyperplanes(
     ]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit sketch for one table: bit p set iff dot(vec, plane_p) > 0."""
-    out = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        out = out + F.when(
-            dot(vec, lit_plane) > 0, F.lit(1 << p).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def lsh_buckets_all(tables: list[list[list[float]]]):
     """Arrow-batched bucket computation for ALL tables in one pass: a
     pandas_udf whose numpy matmul projects each Arrow batch of vectors
@@ -314,7 +309,7 @@ def lsh_buckets_all(tables: list[list[list[float]]]):
     UDF: vector column -> array<long> of length n_tables (element t =
     table t's bucket; posexplode position = table index).
 
-    This replaces per-plane `lsh_bucket` column expressions on the hot
+    This replaces per-plane `dot` sign column expressions on the hot
     path: `dot` is an aggregate(zip_with(...)) higher-order function,
     which Spark evaluates INTERPRETED — the repo's standing ~50x
     finding, re-measured at a fourth site: at sf100 (2M vectors x 128
@@ -430,6 +425,24 @@ def lsh_ann_topk(
     )
 
 
+def _index_corpus(emb: DataFrame) -> DataFrame:
+    """`_corpus` as the scan lays it out, without `spread`: the index
+    trainers run one Arrow UDF stage per Lloyd's round, and a UDF task
+    has a fixed cost that spreading a small single-file corpus over
+    shuffle.partitions tasks multiplies (measured 4x slower per round
+    at 32 tasks); a large corpus arrives in many file splits anyway."""
+    v = _as_double(F.col("embedding"))
+    return emb.select("vec_id", v.alias("v")).withColumn("nrm", norm(F.col("v")))
+
+
+def _ivf_cells(c: DataFrame, n_centroids: int) -> tuple[DataFrame, dict]:
+    """IVF coarse quantizer: `c` plus its `cell`, and the cell
+    centroids {cell: centroid}, from `_IVF_ITERS` Lloyd's rounds on all
+    of `c`. Neither depends on partition layout or session conf."""
+    asg, (centers,) = _lloyd(c, n_centroids, _IVF_ITERS, batched=True)
+    return asg.withColumn("cell", F.col("codes")[0]).drop("codes"), centers
+
+
 def ivf_ann_topk(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -437,31 +450,17 @@ def ivf_ann_topk(
     query_ids_below: int = 8,
     k: int = 5,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize the corpus with KMeans
-    (pyspark.ml, seeded), then search only the query's n_probe nearest
-    centroid cells. The classic big-corpus trade: index assignment is
-    one narrow pass; each query touches ~n_probe/n_centroids of the
-    data via a (cell-id) equi-join. Approximate => rows-only check
-    (exact baseline: cosine_topk). Centroids fit on the driver by
-    construction (n_centroids << corpus)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """IVF (inverted-file) ANN: coarse-quantize the corpus with the
+    deterministic Lloyd's of `kmeans_assign` (`_ivf_cells`), then
+    search only the query's n_probe nearest centroid cells. The classic
+    big-corpus trade: index assignment is one narrow pass; each query
+    touches ~n_probe/n_centroids of the data via a (cell-id) equi-join.
+    Approximate => rows-only check (exact baseline: cosine_topk).
+    Centroids fit on the driver by construction (n_centroids <<
+    corpus)."""
     from pyspark.sql import Window
 
-    c = _corpus(emb)
-    feat = c.withColumn("fv", array_to_vector(F.col("v")))
-    km = KMeans(k=n_centroids, seed=42, featuresCol="fv",
-                predictionCol="cell")
-    model = km.fit(feat)
-    assigned = model.transform(feat).select("vec_id", "v", "nrm", "cell")
-
-    centers = [list(map(float, ctr)) for ctr in model.clusterCenters()]
-
-    def center_dists(vec):
-        return [
-            (ci, dot(vec, F.array(*[F.lit(x) for x in ctr])))
-            for ci, ctr in enumerate(centers)
-        ]
+    assigned, centers = _ivf_cells(_index_corpus(emb), n_centroids)
 
     q = assigned.filter(F.col("vec_id") < query_ids_below).select(
         F.col("vec_id").alias("query_id"),
@@ -475,11 +474,10 @@ def ivf_ann_topk(
     cells = F.array(
         *[
             F.struct(
-                (-dot(F.col("qv"), F.array(*[F.lit(x) for x in ctr])))
-                .alias("negdot"),
+                (-dot(F.col("qv"), _lit_vec(ctr))).alias("negdot"),
                 F.lit(ci).alias("cell"),
             )
-            for ci, ctr in enumerate(centers)
+            for ci, ctr in centers.items()
         ]
     )
     probes = q.select(
@@ -586,76 +584,33 @@ def sq8_cosine_topk(
     )
 
 
-def pq_encode(
-    emb: DataFrame, m: int = 8, k_centroids: int = 16, seed: int = 42
-):
+def pq_encode(emb: DataFrame, m: int = 8, k_centroids: int = 16):
     """Product quantization (the faiss-PQ storage layout): split each
-    vector into `m` subvectors, KMeans each subspace to `k_centroids`
+    vector into `m` subvectors, k-means each subspace to `k_centroids`
     centroids, store per vector only the m centroid codes + the true
     norm — 64 float32 dims become 8 nibble-codes (32x compression at
-    k=16). Returns (encoded df: vec_id, nrm, c0..c{m-1}, v;
-    centroids[m][k][sub_dim]).
+    k=16). Returns (encoded df: vec_id, v, nrm, c0..c{m-1};
+    centroids: m dicts {code: sub-centroid}).
 
-    Scale posture: the m KMeans fits are TRAINING — at corpus scale
-    they run on a sample (faiss trains on ~100k vectors regardless of
-    corpus size); encoding itself is one narrow pass per subspace.
-    Centroid tables are tiny by construction (m*k*sub_dim floats)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # persist for the duration of the m fits: each KMeans triggers
-    # several jobs, and without the cache every one re-reads the scan +
-    # all previous assignment projections (the documented AQE-pinning
-    # cost of persist() doesn't matter inside a bounded training loop).
-    # coalesce(8): a training set of thousands of rows scheduled over
-    # hundreds of default shuffle partitions pays pure task overhead —
-    # KMeans runs many small jobs, so partition count dominates its
-    # wall time at gate SFs.
-    c = _corpus(emb).coalesce(8).persist()
-    try:
-        dim = len(c.select("v").first()["v"])
-        sub = dim // m
-
-        # r14: the m subspace fits are INDEPENDENT — each consumes only
-        # its own slice of the cached corpus (KMeans reads featuresCol
-        # alone, so fitting on `c` instead of the accumulating
-        # `assigned` feeds it the same rows, same partition layout,
-        # same seed => bit-identical centroids; verified by exact
-        # output comparison at sf0.001/0.01/0.1). Submitting them from
-        # driver threads overlaps their many tiny jobs (each fit is
-        # ~a dozen 8-task jobs — pure scheduler latency when run
-        # back-to-back), collapsing training wall time from the sum of
-        # the fits to roughly the longest one.
-        def _fit(s: int):
-            sl = F.slice(F.col("v"), s * sub + 1, sub)
-            feat = c.withColumn("fv", array_to_vector(sl))
-            km = KMeans(
-                k=k_centroids, seed=seed + s, featuresCol="fv",
-                predictionCol=f"c{s}", maxIter=10, initMode="random",
-            )
-            return km.fit(feat)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=m) as ex:
-            models = list(ex.map(_fit, range(m)))
-
-        assigned = c
-        for s, model in enumerate(models):
-            sl = F.slice(F.col("v"), s * sub + 1, sub)
-            assigned = model.transform(
-                assigned.withColumn("fv", array_to_vector(sl))
-            ).drop("fv")
-        centroids = [
-            [list(map(float, ct)) for ct in model.clusterCenters()]
-            for model in models
-        ]
-        # materialize the full code table off the cached lineage before
-        # unpersisting (16 chained transforms over the cache)
-        assigned = assigned.localCheckpoint(eager=True)
-        return assigned, centroids
-    finally:
-        c.unpersist()
+    Training is the deterministic Lloyd's of `kmeans_assign`, all m
+    subspaces in one grouped aggregate per round (`_PQ_ITERS` rounds on
+    the full corpus, `_index_corpus`), so codes and centroids do not
+    depend on partition layout or session conf (pinned by
+    tests/test_api_unit.py::test_ann_indexes_layout_invariant; 11
+    rounds measured `pq_ann_topk` recall@5 0.95 at sf0.001, sf0.01 and
+    sf0.1, where 10 read 0.90 and 7-9 read 0.875 at sf0.1). Encoding
+    is one narrow pass. Centroid tables are tiny by construction
+    (m*k*sub_dim floats); at corpus scale training would run on a
+    sample, as faiss trains on ~100k vectors regardless of corpus
+    size."""
+    asg, centroids = _lloyd(
+        _index_corpus(emb), k_centroids, _PQ_ITERS, m=m, batched=True
+    )
+    encoded = asg.select(
+        "vec_id", "v", "nrm",
+        *[F.col("codes")[s].alias(f"c{s}") for s in range(m)],
+    )
+    return encoded, centroids
 
 
 def pq_ann_topk(
@@ -694,7 +649,6 @@ def pq_ann_topk(
         rerank = 8 * k
 
     encoded, centroids = pq_encode(emb, m=m, k_centroids=k_centroids)
-    sub = len(centroids[0][0])
 
     spark = emb.sparkSession
     qdf = (
@@ -707,14 +661,13 @@ def pq_ann_topk(
         )
     )
     ctr = spark.createDataFrame(
-        [(s, ci, [float(x) for x in c])
-         for s in range(m) for ci, c in enumerate(centroids[s])],
+        [(s, ci, c) for s in range(m) for ci, c in centroids[s].items()],
         "s int, code int, ctr array<double>",
     )
     lut = qdf.crossJoin(F.broadcast(ctr)).select(
         "query_id", "qn", "s", "code",
         dot(
-            F.slice(F.col("qv"), F.col("s") * sub + 1, F.lit(sub)),
+            F.slice(F.col("qv"), F.col("s") * F.size("ctr") + 1, F.size("ctr")),
             F.col("ctr"),
         ).alias("part"),
     )
@@ -801,13 +754,13 @@ def ivfpq_ann_topk(
     rerank: int | None = None,
 ) -> DataFrame:
     """IVF-PQ composed ANN (the faiss IndexIVFPQ layout, by_residual
-    =False): coarse KMeans cells bound WHICH corpus rows each query
+    =False): coarse k-means cells bound WHICH corpus rows each query
     touches (the IVF promise: ~n_probe/n_centroids of the data), and
     PQ codes bound WHAT is read per touched row (m nibble codes + a
     norm instead of the float vector) — the composition both module
     docstrings promise for 100 TB, made concrete.
 
-    Plan: coarse-assign (one narrow KMeans transform) joins its cell id
+    Plan: coarse-assign (one narrow k-means projection) joins its cell id
     onto the PQ code table; per query the n_probe best cells come from
     the same plan-expression argsort as ivf_ann_topk and the m*k ADC
     LUT is built distributively as in pq_ann_topk; the two tiny frames
@@ -818,36 +771,19 @@ def ivfpq_ann_topk(
     most once and the per-(query, vec) SUM is the ADC dot. Exact
     re-rank refines the top `rerank` (default 8k) candidates.
     Approximate => recall-contract check against the exact baseline."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
     from pyspark.sql import Window
 
     if rerank is None:
         rerank = 8 * k
 
-    # coarse quantizer (IVF): cell per corpus vector. The coarse fit
-    # and the PQ training are independent (r14) — overlapping them in
-    # two driver threads hides the shorter behind the longer without
-    # touching either's input, seed, or partitioning (outputs
-    # bit-identical to the sequential order).
-    from concurrent.futures import ThreadPoolExecutor
-
-    c = _corpus(emb)
-    feat = c.withColumn("fv", array_to_vector(F.col("v")))
-    km = KMeans(k=n_centroids, seed=42, featuresCol="fv",
-                predictionCol="cell")
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        coarse_fut = ex.submit(km.fit, feat)
-        pq_fut = ex.submit(pq_encode, emb, m, k_centroids)
-        model = coarse_fut.result()
-        # fine quantizer (PQ): code table + cell id, no full vectors
-        encoded, centroids = pq_fut.result()
-    cells = model.transform(feat).select("vec_id", "cell")
-    centers = [list(map(float, ctr)) for ctr in model.clusterCenters()]
-    sub = len(centroids[0][0])
+    # coarse quantizer (IVF): cell per corpus vector; fine quantizer
+    # (PQ): code table + cell id, no full vectors
+    c = _index_corpus(emb)
+    cells, centers = _ivf_cells(c, n_centroids)
+    encoded, centroids = pq_encode(emb, m, k_centroids)
     coded = encoded.select(
         "vec_id", "nrm", *[f"c{s}" for s in range(m)]
-    ).join(cells, "vec_id")
+    ).join(cells.select("vec_id", "cell"), "vec_id")
 
     qdf = c.filter(F.col("vec_id") < query_ids_below).select(
         F.col("vec_id").alias("query_id"),
@@ -859,11 +795,10 @@ def ivfpq_ann_topk(
     cell_arr = F.array(
         *[
             F.struct(
-                (-dot(F.col("qv"), F.array(*[F.lit(x) for x in ctr])))
-                .alias("negdot"),
+                (-dot(F.col("qv"), _lit_vec(ctr))).alias("negdot"),
                 F.lit(ci).alias("cell"),
             )
-            for ci, ctr in enumerate(centers)
+            for ci, ctr in centers.items()
         ]
     )
     probes = qdf.select(
@@ -874,14 +809,13 @@ def ivfpq_ann_topk(
     # distributed ADC LUT (as pq_ann_topk), restricted to probed cells
     spark = emb.sparkSession
     ctr = spark.createDataFrame(
-        [(s, ci, [float(x) for x in cs])
-         for s in range(m) for ci, cs in enumerate(centroids[s])],
+        [(s, ci, cs) for s in range(m) for ci, cs in centroids[s].items()],
         "s int, code int, ctr array<double>",
     )
     lut = qdf.crossJoin(F.broadcast(ctr)).select(
         "query_id", "qn", "s", "code",
         dot(
-            F.slice(F.col("qv"), F.col("s") * sub + 1, F.lit(sub)),
+            F.slice(F.col("qv"), F.col("s") * F.size("ctr") + 1, F.size("ctr")),
             F.col("ctr"),
         ).alias("part"),
     )
@@ -930,7 +864,8 @@ def ivfpq_ann_topk(
 
 def embedding_centroids(emb: DataFrame, label_col: str = "label", dim: int = 64) -> DataFrame:
     """Exact per-label centroid of the embedding column — the building
-    block IVF/KMeans training and cluster-canonicalization consume.
+    block of k-means training (`_lloyd` takes the same exact mean per
+    cluster and dimension) and cluster canonicalization.
 
     Plan shape: posexplode to (label, dim, component) — a narrow 64×
     fan-out of FLOAT scalars, no text/vector payload beyond the
@@ -960,10 +895,7 @@ def embedding_centroids(emb: DataFrame, label_col: str = "label", dim: int = 64)
         F.col("v").cast("double").alias("v"),
     )
     return e.groupBy(label_col, "dim").agg(
-        (
-            F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("centroid")
+        (dsum("v", 6) / F.count(F.lit(1))).alias("centroid")
     )
 
 
@@ -977,71 +909,138 @@ def sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _pack_centroids(cents: DataFrame) -> DataFrame:
-    """(cluster_id, cent) rows -> ONE row holding the whole centroid
-    set as array<struct<cluster_id,cent>> — k·dim scalars, the Lloyd's
-    synchronization payload. Broadcasting this single row makes the
-    assignment step a pure per-row projection: zero shuffle of the
-    corpus, which is the property that matters at 100 TB."""
-    return cents.agg(
-        F.collect_list(F.struct("cluster_id", "cent")).alias("cs")
+def _sql_vec(xs) -> str:
+    """SQL text of a literal array<double>. ``repr`` round-trips a
+    double exactly, and the whole table costs ONE py4j call where a
+    `F.lit` per component costs one each (~1 ms: seconds for a 16x64
+    centroid table)."""
+    return f"array({', '.join(f'{float(x)!r}D' for x in xs)})"
+
+
+def _lit_vec(xs) -> Column:
+    """Literal array<double> column (see `_sql_vec`)."""
+    return F.expr(_sql_vec(xs))
+
+
+def _pack(cents: dict) -> Column:
+    """{cluster_id: centroid} -> ONE literal array<struct<cluster_id,
+    cent>>, the Lloyd's synchronization payload (k·dim scalars). A
+    literal makes the assignment a pure per-row projection: zero
+    shuffle of the corpus and no job to ship the centroids."""
+    structs = ", ".join(
+        f"named_struct('cluster_id', {cid}, 'cent', {_sql_vec(cent)})"
+        for cid, cent in sorted(cents.items())
+    )
+    return F.expr(f"array({structs})").cast(
+        "array<struct<cluster_id:int,cent:array<double>>>"
     )
 
 
-def _assign_packed(c: DataFrame, packed: DataFrame) -> DataFrame:
-    """Argmin-cluster assignment against a broadcast 1-row centroid
-    pack. `array_min` over (dist, cluster_id) structs gives the
-    lowest-distance centroid with a deterministic lowest-id tiebreak.
-    The 1-row crossJoin plans as a BroadcastNestedLoopJoin by
-    construction (1×n rows — the repo-wide tiny-aggregate-broadcast
-    idiom, see text.py); the corpus side never exchanges."""
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda s: F.struct(
-                sqdist(F.col("v"), s["cent"]).alias("dist"),
-                s["cluster_id"].alias("cluster_id"),
-            ),
-        )
-    )
-    return c.crossJoin(F.broadcast(packed)).select(
-        "vec_id", "v", best["cluster_id"].alias("cluster_id")
+def _assign_packed(c: DataFrame, cents: list, sub: int) -> DataFrame:
+    """Argmin-cluster assignment per subspace against the literal
+    centroid packs. `array_min` over (dist, cluster_id) structs gives
+    the lowest-distance centroid with a deterministic lowest-id
+    tiebreak; the distance is the fold-ordered `sqdist`, so the
+    assignment replays exactly in SQL."""
+    def best(s: int, cs: dict) -> Column:
+        v = F.col("v") if len(cents) == 1 else F.slice("v", s * sub + 1, sub)
+        return F.array_min(
+            F.transform(
+                _pack(cs),
+                lambda t: F.struct(
+                    sqdist(v, t["cent"]).alias("dist"),
+                    t["cluster_id"].alias("cluster_id"),
+                ),
+            )
+        )["cluster_id"]
+
+    return c.withColumn(
+        "codes", F.array(*[best(s, cs) for s, cs in enumerate(cents)])
     )
 
 
-def _assign_batch(c: DataFrame, cents: DataFrame) -> DataFrame:
+def _assign_batch(c: DataFrame, cents: list, sub: int) -> DataFrame:
     """Arrow-batched argmin assignment — the big-k scale path. The
     fold form does k·dim INTERPRETED ops per row (fine at k=8; at
     k=800 that is ~50k ops/row and the assignment stage crawls); this
-    path collects the centroids (k·dim scalars — the same per-
-    iteration driver sync MLlib's treeAggregate does) and computes
-    every batch's distances as ONE BLAS matmul. Ties broken by lowest
-    cluster_id (np.argmin returns the first minimum; rows are ordered
-    by cluster_id). Distance drift vs the fold is summation-order
-    ulps (~1e-13 relative) — far inside the measured assignment
-    margins (SCALE.md), so both paths return the same assignment;
-    pinned by tests/test_api_unit.py::test_kmeans_batched_equivalence."""
-    import numpy as np
+    path ships the driver-side centroids (k·dim scalars — the same
+    per-iteration driver sync MLlib's treeAggregate does) in the UDF
+    and computes every batch's distances as ONE BLAS matmul per
+    subspace. Ties broken by lowest cluster_id (np.argmin returns the
+    first minimum; rows are ordered by cluster_id). Distance drift vs
+    the fold is summation-order ulps (~1e-13 relative) — far inside
+    the measured assignment margins (SCALE.md), so both paths return
+    the same assignment; pinned by
+    tests/test_api_unit.py::test_kmeans_batched_equivalence."""
     from pyspark.sql.functions import pandas_udf
 
-    rows = sorted(
-        (r["cluster_id"], r["cent"]) for r in cents.collect()
-    )
-    ids = np.array([cid for cid, _ in rows], dtype=np.int32)
-    m = np.array([cent for _, cent in rows], dtype=np.float64)  # k×d
-    m_sq = np.einsum("ij,ij->i", m, m)  # |c|² per centroid
+    tables = []
+    for cs in cents:
+        ids = sorted(cs)
+        mat = np.array([cs[i] for i in ids], dtype=np.float64)  # k×sub
+        tables.append(
+            (np.array(ids, dtype=np.int32), mat, np.einsum("ij,ij->i", mat, mat))
+        )
 
-    @pandas_udf("int")
+    @pandas_udf("array<int>")
     def _argmin(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
-            return pd.Series([], dtype="int32")
+            return pd.Series([], dtype=object)
         x = np.stack(vs.to_numpy()).astype(np.float64)  # b×d
         # |x-c|² = |x|² - 2x·c + |c|²; |x|² is row-constant → argmin
         # over (-2x·c + |c|²) suffices and skips the per-row self-dot
-        d = -2.0 * (x @ m.T) + m_sq
-        return pd.Series(ids[np.argmin(d, axis=1)])
+        codes = [
+            ids[np.argmin(-2.0 * (x[:, s * sub:(s + 1) * sub] @ mat.T) + m_sq,
+                          axis=1)]
+            for s, (ids, mat, m_sq) in enumerate(tables)
+        ]
+        return pd.Series(list(np.stack(codes, axis=1)))
 
-    return c.select("vec_id", "v", _argmin(F.col("v")).alias("cluster_id"))
+    return c.withColumn("codes", _argmin(F.col("v")))
+
+
+def _lloyd(
+    c: DataFrame, k: int, n_iter: int, m: int = 1, batched: bool = False
+) -> tuple[DataFrame, list]:
+    """Deterministic Lloyd's k-means over the `m` equal subspaces of
+    `c.v` (m=1: the whole vector; m>1: product quantization). Returns
+    (`c` plus `codes`: array<int>, one cluster id per subspace; the m
+    dicts {cluster_id: centroid} that assignment used) after `n_iter`
+    (assign, update) rounds, the last update skipped.
+
+    - init: the k lowest-vec_id vectors, cluster_id 0..k-1 in that
+      order — no RNG, one driver collect;
+    - update: ONE grouped aggregate per round for all m subspaces,
+      keyed by (subspace, cluster, dim): per-dimension DECIMAL(18,6)
+      exact means (`exact.dsum`, identical in DuckDB), collected to the
+      driver — bit-identical across engines, partitionings and
+      sessions;
+    - assign: argmin with a cluster_id tiebreak against the collected
+      centroids (`_assign_packed`, or `_assign_batch` if ``batched``).
+
+    Empty clusters drop out of the next round's centroids. Each update
+    is one shuffle (two Spark jobs); the final assignment stays lazy."""
+    init = [r["v"] for r in c.orderBy("vec_id").limit(k).select("v").collect()]
+    sub = len(init[0]) // m if init else 0
+    cents = [
+        {j: v[s * sub:(s + 1) * sub] for j, v in enumerate(init)}
+        for s in range(m)
+    ]
+    assign = _assign_batch if batched else _assign_packed
+    for _ in range(n_iter - 1):
+        comp = (
+            assign(c, cents, sub)
+            .select("codes", F.posexplode("v").alias("pos", "comp"))
+            .filter(F.col("pos") < m * sub)
+            .withColumn("s", (F.col("pos") / sub).cast("int"))
+        )
+        rows = comp.groupBy(
+            "s", F.col("codes")[F.col("s")].alias("cluster_id"), "pos"
+        ).agg((dsum("comp", 6) / F.count(F.lit(1))).alias("cm")).collect()
+        cents = [{} for _ in range(m)]
+        for s, cid, _, cm in sorted(rows):
+            cents[s].setdefault(cid, []).append(cm)
+    return assign(c, cents, sub), cents
 
 
 def kmeans_assign(
@@ -1051,11 +1050,13 @@ def kmeans_assign(
     dim: int = 64,
     batched: bool = False,
 ) -> DataFrame:
-    """Pure-DataFrame Lloyd's k-means — deterministic and exactly
-    SQL-replayable, unlike the seeded `pyspark.ml` KMeans the IVF/PQ
-    family trains with (whose oracles are therefore recall contracts,
-    not value hashes). Returns (vec_id, v, cluster_id) after `n_iter`
-    (assign, update) rounds.
+    """Pure-DataFrame Lloyd's k-means (`_lloyd` with one subspace) —
+    deterministic and exactly SQL-replayable. Returns (vec_id, v,
+    cluster_id) after `n_iter` (assign, update) rounds. The IVF, PQ
+    and IVF-PQ indexes train on the same loop, so their cells and codes
+    do not depend on session or partition layout either (measured
+    recall@5 at sf0.001/0.01/0.1: IVF 0.975/0.925/1.0, PQ 0.95 at each,
+    IVF-PQ 0.975/0.9/0.95).
 
     Determinism contract (what makes a value-hash oracle possible for
     an iterative algorithm):
@@ -1072,19 +1073,18 @@ def kmeans_assign(
       is 8.2e-4 (sf0.01) / 2.7e-5 (sf0.1) per iteration — 7+ orders
       above drift (probed in tests/test_api_unit.py).
 
-    Scale shape (100 TB): each iteration is ONE narrow map pass over
-    the corpus (the broadcast 1-row centroid pack makes assignment a
-    projection — no corpus shuffle, no driver collect) plus one
-    partial-aggregated groupBy(cluster, dim) whose output is k·dim
-    rows. The per-row assignment cost is k·dim interpreted HOF ops —
-    fine at gate-sized k; for big-k (SemDeDup's k ∝ n regime) pass
-    ``batched=True`` for the Arrow/BLAS argmin (`_assign_batch`):
-    same assignment (drift ≪ the measured margins), one k·dim-scalar
-    driver sync per iteration, mirroring `_norm_batch`.
+    Scale shape (100 TB): each round is ONE narrow map pass over the
+    corpus (the literal centroid pack makes assignment a projection —
+    no corpus shuffle) plus one partial-aggregated groupBy(cluster,
+    dim) whose k·dim output rows are the only driver sync. The per-row
+    assignment cost is k·dim interpreted HOF ops — fine at gate-sized
+    k; for big-k (SemDeDup's k ∝ n regime) pass ``batched=True`` for
+    the Arrow/BLAS argmin (`_assign_batch`): same assignment (drift ≪
+    the measured margins), mirroring `_norm_batch`.
     Empty clusters stay empty (they drop out of the pack), matching
     the unrolled oracle. No reference analog — data.table has no
-    clustering surface; this is pipeline infrastructure (IVF training,
-    SemDeDup's bucketing stage)."""
+    clustering surface; this is pipeline infrastructure (IVF/PQ
+    training, SemDeDup's bucketing stage)."""
     if k < 1 or n_iter < 1:
         raise ValueError("k and n_iter must be >= 1")
     from .dedup import spread
@@ -1094,41 +1094,8 @@ def kmeans_assign(
         .filter(F.col("embedding").isNotNull() & (F.size("embedding") == dim))
         .select("vec_id", _as_double(F.col("embedding")).alias("v"))
     )
-    from pyspark.sql import Window
-
-    w0 = Window.orderBy("vec_id")
-    cents = (
-        c.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w0) - 1).cast("int").alias("cluster_id"),
-            F.col("v").alias("cent"),
-        )
-    )
-    asg = None
-    for _ in range(n_iter):
-        if batched:
-            asg = _assign_batch(c, cents)
-        else:
-            asg = _assign_packed(c, _pack_centroids(cents))
-        cents = (
-            asg.select("cluster_id", F.posexplode("v").alias("pos", "comp"))
-            .groupBy("cluster_id", "pos")
-            .agg(
-                (
-                    F.sum(F.col("comp").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("cm")
-            )
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cm"))),
-                    lambda s: s["cm"],
-                ).alias("cent")
-            )
-        )
-    return asg
+    asg, _ = _lloyd(c, k, n_iter, batched=batched)
+    return asg.select("vec_id", "v", F.col("codes")[0].alias("cluster_id"))
 
 
 def kmeans_clusters(
@@ -1195,11 +1162,10 @@ def semdedup_prune(
     over), and the output is id/bool-only, so no float reaches the
     value hash.
 
-    The declarative self-join replays the k-means lineage on both
-    pair sides (bounded: the assignment is two narrow corpus passes);
-    a 100 TB run would persist/checkpoint `kmeans_assign`'s output
-    once before the pair join — identical semantics, same plan below
-    the scan. ``batched=True`` selects the Arrow/BLAS k-means
+    `kmeans_assign` trains on the driver side (one collected centroid
+    table per round), so its output is one narrow assignment pass,
+    materialized once below for the pair join's consumers.
+    ``batched=True`` selects the Arrow/BLAS k-means
     assignment — the right path for the big-k (k ∝ n) regime this
     operator runs in at scale.
 
@@ -1256,7 +1222,7 @@ def semdedup_prune(
         sub_full = None
         for i, row in enumerate(planes):
             term = (
-                dot(F.col("v"), F.array(*[F.lit(w) for w in row])) >= 0
+                dot(F.col("v"), _lit_vec(row)) >= 0
             ).cast("long") * F.lit(2 ** (n_bits_max - 1 - i))
             sub_full = term if sub_full is None else sub_full + term
         asg = asg.withColumn("_tc", t_c).withColumn(
@@ -1284,11 +1250,9 @@ def semdedup_prune(
     n = asg.withColumn(
         "nrm", (_norm_batch() if batched else norm)(F.col("v"))
     )
-    # r14 optimization: FOUR consumers (pair side a, pair side b, the
-    # capped path's representatives, and the final kept-flag join) each
-    # replayed the full iterative k-means lineage — the docstring's
-    # "a 100 TB run would persist/checkpoint kmeans_assign's output
-    # once" posture, now actually done. localCheckpoint (lazy) rather
+    # FOUR consumers (pair side a, pair side b, the capped path's
+    # representatives, and the final kept-flag join) would each replay
+    # the assignment pass and the norms. localCheckpoint (lazy) rather
     # than an anchor exchange because the consumers prune
     # HETEROGENEOUS column sets (reps also reads _rep, the flag join
     # only ids), which defeats exchange-reuse canonicalization; the

@@ -656,7 +656,7 @@ def q_gforce_var(spark, sf_dir):
     Deterministic under any partitioning: var_samp over raw doubles drifts
     with partial-agg combine order, so compute from EXACT decimal sums
     (n, Σx, Σx²) — decimal addition is order-independent — then evaluate
-    the identical double formula in both engines (NOTES_r1.md §6 recipe).
+    the identical double formula in both engines (data_table_spark/exact.py).
     """
     t = load_tables(spark, sf_dir)
     d = dec("o_totalprice", 2)

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
-from .exact import dec, dsum, sql_dec, sql_double, sql_dsum
+from .exact import dec, dsum, sql_dec, sql_double, sql_dsum, sql_round
 from .queries import query
 
 
@@ -693,11 +693,11 @@ def q_sessionize_batch(spark, sf_dir):
 
 @query(
     "quantiles_by",
-    """
+    f"""
     SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.25), 6) AS q25,
-           round(quantile_cont(l_quantity, 0.50), 6) AS q50,
-           round(quantile_cont(l_quantity, 0.75), 6) AS q75
+           {sql_round("quantile_cont(l_quantity, 0.25)", 6)} AS q25,
+           {sql_round("quantile_cont(l_quantity, 0.50)", 6)} AS q50,
+           {sql_round("quantile_cont(l_quantity, 0.75)", 6)} AS q75
     FROM lineitem GROUP BY l_returnflag
     """,
 )

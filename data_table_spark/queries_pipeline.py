@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
-from .exact import sql_dsum
+from .exact import sql_dsum, sql_round
 from .queries import query
 from .pipeline import (
     dedup_exact,
@@ -400,7 +400,7 @@ _SQL_COS_TOPK = f"""
       FROM s
     )
     SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(cos_full, 4) AS cos
+           {sql_round("cos_full", 4)} AS cos
     FROM r WHERE rank <= 5
 """
 
@@ -421,7 +421,7 @@ _SQL_COS_PAIRS = f"""
              list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS cos_full
       FROM n a JOIN n b ON a.vec_id < b.vec_id
     )
-    SELECT vec_a, vec_b, round(cos_full, 4) AS cos
+    SELECT vec_a, vec_b, {sql_round("cos_full", 4)} AS cos
     FROM p WHERE cos_full >= 0.4505
 """
 
@@ -482,11 +482,12 @@ def q_embedding_dup_clusters(spark, sf_dir):
 # approximate operator can't be SQL-replayed, but its RECALL against the
 # exact operator (itself driver-oracle-green: ann_cosine_topk /
 # embedding_cosine_pairs) is a deterministic, hashable quantity — every
-# random choice (hyperplanes, KMeans) is seeded and evaluated as plan
-# expressions, so the hit-count is reproducible. Each query below emits
-# an aggregate row whose boolean recall/precision verdicts the oracle
-# expects to be TRUE; a regression in the bucketing/probing machinery
-# flips the hash.
+# random choice (hyperplanes) is seeded and evaluated as plan
+# expressions, and the k-means indexes train on the deterministic
+# Lloyd's of kmeans_assign, so the hit-count is reproducible. Each
+# query below emits an aggregate row whose boolean recall/precision
+# verdicts the oracle expects to be TRUE; a regression in the
+# bucketing/probing machinery flips the hash.
 
 _SQL_LSH_PAIRS_RECALL = f"""
     WITH e AS ({_SQL_EMB}),
@@ -713,7 +714,7 @@ def _sql_bm25(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
     )
     k1p1, one_minus_b = k1 + 1.0, 1.0 - b
     term_exprs = " + ".join(
-        f"ROUND(LN((n - df{i} + 0.5e0) / (df{i} + 0.5e0) + 1.0e0), 6)"
+        f"{sql_round(f'LN((n - df{i} + 0.5e0) / (df{i} + 0.5e0) + 1.0e0)', 6)}"
         f" * (CAST(tf{i} AS DOUBLE) * {k1p1!r}e0)"
         f" / (CAST(tf{i} AS DOUBLE) + {k1!r}e0 * ({one_minus_b!r}e0"
         f" + {b!r}e0 * CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / n)))"
@@ -731,7 +732,7 @@ def _sql_bm25(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
       FROM d
     ),
     s AS (
-      SELECT doc_id, ROUND({term_exprs}, 6) AS bm25
+      SELECT doc_id, {sql_round(term_exprs, 6)} AS bm25
       FROM d CROSS JOIN g
     )
     SELECT doc_id, bm25 FROM s WHERE bm25 > 0
@@ -817,7 +818,7 @@ def q_embedding_centroids(spark, sf_dir):
     return embedding_centroids(t["embeddings"].df)
 
 
-_SQL_TFIDF = """
+_SQL_TFIDF = f"""
     WITH toks AS (
       SELECT doc_id,
              unnest(regexp_split_to_array(trim(text), ' +')) AS term
@@ -828,11 +829,11 @@ _SQL_TFIDF = """
     dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
     idf AS (
       SELECT term,
-             ROUND(LN((1 + n) / CAST(1 + df AS DOUBLE)) + 1.0e0, 6) AS idf
+             {sql_round("LN((1 + n) / CAST(1 + df AS DOUBLE)) + 1.0e0", 6)} AS idf
       FROM dfq CROSS JOIN n
     ),
     scored AS (
-      SELECT t.doc_id, t.term, ROUND(t.tf * i.idf, 6) AS tfidf
+      SELECT t.doc_id, t.term, {sql_round("t.tf * i.idf", 6)} AS tfidf
       FROM tf t JOIN idf i USING (term)
     ),
     r AS (
@@ -980,20 +981,19 @@ def q_jaccard_prefix(spark, sf_dir):
 
 @query("ivf_ann_topk", _SQL_ANN_RECALL)
 def q_ivf_ann_topk(spark, sf_dir):
-    """IVF coarse-quantized ANN (KMeans cells + n_probe search): the
+    """IVF coarse-quantized ANN (k-means cells + n_probe search): the
     inverted-file scale path alongside the hyperplane LSH variant,
-    recall-checked against the exact brute-force top-5 (seeded KMeans →
-    deterministic cells → deterministic hit count). n_probe=6 of 16
-    cells scans ~3/8 of the corpus (the testdata's low-similarity
-    regime scatters true neighbors across cells; n_probe trades scan
-    fraction for recall — measured recall@5 at sf0.01: 0.425 @2,
-    0.675 @4, 0.775 @6, 0.875 @8). Bound asserts >= 0.6 — a real
-    contract (an index returning mostly junk fails), with 0.175
-    margin against dataset drift.
+    recall-checked against the exact brute-force top-5. The cells come
+    from the deterministic Lloyd's of kmeans_assign, so cells and hit
+    count are the same in every session and partition layout. n_probe=6
+    of 16 cells scans ~3/8 of the corpus (n_probe trades scan fraction
+    for recall — measured recall@5 at sf0.01: 0.85 @2, 0.875 @4,
+    0.925 @6, 0.925 @8). Bound asserts >= 0.6 — a real contract (an
+    index returning mostly junk fails).
 
     SF-dependence of the bound (ADVICE r4): recall varies with corpus
-    size/geometry — measured for THIS config across SFs: 0.775 @
-    sf0.001, 0.775 @ sf0.01, 0.700 @ sf0.1, so the 0.6 bound holds
+    size/geometry — measured for THIS config across SFs: 0.975 @
+    sf0.001, 0.925 @ sf0.01, 1.0 @ sf0.1, so the 0.6 bound holds
     with >= 0.1 margin at every generated SF. A driver SF change
     beyond these must re-measure before a red row is read as an ANN
     regression. Same caveat applies to lsh_ann_topk (0.7) and
@@ -1286,7 +1286,7 @@ def q_curation_pipeline(spark, sf_dir):
     # re-ran the decontaminate aggregate + anti-join above it. One lazy
     # localCheckpoint materializes the decontaminated table once per
     # invocation (the same heterogeneous-consumers reasoning as
-    # semdedup/line_dedup in OPTIMIZATION_r14.md; measured 8.66s ->
+    # semdedup_prune and line_dedup; measured 8.66s ->
     # 5.70s at sf0.1, 0.66x). At 100 TB this is the standard "persist
     # the cleaned corpus once" posture every curation pipeline takes.
     clean = long_enough.join(
@@ -1656,13 +1656,12 @@ def q_pq_ann_topk(spark, sf_dir):
     codes (16x compression); ADC scoring touches only the code table
     (LUT equi-join, no corpus floats shuffled), then the top-40 ADC
     candidates per query are exactly re-scored — refinement cost
-    independent of corpus size. Seeded random-init KMeans ->
-    deterministic codes within a session config (partition layout feeds
-    the init sample, so tuned-vs-vanilla sessions may quantize
-    slightly differently — both measured). Measured recall@5 vs exact:
-    1.0 @ sf0.001, 0.975-1.0 @ sf0.01 (tuned/vanilla), 0.9 @ sf0.1.
-    Bound asserts >= 0.8 — >= 0.1 margin at every generated SF (the
-    SF-dependence caveat of ivf_ann_topk applies)."""
+    independent of corpus size. The codes come from the deterministic
+    Lloyd's of kmeans_assign (all 16 subspaces per round), so they are
+    the same in every session and partition layout. Measured recall@5
+    vs exact: 0.95 @ sf0.001, sf0.01 and sf0.1. Bound asserts >= 0.8 —
+    >= 0.1 margin at every generated SF (the SF-dependence caveat of
+    ivf_ann_topk applies)."""
     from .pipeline.similarity import pq_ann_topk
 
     t = load_tables(spark, sf_dir)
@@ -1675,16 +1674,16 @@ def q_pq_ann_topk(spark, sf_dir):
 @query("ivfpq_ann_topk", _SQL_ANN_RECALL)
 def q_ivfpq_ann_topk(spark, sf_dir):
     """IVF-PQ composed ANN (faiss IndexIVFPQ, by_residual=False): the
-    coarse KMeans cells bound WHICH rows a query touches (n_probe=6 of
+    coarse k-means cells bound WHICH rows a query touches (n_probe=6 of
     16 cells) and the PQ codes bound WHAT is read per row (16 codes +
     a norm, no corpus floats) — the 100 TB composition both index
     families' docstrings promise, scored by one broadcast equi-join on
-    (subspace, code, cell) and refined by exact re-rank. Measured
-    recall@5 vs exact: 0.775 @ sf0.001, 0.75 @ sf0.01, 0.65 @ sf0.1 —
-    the product of the measured IVF (0.70-0.78) and PQ (0.9-1.0)
-    losses, as composition predicts. Bound asserts >= 0.55 (>= 0.10
-    margin at every generated SF; the ivf_ann_topk SF-dependence
-    caveat applies)."""
+    (subspace, code, cell) and refined by exact re-rank. Both indexes
+    train on the deterministic Lloyd's of kmeans_assign. Measured
+    recall@5 vs exact: 0.975 @ sf0.001, 0.9 @ sf0.01, 0.95 @ sf0.1 —
+    within the measured IVF (0.925-1.0) and PQ (0.95) losses. Bound
+    asserts >= 0.55 (>= 0.10 margin at every generated SF; the
+    ivf_ann_topk SF-dependence caveat applies)."""
     from .pipeline.similarity import ivfpq_ann_topk
 
     t = load_tables(spark, sf_dir)
@@ -1926,7 +1925,7 @@ def q_shuffle_shards(spark, sf_dir):
     return shuffle_shards(t["documents"].df, n_shards=8, seed=42)
 
 
-_SQL_BIGRAM_LM = """
+_SQL_BIGRAM_LM = f"""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(trim(text), ' +') AS toks
       FROM documents),
@@ -1942,8 +1941,9 @@ _SQL_BIGRAM_LM = """
     vv AS (SELECT COUNT(DISTINCT w) AS v FROM ex),
     lp AS (
       SELECT w1, w2,
-             CAST(ROUND(LN(CAST(c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE))
-                        * 1e6, 0) AS BIGINT) AS lp_micro
+             CAST({sql_round(
+                 "LN(CAST(c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)) * 1e6", 0
+             )} AS BIGINT) AS lp_micro
       FROM c2 JOIN c1 USING (w1) CROSS JOIN vv)
     SELECT db.doc_id, CAST(SUM(k) AS BIGINT) AS n_bigrams,
            CAST(SUM(k * lp_micro) AS DOUBLE)
@@ -2108,8 +2108,9 @@ def q_kmeans_clusters(spark, sf_dir):
     """Deterministic pure-DataFrame Lloyd's k-means (k=8, 2 unrolled
     iterations): lowest-id init, decimal-exact centroid means, argmin
     assignment with an id tiebreak — the first ITERATIVE algorithm in
-    the registry with a full value-hash oracle (the ml.KMeans-trained
-    ANN family carries recall contracts instead). All-integer output."""
+    the registry with a full value-hash oracle (the IVF/PQ indexes
+    train on the same loop but carry recall contracts, since their
+    search is approximate). All-integer output."""
     from .pipeline.similarity import kmeans_clusters
 
     t = load_tables(spark, sf_dir)
@@ -2275,10 +2276,12 @@ _SQL_DSIR = f"""
              (SELECT COUNT(*) FROM bk WHERE lang = 'en') AS tt),
     lam AS (
       SELECT raw.b,
-             CAST(round(ln((COALESCE(t, 0) + 1)::DOUBLE
-                           / (tt + 10000)::DOUBLE) * 1e6, 0) AS BIGINT)
-           - CAST(round(ln((r + 1)::DOUBLE
-                           / (rr + 10000)::DOUBLE) * 1e6, 0) AS BIGINT)
+             CAST({sql_round(
+                 "ln((COALESCE(t, 0) + 1)::DOUBLE / (tt + 10000)::DOUBLE) * 1e6", 0
+             )} AS BIGINT)
+           - CAST({sql_round(
+                 "ln((r + 1)::DOUBLE / (rr + 10000)::DOUBLE) * 1e6", 0
+             )} AS BIGINT)
                AS lam
       FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot),
     db AS (SELECT doc_id, b, COUNT(*) AS k FROM bk GROUP BY 1, 2),

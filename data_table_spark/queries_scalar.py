@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .core import DT, load_tables
-from .exact import dsum, sql_dsum
+from .exact import dsum, sql_dsum, sql_round
 from .queries import query
 
 
@@ -289,7 +289,7 @@ def q_frollapply(spark, sf_dir):
     f"""
     WITH w AS (
       SELECT l_suppkey, l_orderkey, l_linenumber,
-             ROUND(corr(l_extendedprice, l_quantity) OVER roll, 4) AS c,
+             {sql_round("corr(l_extendedprice, l_quantity) OVER roll", 4)} AS c,
              COUNT(*) OVER roll AS wn,
              MIN(l_quantity) OVER roll AS qlo,
              MAX(l_quantity) OVER roll AS qhi

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .core import load_tables
-from .exact import sql_dsum
+from .exact import sql_dsum, sql_round
 from .queries import query
 from .streaming import (
     enrich_with_static,
@@ -326,9 +326,9 @@ def q_stream_span_screen(spark, sf_dir):
 
 @query(
     "stream_stateful_stats",
-    """
+    f"""
     SELECT user_id, COUNT(*) AS n_events,
-           CAST(ROUND(SUM(value), 4) AS DOUBLE) AS sum_value,
+           {sql_round("SUM(value)", 4)} AS sum_value,
            COUNT(DISTINCT event_type) AS n_types
     FROM events GROUP BY user_id
     """,

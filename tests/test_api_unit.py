@@ -2366,30 +2366,47 @@ def test_kmeans_deterministic_and_margin(spark, tables):
         kmeans_assign(emb, k=0)
 
 
-def test_pq_encode_parallel_fit_determinism(spark, tables):
-    """pq_encode (r14): the m subspace KMeans fits run concurrently
-    from driver threads — seeds, data and partitioning are unchanged,
-    so two invocations must produce identical centroids AND identical
-    code tables (catches any thread-scheduling nondeterminism the
-    parallel submission could introduce). Codes must also be valid
-    indices into the returned centroid tables."""
-    from data_table_spark.pipeline.similarity import pq_encode
+def test_ann_indexes_layout_invariant(spark, tables):
+    """The IVF cells, the PQ codes and both centroid sets train on the
+    deterministic Lloyd's (lowest-vec_id init, exact DECIMAL means,
+    argmin with a cluster_id tiebreak), so neither the input's
+    partition layout nor spark.sql.shuffle.partitions can change them.
+    Codes must also be valid keys of the returned centroid tables."""
+    from data_table_spark.pipeline.similarity import (
+        _index_corpus,
+        _ivf_cells,
+        pq_encode,
+    )
 
     emb = tables["embeddings"].df
-    enc1, cents1 = pq_encode(emb, m=8, k_centroids=16)
-    enc2, cents2 = pq_encode(emb, m=8, k_centroids=16)
-    assert cents1 == cents2
-    rows1 = sorted(
-        (r.asDict() for r in enc1.collect()), key=lambda d: d["vec_id"]
-    )
-    rows2 = sorted(
-        (r.asDict() for r in enc2.collect()), key=lambda d: d["vec_id"]
-    )
-    assert rows1 == rows2
-    assert len(cents1) == 8 and all(len(t) == 16 for t in cents1)
-    for r in rows1:
+
+    def build(e):
+        cells, centers = _ivf_cells(_index_corpus(e), 16)
+        enc, cents = pq_encode(e, m=8, k_centroids=16)
+        return (
+            sorted(map(tuple, cells.select("vec_id", "cell").collect())),
+            centers,
+            sorted(map(tuple, enc.drop("v", "nrm").collect())),
+            cents,
+        )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        base = build(emb)
+        assert build(emb.repartition(7)) == base
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        assert build(emb) == base
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    cells, centers, codes, cents = base
+    assert len(cells) == emb.count()
+    assert {cell for _, cell in cells} <= set(centers)
+    assert len(cents) == 8 and all(len(t) == 16 for t in cents)
+    for r in codes:
         for s in range(8):
-            assert 0 <= r[f"c{s}"] < 16
+            assert 0 <= r[1 + s] < 16 and r[1 + s] in cents[s]
 
 
 def test_semdedup_prune_keepfirst(spark):

@@ -2,7 +2,7 @@
 
 Each optimization kept the operator's OUTPUT identical while changing
 how Spark materializes shared subtrees (exchange anchors / lazy
-localCheckpoints — see OPTIMIZATION_r14.md). These tests pin the edge
+localCheckpoints). These tests pin the edge
 semantics the equivalence arguments relied on, so a future refactor
 cannot silently change them:
 

@@ -1,7 +1,7 @@
 """Plan fingerprints for every registry query: the optimized logical
 plan with volatile tokens scrubbed (#ids, plan_id, appId paths, tmp
 paths), md5-hashed — the post-rotation 0-plan-diff proof and the
-rotation-time changed-set detector (NOTES r13/r14 protocol).
+rotation-time changed-set detector.
 
 Usage:
     python tools/plan_fingerprint.py <out.json> [sf_dir]
