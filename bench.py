@@ -13,9 +13,10 @@ reported: one-shot numbers on this box carry +/-50% ambient noise
 OPTIMIZATION_r15.md §Round-close for whole-run stalls), and a median-of-3 in one session is the cheapest robust
 estimator. Reps run back-to-back per query (plan compile amortizes into
 rep 1; the median discards it when warm reps are faster, which is the
-steady-state number a user sees), with persisted RDDs released after
-every rep, outside the timer. No per-query caching — every rep
-re-scans parquet, so the real scan cost stays in.
+steady-state number a user sees), each rep inside ``core.query_scope``,
+which frees the intermediates it materialized outside the timer. No
+per-query caching — every rep re-scans parquet, so the real scan cost
+stays in.
 
 Timing action — RE-BASELINED in round 8. Through BENCH_r07 the action
 was ``df.count()``; Catalyst prunes Window operators under a bare
@@ -29,7 +30,7 @@ cross-round continuity for the unaffected queries is unchanged and the
 legacy-14 subtotal is emitted for the diff.
 
 Measurement core: ``fingerprint`` (the timed action), ``time_median``
-(median-of-reps with persisted-RDD release after every sample),
+(median-of-reps, every sample inside ``core.query_scope``),
 ``start_session`` (session start + warm-up) and ``HEADLINE`` are the one
 copy every measuring tool uses; ``tools/measure.py`` is their CLI.
 
@@ -46,6 +47,7 @@ across runs. ``tools/measure.py layout`` compares the two layouts.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -180,49 +182,32 @@ class Timed(NamedTuple):
     samples: list[float]  # sorted
     n: int
     h: int | None
-    released: int  # persisted RDDs released across all samples
+    released: int  # intermediates query_scope freed across all samples
 
 
 def time_median(build: Callable[[], object], reps: int) -> Timed:
     """Median wall seconds of ``reps`` (at least 1) samples of
     build-then-force: ``build()`` returns a DataFrame or DT, and the
-    timer covers its construction plus ``fingerprint``. Persisted RDDs
-    are released after EVERY sample, outside the timer, so no sample
-    inherits another's checkpoint blocks. Exceptions propagate (after
-    the release); callers record the failure and move on."""
-    from pyspark.sql import SparkSession
+    timer covers its construction plus ``fingerprint``. Each sample runs
+    inside ``core.query_scope``, so the intermediates it materialized
+    are freed, blocking, outside the timer, and no sample inherits
+    another's checkpoint blocks; a caller's own cached tables stay
+    cached. ``query_scope`` is resolved at call time from the installed
+    tree (``measure.py ab``); a tree that predates it runs unscoped.
+    Exceptions propagate (after the release); callers record the
+    failure and move on."""
+    from data_table_spark import core
 
+    scope = getattr(core, "query_scope", lambda: contextlib.nullcontext([]))
     samples: list[float] = []
     released = 0
     for _ in range(max(1, reps)):
-        try:
+        with scope() as pinned:
             t0 = time.perf_counter()
             n, h = fingerprint(build())
             samples.append(time.perf_counter() - t0)
-        finally:
-            released += release_persisted(SparkSession.active())
+        released += len(pinned)
     return Timed(median(samples), sorted(samples), n, h, released)
-
-
-def release_persisted(spark) -> int:
-    """Unpersist every block-manager-resident RDD (bench-session
-    hygiene, VERDICT r14 item 5): lazy localCheckpoints inside query
-    paths leave their materialized blocks behind until ContextCleaner
-    runs after a JVM GC, and accumulated blocks were measured to
-    inflate LATER samples of a long one-session run (up to 5x in
-    full-registry sweeps). Every sample rebuilds its DataFrames, so
-    nothing may legitimately stay persisted between samples, and an
-    explicit, deterministic release beats waiting for GC. The
-    unpersist BLOCKS until the blocks are removed, so the cleanup never
-    overlaps the next sample's timer.
-    Returns the number of RDDs released (additive diagnostics)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = list(jmap.keySet().toArray())
-    for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(True)
-    return len(ids)
 
 
 def _hashable_cols(sdf):
@@ -380,8 +365,8 @@ def main() -> None:
         "probe_series": [round(p, 4) for p in probes],
         "conf": conf,
         # r15 additive diagnostics: input layout of this run (see
-        # scan_parallel_copy) and the per-entry count of persisted RDDs
-        # released by time_median's after-every-sample hygiene pass
+        # scan_parallel_copy) and the per-entry count of intermediates
+        # freed by the query_scope around each of time_median's samples
         "input_layout": layout_info,
         "released_rdds": released,
     }))

@@ -22,7 +22,9 @@ reducer, so we never materialize one unless an operator truly needs it
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -1114,3 +1116,43 @@ def session_scratch_dir(spark, kind: str) -> str:
     except OSError:
         pass
     return base
+
+
+# The RDDs ``materialize`` pinned inside the innermost open
+# ``query_scope`` of this thread or task (None: no scope open). A
+# ContextVar, so threads sharing one session never free each other's
+# blocks.
+_PINNED: ContextVar[list | None] = ContextVar("_PINNED", default=None)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The library's one way to materialize an intermediate: a lazy
+    ``localCheckpoint``. The first action over the result computes it
+    once into executor-local blocks, and every later consumer reads
+    those blocks instead of replaying the lineage. Inside a
+    ``query_scope`` the blocks are freed when the scope exits; with no
+    scope open they stay until Spark's ContextCleaner reaps them after
+    the frame is garbage-collected."""
+    out = df.localCheckpoint(eager=False)
+    pinned = _PINNED.get()
+    if pinned is not None:
+        pinned.append(out._jdf.logicalPlan().rdd())
+    return out
+
+
+@contextmanager
+def query_scope() -> Iterator[list]:
+    """Run a query inside this block and free, blocking, exactly the
+    intermediates ``materialize`` pinned in it when the block exits.
+    Other persisted RDDs (a caller's own cached tables, another thread's
+    scope) are left alone. Consume the result inside the block: a frame
+    that reads a freed intermediate fails once the block has exited.
+    Yields the list of pinned RDDs; its length is the number released."""
+    pinned: list = []
+    token = _PINNED.set(pinned)
+    try:
+        yield pinned
+    finally:
+        _PINNED.reset(token)
+        for rdd in pinned:
+            rdd.unpersist(True)

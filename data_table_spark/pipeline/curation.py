@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core import materialize
 from .dedup import dedup_clusters, shingle_rows, spread
 from .text import tokens_col
 
@@ -829,8 +830,8 @@ def dsir_select(
     # 1.18x WORSE here (all consumers are map-side aggregates); a lazy
     # materialization of the narrow (id, bucket) rows removes the
     # repeated assembly without adding any shuffle.
-    raw_g = grams(docs).localCheckpoint(eager=False)
-    tgt_g = grams(target).localCheckpoint(eager=False)
+    raw_g = materialize(grams(docs))
+    tgt_g = materialize(grams(target))
     raw_c = raw_g.groupBy("b").agg(F.count(F.lit(1)).alias("r"))
     tgt_c = tgt_g.groupBy("b").agg(F.count(F.lit(1)).alias("t"))
     tot = raw_g.agg(F.count(F.lit(1)).alias("rr")).crossJoin(

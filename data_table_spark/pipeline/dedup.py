@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core import materialize
 from .text import tokens_col
 
 # MinHash parameters. b*r = 126 permutations; threshold curve midpoint
@@ -159,14 +160,14 @@ def ngram_jaccard_pairs(
     # NOTE: no persist() here — caching pins the static shuffle
     # partitioning and disables AQE coalescing above it, which measured
     # slower than recomputing this cheap codegen pipeline. Instead
-    # (r14) the distinct shingle rows are materialized ONCE per run by
-    # a lazy localCheckpoint and every consumer branch (sizes, size
+    # (r14) the distinct shingle rows are materialized ONCE per run
+    # (``materialize``) and every consumer branch (sizes, size
     # join, both self-join sides — 4x recomputed before) reads the
     # same blocks. A repartition("doc_id") anchor is a silent no-op
     # here — the distinct's output is already hash(doc_id)-partitioned,
     # so the optimizer removes it and the duplication returns; the
     # checkpoint vs anchor A/B read 0.88x.
-    sr = shingle_rows(docs, n).localCheckpoint(eager=False)
+    sr = materialize(shingle_rows(docs, n))
     # count("s") not count(1): s (concat_ws output) is never null so the
     # counts are identical, but consuming s keeps the size branch's
     # column set equal to the join probe's below the anchor — the
@@ -563,7 +564,7 @@ def minhash_lsh_pairs(
     (once per join side), because the expensive compute sat above the
     highest shared exchange where Spark's reuse machinery cannot see
     it. Two materialization points fix both:
-    - the distinct shingle rows are lazily localCheckpoint'ed — one
+    - the distinct shingle rows are materialized (lazily) — one
       computation for the signature aggregate and the verification
       join (an explicit repartition("doc_id") anchor is a silent
       no-op: the distinct's output is already hash(doc_id)-partitioned
@@ -582,9 +583,9 @@ def minhash_lsh_pairs(
     isnotnull(doc_id) into only one branch otherwise, which defeats
     exchange reuse — measured). Output-invariant: every emitted pair
     satisfies doc_a < doc_b, which a null doc_id can never do."""
-    sr = shingle_rows(
-        docs.filter(F.col("doc_id").isNotNull()), n
-    ).localCheckpoint(eager=False)
+    sr = materialize(
+        shingle_rows(docs.filter(F.col("doc_id").isNotNull()), n)
+    )
     bands = lsh_band_index(docs, n, sr=sr).repartition("band", "bh")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -781,15 +782,15 @@ def jaccard_prefix_pairs(
 
     # r14 optimization: ONE materialized shingle table for the FIVE
     # consumer branches (df ranking, the ranked join probe, both
-    # verification sides, and the prefix self-join) via a lazy
-    # localCheckpoint — the checkpoint-vs-recompute A/B read 0.74x
+    # verification sides, and the prefix self-join) via ``materialize``
+    # — the checkpoint-vs-recompute A/B read 0.74x
     # (a repartition("doc_id") anchor is a silent no-op on the
     # already-doc_id-partitioned distinct). The
     # doc_id-notnull filter is output-invariant (pairs require
     # doc_a < doc_b) and count("doc_id") == count(1) under it.
-    sr = shingle_rows(
-        docs.filter(F.col("doc_id").isNotNull()), n
-    ).localCheckpoint(eager=False)
+    sr = materialize(
+        shingle_rows(docs.filter(F.col("doc_id").isNotNull()), n)
+    )
     df_freq = sr.groupBy("s").agg(F.count("doc_id").alias("df"))
     ranked = (
         sr.join(df_freq, "s")
@@ -894,11 +895,14 @@ def jaccard_prefix_pairs(
 def _cc_checkpointer(df_like: DataFrame, mode: str, checkpoint_dir):
     """Return the per-round lineage-cut function for iterative CC.
 
-    "local" (default): ``localCheckpoint()`` — executor-local blocks,
-    no HDFS round-trip, the right cost model on local[32] and on any
-    cluster where re-running a failed job beats paying a distributed
-    write per round. NOT fault-tolerant: losing an executor
-    mid-iteration loses its blocks and kills the job.
+    "local" (default): ``core.materialize`` — a lazy cut into
+    executor-local blocks, no HDFS round-trip, the right cost model on
+    local[32] and on any cluster where re-running a failed job beats
+    paying a distributed write per round. The round's convergence
+    aggregate is the action that materializes it, so a round costs one
+    Spark job, not a checkpoint job plus a convergence job. NOT
+    fault-tolerant: losing an executor mid-iteration loses its blocks
+    and kills the job.
 
     "reliable": ``checkpoint()`` against the session checkpoint dir —
     every round's edge/label table is written to the (replicated)
@@ -909,7 +913,7 @@ def _cc_checkpointer(df_like: DataFrame, mode: str, checkpoint_dir):
     ``checkpoint_dir`` (or a previously configured
     ``setCheckpointDir``) is required."""
     if mode == "local":
-        return lambda df: df.localCheckpoint()
+        return materialize
     if mode != "reliable":
         raise ValueError(f"bad checkpoint_mode: {mode!r}")
     sc = df_like.sparkSession.sparkContext
@@ -967,17 +971,11 @@ def cc_star_labels(
     deduplicates (the star-output sets are provably identical with or
     without the two intermediate ``distinct``s: min() is
     duplicate-insensitive and the final ``distinct`` collapses both
-    halves). In "local" mode the per-round lineage cut is LAZY, so the
+    halves). In "local" mode the per-round lineage cut is lazy, so the
     convergence-signature aggregate doubles as the materializing
-    action: one Spark job per round instead of checkpoint-job +
-    signature-job. Same edge sets, same signature, same labels, same
-    round count — pinned by test_cc_star_round_shape_equivalence."""
-    ckpt = _cc_checkpointer(edges, checkpoint_mode, checkpoint_dir)
-    if checkpoint_mode == "local":
-        # lazy cut: the signature aggregate right below materializes it
-        _cut = lambda df: df.localCheckpoint(eager=False)
-    else:
-        _cut = ckpt
+    action. Same edge sets, same signature, same labels, same round
+    count — pinned by test_cc_star_round_shape_equivalence."""
+    _cut = _cc_checkpointer(edges, checkpoint_mode, checkpoint_dir)
     from pyspark.sql import Window as _W
 
     e = _cut(
@@ -1065,11 +1063,13 @@ def dedup_clusters(
     handful of rounds; a billion-node skew-diameter graph would swap
     in the large-star/small-star alternation (Kiveris et al., "CC in
     MapReduce"), same join-agg building blocks. Scale mechanics:
-    - edges and labels are localCheckpoint()ed each round: truncated
-      lineage keeps round k from re-running rounds 1..k-1 (and keeps
-      the plan from growing), at the cost of materializing one
-      (node,label) table per round — the standard iterative-on-Spark
-      posture.
+    - the edges once and the labels every round go through
+      ``_cc_checkpointer``: truncated lineage keeps round k from
+      re-running rounds 1..k-1 (and keeps the plan from growing), at
+      the cost of materializing one (node,label) table per round — the
+      standard iterative-on-Spark posture. In "local" mode the cut is
+      lazy, and the round's label-sum collect is the action that
+      materializes it.
     - convergence is detected by the label SUM (exact DECIMAL(38,0));
       labels only ever decrease, so an unchanged sum == fixpoint. One
       cheap agg per round on the checkpointed table, no self-join.
@@ -1295,20 +1295,20 @@ def line_dedup(
     sort_array(collect_list(...)) bounded by DOCUMENT size, the same
     bound dedup_spans_remove rides.
     """
-    # r14 optimization: materialize the line rows ONCE per run (lazy
-    # localCheckpoint) — the boilerplate aggregate and the join probe
-    # previously each re-ran the upstream line synthesis (lineify's
-    # posexplode over every document) from scratch. The checkpoint
+    # r14 optimization: materialize the line rows ONCE per run — the
+    # boilerplate aggregate and the join probe previously each re-ran
+    # the upstream line synthesis (lineify's posexplode over every
+    # document) from scratch. The checkpoint
     # measured 0.82x vs recompute and a further 0.92x vs the
     # exchange-anchor form, while needing none of the anchor's
     # canonicalization scaffolding.
     h = F.md5(F.col(line_col)).alias("line_h")
-    keyed = lines.select(
+    keyed = materialize(lines.select(
         F.col(doc_col).alias("doc_id"),
         F.col(order_col).alias("line_no"),
         F.col(line_col).alias("line"),
         h,
-    ).localCheckpoint(eager=False)
+    ))
     boiler = (
         keyed.groupBy("line_h")
         .agg(F.count_distinct("doc_id").alias("df"))

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core import materialize
 from ..exact import dsum
 
 N_TABLES = 4   # independent LSH hash tables (union of candidates)
@@ -230,11 +231,11 @@ def lsh_pairs(
     tables = _hyperplanes(dim, n_tables, n_planes)
     # r14 optimization: three consumers (the bucket index and both
     # verification vector fetches) each re-ran the corpus prep — and
-    # its Arrow-batched norm is a Python round-trip per run. One lazy
-    # localCheckpoint materializes it once per invocation (consumers
+    # its Arrow-batched norm is a Python round-trip per run.
+    # ``materialize`` computes it once per invocation (consumers
     # prune heterogeneous columns, so the exchange-anchor form cannot
     # canonicalize — same reasoning as semdedup's assignment).
-    corpus = _corpus(emb, batched_norm=True).localCheckpoint(eager=False)
+    corpus = materialize(_corpus(emb, batched_norm=True))
     # SLIM candidate generation: only (tbl, bucket, vec_id) flows through
     # the bucket self-join — never the vectors. Carrying both dim-sized
     # arrays through the candidate shuffle multiplies its payload by
@@ -1252,13 +1253,12 @@ def semdedup_prune(
     )
     # FOUR consumers (pair side a, pair side b, the capped path's
     # representatives, and the final kept-flag join) would each replay
-    # the assignment pass and the norms. localCheckpoint (lazy) rather
+    # the assignment pass and the norms. ``materialize`` rather
     # than an anchor exchange because the consumers prune
     # HETEROGENEOUS column sets (reps also reads _rep, the flag join
     # only ids), which defeats exchange-reuse canonicalization; the
-    # checkpoint materializes the assignment exactly once per run,
-    # inside the computation (nothing persists across invocations).
-    n = n.localCheckpoint(eager=False)
+    # checkpoint materializes the assignment exactly once per run.
+    n = materialize(n)
 
     def _side(df, suffix):
         cols = [

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .core import load_tables
+from .core import load_tables, materialize
 from .exact import sql_dsum, sql_round
 from .queries import query
 from .pipeline import (
@@ -288,7 +288,7 @@ def q_dedup_clusters(spark, sf_dir):
     """Connected-component duplicate clusters (transitive closure of
     the exact-Jaccard pair graph; cluster_id = min reachable doc_id =
     the canonical keeper). This row PINS strategy="label" (iterative
-    min-label propagation, per-round localCheckpoint — the plan this
+    min-label propagation, a lineage cut per round — the plan this
     query has carried since r3) so both CC strategies keep driver
     coverage; the library default is now "star" (faster at every
     probed scale), exercised by dedup_clusters_star. Oracle replays
@@ -533,13 +533,11 @@ def q_embedding_lsh_pairs(spark, sf_dir):
     # counts aggregate). Both outputs are pair-sized (hundreds of
     # rows); one lazy materialization each removes whole corpus-scale
     # passes.
-    approx = lsh_pairs(
-        emb, threshold=0.4505, n_tables=16, n_planes=4
-    ).localCheckpoint(eager=False)
-    exact = (
-        cosine_pairs(emb, threshold=0.4505)
-        .select("vec_a", "vec_b")
-        .localCheckpoint(eager=False)
+    approx = materialize(
+        lsh_pairs(emb, threshold=0.4505, n_tables=16, n_planes=4)
+    )
+    exact = materialize(
+        cosine_pairs(emb, threshold=0.4505).select("vec_a", "vec_b")
     )
     ex_n = exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
     hit_n = approx.join(exact, ["vec_a", "vec_b"], "left_semi").agg(
@@ -1283,15 +1281,15 @@ def q_curation_pipeline(spark, sf_dir):
     # r14 optimization: `clean` is consumed FOUR times downstream (the
     # pair generator's shingle build, dedup_clusters' singleton join,
     # keep_best's quality pass, the final chunk join), and every pass
-    # re-ran the decontaminate aggregate + anti-join above it. One lazy
-    # localCheckpoint materializes the decontaminated table once per
+    # re-ran the decontaminate aggregate + anti-join above it.
+    # ``materialize`` computes the decontaminated table once per
     # invocation (the same heterogeneous-consumers reasoning as
     # semdedup_prune and line_dedup; measured 8.66s ->
     # 5.70s at sf0.1, 0.66x). At 100 TB this is the standard "persist
     # the cleaned corpus once" posture every curation pipeline takes.
-    clean = long_enough.join(
-        dirty.select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint(eager=False)
+    clean = materialize(
+        long_enough.join(dirty.select("doc_id"), "doc_id", "left_anti")
+    )
     keepers = keep_best(clean, threshold=0.8).select("doc_id")
     return chunk_documents(
         clean.join(keepers, "doc_id"), size=32, overlap=8

@@ -317,27 +317,24 @@ def stream_neardup_screen(
     )
 
 
-def run_available_now(
-    sdf: DataFrame, output_mode: str = "complete", name: str | None = None
-) -> DataFrame:
+def run_available_now(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Run a streaming DataFrame to completion over the available input
     (Trigger.AvailableNow) into a memory sink; return the batch result.
     Unique sink name per call — repeated runs in one session don't
-    collide."""
+    collide. The sink's temporary view is dropped before returning: the
+    returned frame is already resolved to the sink's rows, so the
+    session's catalog keeps nothing of the run."""
     import shutil
     import tempfile
 
-    name = name or f"stream_out_{next(_RUN_COUNTER)}"
+    name = f"stream_out_{next(_RUN_COUNTER)}"
     spark = sdf.sparkSession
     # harness-only: the state store creates one store per shuffle
     # partition per operator; 32 partitions of near-empty state cost
     # ~6x wall overhead at test SF. Production sizes this to the real
     # key cardinality instead (and uses RocksDB + checkpoints).
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     # r15 (guide §6, VERDICT r14 item 9): the offset/commit logs and
     # HDFS-backed state-store deltas of even a two-batch AvailableNow
     # run are a dozen small fsync'd files; with no checkpointLocation
@@ -369,7 +366,9 @@ def run_available_now(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt_dir is not None:
             shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def tumbling_agg(

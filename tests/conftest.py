@@ -5,6 +5,7 @@ import os
 import pytest
 
 from data_table_spark import get_spark, load_tables
+from data_table_spark.core import query_scope
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -31,6 +32,15 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid.split("/")[-1] in norm:
             item.add_marker(pytest.mark.slow)
+
+
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """Every test runs inside ``core.query_scope``, as a caller sharing
+    one session would: the intermediates a test materializes are freed
+    when it ends instead of piling up over the suite."""
+    with query_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

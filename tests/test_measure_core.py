@@ -5,8 +5,9 @@ the plan-text scrub of tools/plan_fingerprint.py.
   must hash map columns (via to_json) and must see window-column VALUES,
   not just the row count — a bare count() lets Catalyst prune Window
   operators, which is why it was rejected as the action.
-- time_median releases every persisted RDD after each sample, so no
-  sample inherits another's checkpoint blocks.
+- time_median runs each sample inside core.query_scope: the sample's
+  checkpoint blocks are freed after it, so no sample inherits
+  another's, and a caller's own cached tables stay cached.
 - scrub renumbers the session-global HOF lambda counters per plan by
   first occurrence: counters drop out, lambda identity does not.
 """
@@ -21,6 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bench import fingerprint, time_median
+from data_table_spark.core import materialize
 
 
 def test_fingerprint_hashes_map_column(spark):
@@ -47,15 +49,29 @@ def test_time_median_releases_persisted_after_every_sample(spark):
     jsc = spark.sparkContext._jsc
 
     def build():
-        # a lazy localCheckpoint persists its RDD, as the library's
-        # checkpoint sites do
-        return spark.range(50).localCheckpoint(eager=False)
+        # materialize persists its RDD, as the library's checkpoint
+        # sites do
+        return materialize(spark.range(50))
 
     t = time_median(build, 2)
     assert t.n == 50
     assert len(t.samples) == 2
     assert t.released >= 2  # one persisted RDD per sample
     assert jsc.getPersistentRDDs().isEmpty()
+
+
+def test_time_median_keeps_a_callers_cache(spark):
+    jsc = spark.sparkContext._jsc
+    mine = spark.range(20).cache()
+    mine.count()
+    cached = set(jsc.getPersistentRDDs().keySet().toArray())
+    try:
+        assert cached
+        t = time_median(lambda: materialize(spark.range(50)), 2)
+        assert t.released >= 2
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) == cached
+    finally:
+        mine.unpersist(True)
 
 
 def _scrub():

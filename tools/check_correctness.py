@@ -9,6 +9,10 @@ partitions) exactly like the driver's — the partition-invariance /
 session-agnosticism gate. Results must be identical to the tuned
 session; round 1's gforce_var_sd hash-drift and events-nanos errors
 were only visible this way.
+
+Each query runs inside ``core.query_scope`` and fails if it leaves a
+persisted RDD or a temporary view behind in the session (counted with
+perfbench's ``SparkProbe`` and the catalog).
 """
 
 from __future__ import annotations
@@ -156,6 +160,10 @@ def frame_sig(pdf):
     return cols, rows
 
 
+def temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def main():
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
@@ -167,6 +175,8 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
+    from data_table_spark.core import query_scope
+    from perfbench.probes import SparkProbe
 
     if vanilla:
         from pyspark.sql import SparkSession
@@ -180,6 +190,7 @@ def main():
         from data_table_spark import get_spark
 
         spark = get_spark("correctness-check")
+    probe = SparkProbe(spark)
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single files; Spark-written data (e.g.
@@ -196,11 +207,19 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        rdds, views = probe.persisted_rdds(), temp_views(spark)
         try:
-            sdf = fn(spark, sf_dir)
-            got = sdf.toPandas()
+            with query_scope():
+                got = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
+            n_fail += 1
+            continue
+        rdds = probe.persisted_rdds() - rdds
+        views = temp_views(spark) - views
+        if rdds or views:
+            print(f"FAIL {name}: left behind {rdds} persisted RDDs and "
+                  f"temporary views {sorted(views)}")
             n_fail += 1
             continue
         if name not in oracles:

@@ -1,7 +1,7 @@
 """One measurement CLI over bench.py's core: every subcommand times with
 the bench's own action (``fingerprint``: count + full-width xxhash64
-reduction), median-of-reps (``time_median``, persisted RDDs released
-after every sample) and session start with warm-up (``start_session``).
+reduction), median-of-reps (``time_median``, every sample inside
+``core.query_scope``) and session start with warm-up (``start_session``).
 
 Usage:
     python tools/measure.py sweep  SF_DIR [QUERY ...] [--reps N]
@@ -44,11 +44,11 @@ from bench import (  # the one measurement core
     HEADLINE,
     fingerprint,
     median,
-    release_persisted,
     scan_parallel_copy,
     start_session,
     time_median,
 )
+from data_table_spark.core import query_scope
 from data_table_spark.queries import QUERIES
 
 # (name, default --reps or None = untimed, number of leading dirs;
@@ -243,12 +243,10 @@ def cmd_layout(a, spark) -> None:
     print(f"# split copy at {split_dir}: {info['n_parts']}", flush=True)
 
     def signature(name: str, d: str):
-        built = QUERIES[name](spark, d)
-        sdf = getattr(built, "df", built)  # DT or DataFrame
-        try:
+        with query_scope():
+            built = QUERIES[name](spark, d)
+            sdf = getattr(built, "df", built)  # DT or DataFrame
             return tuple(sdf.dtypes), fingerprint(sdf)
-        finally:
-            release_persisted(spark)
 
     counts = {"pass": 0, "fail": 0, "err": 0}
     try:

@@ -71,7 +71,7 @@ SKIP = {  # fread writes files
     # directly by tests/test_api_unit.py::test_setindex_bucketed_elides_exchange
     "setindex_bucketed",
     # iterative label propagation executes during construction
-    # (localCheckpoint per round); the interesting plans are the pair
+    # (one convergence collect per round); the interesting plans are the pair
     # generators, audited under their own names
     "dedup_clusters", "embedding_dup_clusters", "dedup_keep_best",
     "curation_pipeline",
