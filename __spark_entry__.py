@@ -70,7 +70,6 @@ _PRIORITY = [
     "curation_pipeline",  # new
     "dedup_cluster_sizes",  # new
     "dedup_clusters",  # new
-    "dedup_clusters_star",  # new
     "dedup_keep_best",  # new
     "embedding_dup_clusters",  # new
     "semdedup_prune",  # new
@@ -108,7 +107,6 @@ _PRIORITY = [
     "line_dedup_boilerplate",  # r10
     "melt_narm",  # r10
     "minhash_lsh_pairs",  # r10
-    "minhash_lsh_shuffle",  # r10
     "time_parts",  # r10
     "transpose_small",  # r10
     "vecseq_expand",  # r10

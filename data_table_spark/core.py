@@ -1140,6 +1140,18 @@ def materialize(df: DataFrame) -> DataFrame:
     return out
 
 
+def release(df: DataFrame) -> None:
+    """Free, non-blocking, the blocks of a frame ``materialize`` returned
+    once nothing reads it again, and drop it from the open
+    ``query_scope``'s list. For an intermediate an iterative loop
+    supersedes each round, so only the live one stays pinned."""
+    rdd = df._jdf.logicalPlan().rdd()
+    pinned = _PINNED.get()
+    if pinned is not None:
+        pinned[:] = [r for r in pinned if r.id() != rdd.id()]
+    rdd.unpersist(False)
+
+
 @contextmanager
 def query_scope() -> Iterator[list]:
     """Run a query inside this block and free, blocking, exactly the

@@ -12,8 +12,8 @@ Scale posture (100 TB):
   suites are MBs, the corpus is TBs) — its distinct n-gram set is
   broadcast, so the corpus streams through a broadcast-hash semi-join
   with NO shuffle of corpus n-grams.
-- keep_best: composes dedup_clusters (blocked pair join + min-label
-  propagation) with a per-cluster window rank — one extra shuffle on
+- keep_best: composes dedup_clusters (blocked pair join + star-
+  contraction CC) with a per-cluster window rank — one extra shuffle on
   cluster_id, which is the minimum any per-cluster selection needs.
 - chunk_documents: narrow (explode of per-doc start offsets), no
   shuffle; output rows ~ tokens/stride per doc.
@@ -487,7 +487,7 @@ def split_by_cluster(
     by row id leaks eval rows into training through their rewrites —
     the classic contamination bug this operator exists to prevent).
 
-    Composes dedup_clusters (blocked pair join + min-label propagation;
+    Composes dedup_clusters (blocked pair join + star-contraction CC;
     singletons keep their own id) with one narrow projection:
     split = 'test' iff (top-16-bit integer of md5(cluster_id)) mod 100
     < test_pct, else 'train'. Deterministic across engines/runs/

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core import materialize
+from ..core import materialize, release
 from .text import tokens_col
 
 # MinHash parameters. b*r = 126 permutations; threshold curve midpoint
@@ -507,8 +507,7 @@ def lsh_band_index(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame, threshold: float = 0.8, n: int = 3,
-    verify: str = "onepass", broadcast: str = "auto",
+    docs: DataFrame, threshold: float = 0.8, n: int = 3
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, exact-Jaccard-verified.
 
@@ -518,22 +517,16 @@ def minhash_lsh_pairs(
     Output schema matches `ngram_jaccard_pairs` (it computes the same
     answer with near-certain probability, at LSH cost).
 
-    ``verify`` picks the exact-verification strategy (identical output,
-    measured at sf0.1/local[32], interleaved 3-rep medians):
-    - "onepass" (default): explode candidates into (pair, doc, side)
-      memberships, broadcast-join the shingle rows ONCE, roll up side
-      flags. Minimum total work (2 shingle scans, no full-partition
-      size windows) — the saturated-cluster / 100 TB choice, and the
-      measured local winner too (median 4.4s warm / 5.1s cold vs
-      parallel's 5.2s / 8.9s; an earlier round measured the opposite
-      cold ordering — ambient noise on this box is ±50%, so the
-      scale-principled choice wins the tie).
-    - "parallel": per-side joins against the shingle rows. Recomputes
-      the shingle subtree per branch (3 scans total), but the branches
-      are independent stages Spark runs CONCURRENTLY with the signature
-      branch — worth trying on a cluster with idle slots.
-    (A persisted-shingles variant loses badly at this SF — persist()
-    disables AQE above the cache and pins 32-partition shuffles.
+    Exact verification takes ONE pass over the shingle rows: explode
+    the candidates into (pair, doc, side) memberships, join the shingle
+    rows once on doc_id, roll the side flags up to |A|, |B| and the
+    intersection — two shingle scans, no per-doc size window. (A
+    per-side-join verifier, which recomputes the shingle subtree per
+    branch but overlaps it with the signature branch, gave identical
+    output and lost at sf0.1/local[32]: 4.4s warm / 5.1s cold onepass
+    vs 5.2s / 8.9s; it is gone. A persisted-shingles variant loses
+    badly at this SF — persist() disables AQE above the cache and pins
+    32-partition shuffles.
     NEGATIVE RESULT, r15 session 2: porting jaccard_prefix_pairs' r15
     row-local array_intersect verify here measured ~1.0x at sf1
     (interleaved decomposition, quietest rep 8.2s onepass vs 8.6s
@@ -543,19 +536,15 @@ def minhash_lsh_pairs(
     pay the same second corpus-scale pass over the shingle rows
     (membership join vs per-doc set aggregate). Do not re-try.)
 
-    ``broadcast`` governs how the onepass membership frame joins the
-    shingle rows. The candidate count scales with near-dup DENSITY,
-    not a constant — a dup-heavy 100 TB crawl can emit billions of
-    candidate pairs, which no driver broadcast holds — so the default
-    is "auto": no hint, AQE's runtime stats convert the join to
-    broadcast only when the membership side is actually under
+    The membership join carries no hint. The candidate count scales
+    with near-dup DENSITY, not a constant — a dup-heavy 100 TB crawl
+    can emit billions of candidate pairs, which no driver broadcast
+    holds — so AQE's runtime stats convert the join to broadcast only
+    when the membership side is actually under
     spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a shuffle
-    equi-join on doc_id otherwise (identical semantics, one extra
-    exchange, no size cliff). "force" restores the unconditional
-    F.broadcast hint (small corpora where even the first shuffle of
-    mem is not worth it); "never" pins the shuffle merge join (the
-    posture the `minhash_lsh_shuffle` driver twin runs against the
-    same oracle).
+    equi-join on doc_id otherwise (identical output, one extra
+    exchange, no size cliff; test_config_differential's
+    no_auto_broadcast variant checks the shuffle form).
 
     r14 optimization (plan-shape, identical output): the r13 plan ran
     the shingle pipeline (posexplode + lead-window gram assembly +
@@ -568,8 +557,8 @@ def minhash_lsh_pairs(
       computation for the signature aggregate and the verification
       join (an explicit repartition("doc_id") anchor is a silent
       no-op: the distinct's output is already hash(doc_id)-partitioned
-      so the optimizer removes it, and the checkpoint also beat it for
-      the shuffle twin, 0.86x);
+      so the optimizer removes it, and the checkpoint also beat it with
+      a shuffle membership join, 0.86x);
     - `bands.repartition("band","bh")` anchors the band index; both
       sides of the candidate self-join read the one materialized
       shuffle (which the join needs on exactly that key anyway).
@@ -601,61 +590,29 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    if verify == "onepass":
-        # ONE pass over the shingle rows: explode candidates into
-        # (pair, doc, side) memberships (tiny — broadcast), join sr
-        # once, roll side flags up to |A|, |B|, intersection. sr is
-        # distinct per doc, so each (pair, s) sees at most one row per
-        # side: na/nb are 0/1 flags and na*nb marks an intersection.
-        mem = cand.select(
-            "doc_a",
-            "doc_b",
-            F.expr(
-                "explode(array(struct(doc_a as doc_id, 1 as a_side),"
-                " struct(doc_b as doc_id, 0 as a_side))) as m"
-            ),
-        ).select("doc_a", "doc_b", "m.doc_id", "m.a_side")
-        if broadcast == "force":
-            mem = F.broadcast(mem)
-        elif broadcast == "never":
-            mem = mem.hint("SHUFFLE_MERGE")
-        elif broadcast != "auto":
-            raise ValueError(f"bad broadcast: {broadcast}")
-        j = sr.join(mem, "doc_id")
-        per_s = j.groupBy("doc_a", "doc_b", "s").agg(
-            F.sum("a_side").alias("na"),
-            F.sum(1 - F.col("a_side")).alias("nb"),
-        )
-        ver = per_s.groupBy("doc_a", "doc_b").agg(
-            F.sum("na").alias("sa"),
-            F.sum("nb").alias("sb"),
-            F.sum(F.col("na") * F.col("nb")).alias("inter"),
-        )
-    else:
-        # per-side joins: expand candidates by A's shingle rows
-        # (carrying |A| via a per-doc count window), match against B's
-        # rows (carrying |B|), count matches per pair. The sr branches
-        # are independent and overlap the signature computation.
-        from pyspark.sql import Window as _W
-
-        szw = F.count(F.lit(1)).over(_W.partitionBy("doc_id"))
-        srz = sr.withColumn("sz", szw)
-        pa = srz.select(
-            F.col("doc_id").alias("doc_a"), "s", F.col("sz").alias("sa")
-        )
-        pb = srz.select(
-            F.col("doc_id").alias("doc_b"), "s", F.col("sz").alias("sb")
-        )
-        ver = (
-            cand.join(pa, "doc_a")
-            .join(pb, ["doc_b", "s"])
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("inter"),
-                F.first("sa").alias("sa"),
-                F.first("sb").alias("sb"),
-            )
-        )
+    # ONE pass over the shingle rows: explode candidates into
+    # (pair, doc, side) memberships, join sr once, roll side flags up
+    # to |A|, |B|, intersection. sr is distinct per doc, so each
+    # (pair, s) sees at most one row per side: na/nb are 0/1 flags and
+    # na*nb marks an intersection.
+    mem = cand.select(
+        "doc_a",
+        "doc_b",
+        F.expr(
+            "explode(array(struct(doc_a as doc_id, 1 as a_side),"
+            " struct(doc_b as doc_id, 0 as a_side))) as m"
+        ),
+    ).select("doc_a", "doc_b", "m.doc_id", "m.a_side")
+    j = sr.join(mem, "doc_id")
+    per_s = j.groupBy("doc_a", "doc_b", "s").agg(
+        F.sum("a_side").alias("na"),
+        F.sum(1 - F.col("a_side")).alias("nb"),
+    )
+    ver = per_s.groupBy("doc_a", "doc_b").agg(
+        F.sum("na").alias("sa"),
+        F.sum("nb").alias("sb"),
+        F.sum(F.col("na") * F.col("nb")).alias("inter"),
+    )
     jac = F.col("inter").cast("double") / (
         F.col("sa") + F.col("sb") - F.col("inter")
     )
@@ -905,7 +862,7 @@ def _cc_checkpointer(df_like: DataFrame, mode: str, checkpoint_dir):
     and kills the job.
 
     "reliable": ``checkpoint()`` against the session checkpoint dir —
-    every round's edge/label table is written to the (replicated)
+    every round's edge table is written to the (replicated)
     checkpoint filesystem, so executor loss only recomputes from the
     last round, never from round 1. The 100 TB posture (round-9
     verdict "What's wrong" #2): a multi-hour CC over a trillion-edge
@@ -936,18 +893,20 @@ def cc_star_labels(
     """Connected components by large-star/small-star alternation
     (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond") — O(log^2 n) rounds regardless of component DIAMETER,
-    vs min-label propagation's O(diameter). The strategy for
-    skew-diameter graphs (chains of pairwise near-dups), where
-    propagation would need one round per hop.
+    vs min-label propagation's O(diameter), so skew-diameter graphs
+    (chains of pairwise near-dups) converge in a few rounds instead of
+    one round per hop.
 
     large-star: every node's strictly-larger neighbors reattach to the
     minimum of its closed neighborhood; small-star: direct each edge
     high->low, then every node and its smaller neighbors reattach to
     the neighborhood minimum. The alternation contracts every
     component into a star centered at its minimum node; labels are
-    then one groupBy away. Each round is two join+agg passes over the
-    edge list — the same building blocks as propagation, checkpointed
-    the same way (truncated lineage per round). Convergence = the
+    then one groupBy away. Each round is two window passes over the
+    edge list with a lineage cut at its end; once the next round's
+    signature job has materialized its cut, the previous round's is
+    released (``core.release``), so one edge table stays pinned, not
+    one per round. Convergence = the
     canonical (high,low) edge set's (count, order-free hash-sum) pair
     is stable; rounds are returned for the skew-diameter evidence
     (test_cc_star_chain).
@@ -990,6 +949,7 @@ def cc_star_labels(
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
+        prev_cut = e
         # large-star over the symmetrized list: every strictly-larger
         # neighbor reattaches to the closed-neighborhood minimum
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1029,6 +989,7 @@ def cc_star_labels(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1000003))).alias("h"),
         ).collect()[0]
+        release(prev_cut)
         sig = (sig["n"], sig["h"])
         if sig == prev:
             break
@@ -1045,7 +1006,6 @@ def dedup_clusters(
     n: int = 3,
     max_iter: int = 25,
     pairs: DataFrame | None = None,
-    strategy: str = "star",
     checkpoint_mode: str = "local",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -1056,91 +1016,36 @@ def dedup_clusters(
     (the cluster_id IS the keeper's doc_id). Reference has no analog
     (its dedup surface is exact `duplicated`; R/duplicated.R:1-60).
 
-    Algorithm: iterative min-label propagation over the symmetrized
-    edge list — labels[v] <- min(labels[v], min labels of neighbors) —
-    a fixpoint in O(component diameter) rounds. Near-dup graphs are
-    low-diameter (stars/cliques of rewrites), so this converges in a
-    handful of rounds; a billion-node skew-diameter graph would swap
-    in the large-star/small-star alternation (Kiveris et al., "CC in
-    MapReduce"), same join-agg building blocks. Scale mechanics:
-    - the edges once and the labels every round go through
-      ``_cc_checkpointer``: truncated lineage keeps round k from
-      re-running rounds 1..k-1 (and keeps the plan from growing), at
-      the cost of materializing one (node,label) table per round — the
-      standard iterative-on-Spark posture. In "local" mode the cut is
-      lazy, and the round's label-sum collect is the action that
-      materializes it.
-    - convergence is detected by the label SUM (exact DECIMAL(38,0));
-      labels only ever decrease, so an unchanged sum == fixpoint. One
-      cheap agg per round on the checkpointed table, no self-join.
-    - singleton docs keep cluster_id = doc_id (left join + coalesce).
+    Algorithm: Kiveris large-star/small-star alternation
+    (`cc_star_labels`) — O(log^2 n) rounds independent of component
+    diameter, one lineage cut and one convergence-signature job per
+    round, at most ``max_iter`` rounds. Singleton docs keep
+    cluster_id = doc_id (left join + coalesce). Min-label propagation,
+    which gave identical labels, is gone: star measured faster at every
+    probed scale (4.7s vs 13.4s at sf0.01, 113s vs 445s at sf1; 10 vs
+    ~399 rounds on a 400-node chain), and propagation needs one round
+    per hop, so on a long chain it silently stopped at max_iter.
 
     ``pairs``: pre-computed (doc_a, doc_b) pair table; defaults to the
     exact `ngram_jaccard_pairs` at `threshold` (deterministic, so the
     DuckDB recursive-CTE oracle can replay it).
 
-    ``strategy``: "star" (default — Kiveris large-star/small-star
-    alternation via `cc_star_labels`, O(log^2 n) rounds independent of
-    component diameter; measured FASTER at every probed scale: 4.7s vs
-    13.4s at sf0.01, 113s vs 445s at sf1, 10 vs ~399 rounds on a
-    400-node chain — and robust to skew-diameter graphs where
-    propagation silently stops at max_iter) or "label" (min-label
-    propagation — one join+agg per round; kept for comparison and as
-    the recursive-CTE oracle's direct analog). Identical output either
-    way (same components, same min-id labels).
-
     ``checkpoint_mode``/``checkpoint_dir``: "local" (default) or
     "reliable" — see ``_cc_checkpointer``. Same labels either way;
     reliable mode survives executor loss mid-iteration at the cost of
     a distributed write per round."""
-    if strategy not in ("label", "star"):
-        raise ValueError(f"bad strategy: {strategy!r}")
     if pairs is None:
         pairs = ngram_jaccard_pairs(docs, threshold, n)
-    if strategy == "star":
-        lbl, _ = cc_star_labels(
-            pairs.select("doc_a", "doc_b"),
-            max_iter=max_iter,
-            checkpoint_mode=checkpoint_mode,
-            checkpoint_dir=checkpoint_dir,
-        )
-        return docs.select("doc_id").join(lbl, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        )
-    ckpt = _cc_checkpointer(docs, checkpoint_mode, checkpoint_dir)
-    p = pairs.select("doc_a", "doc_b")
-    edges = ckpt(p.union(
-        p.select(F.col("doc_b"), F.col("doc_a")).toDF("doc_a", "doc_b")
-    ))
-    labels = ckpt(docs.select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    ))
-    prev = None
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["doc_a"] == labels["doc_id"])
-            .select(F.col("doc_b").alias("doc_id"), "cluster_id")
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        labels = ckpt(
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce("nbr_min", F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-        )
-        s = labels.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if s == prev:
-            break
-        prev = s
-    return labels
+    lbl, _ = cc_star_labels(
+        pairs.select("doc_a", "doc_b"),
+        max_iter=max_iter,
+        checkpoint_mode=checkpoint_mode,
+        checkpoint_dir=checkpoint_dir,
+    )
+    return docs.select("doc_id").join(lbl, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
+    )
 
 
 def winnow_fingerprints(
@@ -1263,7 +1168,6 @@ def line_dedup(
     order_col: str = "line_no",
     line_col: str = "line",
     line_sep: str = "\n",
-    broadcast: str = "auto",
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet / RefinedWeb pass:
     Wenzek et al. 2019 §3.1 drop lines duplicated across documents;
@@ -1284,14 +1188,12 @@ def line_dedup(
     lines vastly outnumber repeated chrome — but it is NOT a constant:
     with the default max_df=2 the build side is every line appearing
     in >= 2 documents, and a crawl heavy in exact-duplicate documents
-    makes that a large fraction of the corpus. So ``broadcast``
-    defaults to "auto": no hint, AQE's RUNTIME size statistics convert
-    the join to broadcast only when the boilerplate side actually fits
-    under spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a
-    shuffle hash join on line_h otherwise (identical output, one more
-    exchange, no driver-OOM cliff). "force" restores the unconditional
-    broadcast hint; "never" pins the shuffle join (the posture for a
-    dup-heavy corpus with a small max_df). Reassembly is a per-doc
+    makes that a large fraction of the corpus. So the join carries no
+    hint: AQE's RUNTIME size statistics convert it to broadcast only
+    when the boilerplate side actually fits under
+    spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a shuffle
+    join on line_h otherwise (identical output, one more exchange, no
+    driver-OOM cliff). Reassembly is a per-doc
     sort_array(collect_list(...)) bounded by DOCUMENT size, the same
     bound dedup_spans_remove rides.
     """
@@ -1316,12 +1218,6 @@ def line_dedup(
         .select("line_h")
         .withColumn("__boiler__", F.lit(True))
     )
-    if broadcast == "force":
-        boiler = F.broadcast(boiler)
-    elif broadcast == "never":
-        boiler = boiler.hint("SHUFFLE_MERGE")
-    elif broadcast != "auto":
-        raise ValueError(f"bad broadcast: {broadcast}")
     flagged = keyed.join(boiler, "line_h", "left")
     return (
         flagged.groupBy("doc_id")

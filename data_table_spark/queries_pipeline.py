@@ -287,34 +287,15 @@ def q_dedup_cluster_sizes(spark, sf_dir):
 def q_dedup_clusters(spark, sf_dir):
     """Connected-component duplicate clusters (transitive closure of
     the exact-Jaccard pair graph; cluster_id = min reachable doc_id =
-    the canonical keeper). This row PINS strategy="label" (iterative
-    min-label propagation, a lineage cut per round — the plan this
-    query has carried since r3) so both CC strategies keep driver
-    coverage; the library default is now "star" (faster at every
-    probed scale), exercised by dedup_clusters_star. Oracle replays
-    the same closure as a DuckDB recursive CTE."""
+    the canonical keeper) via Kiveris large-star/small-star alternation
+    (Kiveris et al. 2014) — O(log^2 n) rounds independent of component
+    diameter (a 400-node chain converges in <= ~12 alternations;
+    test_cc_star_chain). Oracle replays the same closure as a DuckDB
+    recursive CTE: identical components, identical min-id labels."""
     from .pipeline import dedup_clusters
 
     t = load_tables(spark, sf_dir)
-    return dedup_clusters(t["documents"].df, threshold=0.8, strategy="label")
-
-
-@query("dedup_clusters_star", _SQL_DEDUP_CLUSTERS)
-def q_dedup_clusters_star(spark, sf_dir):
-    """The same duplicate-cluster labels via Kiveris large-star/
-    small-star alternation (round-9 verdict item 4; Kiveris et al.
-    2014) — O(log^2 n) rounds independent of component diameter, the
-    strategy for skew-diameter chain graphs where min-label
-    propagation needs one round per hop (measured: a 400-node chain
-    converges in <= ~12 alternations vs ~399 propagation rounds;
-    test_cc_star_chain) — and measured faster at every probed scale
-    (4.7s vs 13.4s at sf0.01, 113s vs 445s identical-output at sf1),
-    so it is now the library DEFAULT. Same oracle as dedup_clusters:
-    identical components, identical min-id labels."""
-    from .pipeline import dedup_clusters
-
-    t = load_tables(spark, sf_dir)
-    return dedup_clusters(t["documents"].df, threshold=0.8, strategy="star")
+    return dedup_clusters(t["documents"].df, threshold=0.8)
 
 
 @query("minhash_lsh_pairs", _SQL_JACCARD_EXACT)
@@ -325,21 +306,6 @@ def q_minhash_lsh(spark, sf_dir):
     nothing between 0.2 and 0.9), so oracle equality holds."""
     t = load_tables(spark, sf_dir)
     return minhash_lsh_pairs(t["documents"].df, threshold=0.8)
-
-
-@query("minhash_lsh_shuffle", _SQL_JACCARD_EXACT)
-def q_minhash_lsh_shuffle(spark, sf_dir):
-    """minhash_lsh_pairs through the NON-broadcast onepass verifier
-    (broadcast="never": the membership frame shuffle-merge-joins the
-    shingle rows on doc_id) — the 100 TB posture when candidate-pair
-    volume scales with near-dup density past any broadcast threshold
-    (round-9 verdict "What's wrong" #1). Same oracle as
-    minhash_lsh_pairs verbatim: the join strategy cannot change the
-    verified pair set."""
-    t = load_tables(spark, sf_dir)
-    return minhash_lsh_pairs(
-        t["documents"].df, threshold=0.8, broadcast="never"
-    )
 
 
 _SQL_SIMHASH = f"""

@@ -16,6 +16,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the data_table_spark package (the checkout root)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
@@ -39,10 +42,11 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # bucketed saveAsTable output (setkey-durable tables) lands in this
     # tree's .tmp, like core.session_scratch_dir
-    "spark.sql.warehouse.dir": os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "warehouse",
-    ),
+    "spark.sql.warehouse.dir": os.path.join(_ROOT, ".tmp", "warehouse"),
+    # Python workers (the library's UDFs and UDTFs) import the package
+    # from here; Spark appends the worker's own PYTHONPATH, so this works
+    # whatever the driver script's cwd or PYTHONPATH
+    "spark.executorEnv.PYTHONPATH": _ROOT,
 }
 
 

@@ -69,6 +69,24 @@ def duck():
     return con
 
 
+def union_find_labels(nodes, edges):
+    """Driver-side connected components: {node: min node of its
+    component} — the independent reference for the CC labels."""
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}
+
+
 def assert_same(spark_df, duck_con, sql, sort_by=None, rel_tol=1e-9):
     """Differential oracle: Spark result vs DuckDB result (the reference's
     optimize-level differential pattern, SURVEY §5.2)."""

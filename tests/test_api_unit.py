@@ -2519,11 +2519,13 @@ def test_cc_star_chain(spark, tables):
     """Kiveris large-star/small-star CC (round-9 verdict item 4):
     (a) on a 400-node CHAIN (diameter 399 — the skew-diameter case)
     it converges in O(log^2 n) rounds, far under the diameter that
-    min-label propagation needs one round per hop of; (b) labels
-    equal the label-propagation fixpoint on the same graph; (c) the
-    dedup_clusters strategy="star" output is identical to the default
-    on the real documents pair graph, singletons included."""
-    from data_table_spark.pipeline import cc_star_labels, dedup_clusters
+    min-label propagation needs one round per hop of; (b)
+    dedup_clusters' labels on the real documents pair graph equal a
+    driver-side union-find over the same pairs, singletons included."""
+    from conftest import union_find_labels
+    from data_table_spark.pipeline import (
+        cc_star_labels, dedup_clusters, ngram_jaccard_pairs,
+    )
 
     n = 400
     chain = spark.createDataFrame(
@@ -2537,22 +2539,18 @@ def test_cc_star_chain(spark, tables):
     assert rounds <= 20, rounds
 
     docs = tables["documents"].df
-    base = sorted(
-        map(
-            tuple,
-            dedup_clusters(docs, threshold=0.8, strategy="label").collect(),
-        )
-    )
-    star = sorted(
-        map(
-            tuple,
-            dedup_clusters(docs, threshold=0.8, strategy="star").collect(),
-        )
-    )
-    assert star == base
-
-    with pytest.raises(ValueError):
-        dedup_clusters(docs, strategy="bogus")
+    nodes = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    edges = [
+        (r["doc_a"], r["doc_b"])
+        for r in ngram_jaccard_pairs(docs, 0.8, 3).collect()
+    ]
+    assert edges  # the sf0.001 corpus has true near-dups
+    want = union_find_labels(nodes, edges)
+    star = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(docs, threshold=0.8).collect()
+    }
+    assert star == want
 
 
 def test_semdedup_capped(spark, tables):
@@ -2841,74 +2839,38 @@ def test_lineify_exact_runs(spark):
     ]
 
 
-def test_minhash_broadcast_modes_identical(spark, tables):
-    """minhash_lsh_pairs onepass verifier: the membership-frame join
-    strategy (broadcast='auto' AQE-decided / 'force' hinted / 'never'
-    shuffle merge) cannot change the verified pair set — round-9
-    verdict "What's wrong" #1, the 100 TB size-cliff fix. Also pins
-    that 'never' really plans a non-broadcast join."""
-    from data_table_spark.pipeline import minhash_lsh_pairs
-
-    docs = tables["documents"].df
-
-    def pairs(mode):
-        out = minhash_lsh_pairs(docs, threshold=0.8, broadcast=mode)
-        return sorted(
-            (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
-            for r in out.collect()
-        )
-
-    auto, force, never = pairs("auto"), pairs("force"), pairs("never")
-    assert auto == force == never
-    assert len(auto) > 0  # the sf0.001 corpus has true near-dups
-
-    # 'force' plans a broadcast for the membership join; 'never' must
-    # not carry any broadcast hint for it (band-join subtree aside,
-    # the logical plans differ exactly in that hint)
-    lp_force = minhash_lsh_pairs(
-        docs, threshold=0.8, broadcast="force"
-    )._jdf.queryExecution().optimizedPlan().toString()
-    lp_never = minhash_lsh_pairs(
-        docs, threshold=0.8, broadcast="never"
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert lp_force.count("broadcast") > lp_never.count("broadcast")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        minhash_lsh_pairs(docs, broadcast="bogus").collect()
-
-
-def test_cc_reliable_checkpoint_identical(spark, tables):
+def test_cc_reliable_checkpoint_identical(spark, tables, monkeypatch):
     """checkpoint_mode="reliable" (round-9 verdict "What's wrong" #2):
-    both CC strategies must produce IDENTICAL labels when the
-    per-round lineage cut goes through a distributed checkpoint dir
-    instead of executor-local blocks — the fault-tolerant posture for
-    a multi-hour 100 TB CC where losing an executor mid-iteration
-    must not restart from round 1. Also pins the no-dir error."""
+    the star CC must produce IDENTICAL labels when the per-round
+    lineage cut goes through a distributed checkpoint dir instead of
+    executor-local blocks — the fault-tolerant posture for a
+    multi-hour 100 TB CC where losing an executor mid-iteration must
+    not restart from round 1. Also pins the no-dir and bad-mode
+    errors."""
     import shutil
+    import tempfile
 
     from data_table_spark.pipeline import dedup_clusters
 
     docs = tables["documents"].df
-    ckdir = "/root/repo/.tmp/cc_ckpt_test"
+    ckdir = tempfile.mkdtemp(prefix="cc_ckpt_")
     try:
         base = sorted(map(tuple, dedup_clusters(
-            docs, threshold=0.8, strategy="star").collect()))
-        rel_star = sorted(map(tuple, dedup_clusters(
-            docs, threshold=0.8, strategy="star",
+            docs, threshold=0.8).collect()))
+        rel = sorted(map(tuple, dedup_clusters(
+            docs, threshold=0.8,
             checkpoint_mode="reliable", checkpoint_dir=ckdir,
         ).collect()))
-        rel_label = sorted(map(tuple, dedup_clusters(
-            docs, threshold=0.8, strategy="label",
-            checkpoint_mode="reliable", checkpoint_dir=ckdir,
-        ).collect()))
-        assert rel_star == base
-        assert rel_label == base
+        assert rel == base
     finally:
         shutil.rmtree(ckdir, ignore_errors=True)
 
     with pytest.raises(ValueError):
         dedup_clusters(docs, checkpoint_mode="bogus")
+    # no checkpoint_dir= and none configured on the session
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
+    with pytest.raises(ValueError, match="checkpoint dir"):
+        dedup_clusters(docs, checkpoint_mode="reliable")
 
 
 def test_auto_n_chunks_heuristic(spark, tables):
@@ -3028,41 +2990,6 @@ def test_auto_probe_memoized(spark):
     ).collect()[0][0]
     assert h1 == h1e
     assert r2 is not None
-
-
-def test_line_dedup_broadcast_modes_identical(spark):
-    """line_dedup's boilerplate join strategy (broadcast='auto' AQE /
-    'force' hinted / 'never' shuffle) cannot change the output — the
-    r9 ADVICE size-cliff item: with max_df=2 the build side is every
-    line in >=2 docs, which a dup-heavy crawl makes corpus-scale, so
-    the default must not hard-pin a driver broadcast."""
-    from data_table_spark.pipeline import line_dedup
-
-    rows = []
-    for d in range(6):
-        rows.append((d, 0, "shared cookie banner"))
-        rows.append((d, 1, f"unique body {d}"))
-        if d % 2 == 0:
-            rows.append((d, 2, "shared footer"))
-    lines = spark.createDataFrame(rows, ["doc_id", "line_no", "line"])
-
-    def run(mode):
-        return sorted(map(tuple, line_dedup(lines, broadcast=mode).collect()))
-
-    auto, force, never = run("auto"), run("force"), run("never")
-    assert auto == force == never
-    assert any(r[3] > 0 for r in auto)  # boilerplate actually dropped
-
-    lp_force = line_dedup(
-        lines, broadcast="force"
-    )._jdf.queryExecution().optimizedPlan().toString()
-    lp_never = line_dedup(
-        lines, broadcast="never"
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert lp_force.count("broadcast") > lp_never.count("broadcast")
-
-    with pytest.raises(ValueError):
-        line_dedup(lines, broadcast="bogus")
 
 
 def test_frollapply_chunk_stitch(spark, tables):

@@ -76,7 +76,7 @@ SWEEP = [
     "rleid_chunked",        # run chunk-stitch
     "froll_adaptive_chunked",  # running-triple carry
     "frollapply_chunked",   # halo stitch + Arrow UDF
-    "minhash_lsh_shuffle",  # non-broadcast onepass verifier
+    "line_dedup_boilerplate",  # boilerplate join (shuffle when no broadcast)
 ]
 
 # (conf, variant_value) triples; each variant restores the session value

@@ -247,26 +247,16 @@ edges_strategy = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(edges=edges_strategy)
 def test_dedup_clusters_vs_union_find(spark, edges):
-    """Min-label propagation must equal a driver-side union-find on any
-    random small graph (nodes 0..9, arbitrary extra/self/dup edges)."""
+    """dedup_clusters' star-contraction CC must equal a driver-side
+    union-find on any random small graph (nodes 0..9, arbitrary
+    extra/self/dup edges)."""
+    from conftest import union_find_labels
     from data_table_spark.pipeline import dedup_clusters
 
     edges = [(a, b) for a, b in edges if a != b]
     nodes = list(range(10))
     # oracle: union-find, components labeled by their min node
-    parent = {v: v for v in nodes}
-
-    def find(v):
-        while parent[v] != v:
-            parent[v] = parent[parent[v]]
-            v = parent[v]
-        return v
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {v: find(v) for v in nodes}
+    want = union_find_labels(nodes, edges)
 
     docs = spark.createDataFrame([(v,) for v in nodes], ["doc_id"])
     pairs = (

@@ -2,12 +2,9 @@
 
 Every change this round is required to keep each declared query's
 result bit-identical; these tests pin the restructured internals
-directly (the oracle sweep pins the declared outputs end to end):
+directly (the oracle sweep pins the declared outputs end to end;
+the cc_star_labels round-shape pin lives in test_dedup_cc.py):
 
-- cc_star_labels round shape: window-min star steps + single
-  end-of-round distinct + lazy per-round cut vs the r14
-  groupBy+join+double-distinct form — same edge sets per round, same
-  labels, same round count.
 - semdedup_prune semi-join dup detection (EXISTS form) vs the pair
   enumeration it replaced — same dropped set for uncapped and both
   capped shapes (r14-tree goldens at sf0.001/sf0.01 captured before
@@ -29,101 +26,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
-
-
-def _r14_cc_star_labels(edges, max_iter=50):
-    """The pre-r15 cc_star_labels round, verbatim (groupBy+join star
-    steps, intermediate distincts, eager localCheckpoint + separate
-    signature job) — the equivalence reference."""
-    e = (
-        edges.select(
-            F.greatest("doc_a", "doc_b").alias("u"),
-            F.least("doc_a", "doc_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        e = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        d = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        mins = d.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            d.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1000003))).alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
-        if sig == prev:
-            break
-        prev = sig
-    labels = e.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("doc_id"), "cluster_id"
-    )
-    return labels, rounds
-
-
-def _adversarial_edges(spark):
-    """Chain (diameter stress), star, clique, duplicate + reversed
-    edges, a self-loop, and a detached triangle-ish tail."""
-    edges = []
-    edges += [(i, i + 1) for i in range(1, 60)]
-    edges += [(100, 100 + i) for i in range(1, 20)]
-    edges += [
-        (200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)
-    ]
-    edges += [(2, 1), (1, 2), (300, 300)]
-    edges += [(400, 500), (500, 400), (401, 400)]
-    return spark.createDataFrame(edges, "doc_a long, doc_b long")
-
-
-def test_cc_star_round_shape_equivalence(spark):
-    from data_table_spark.pipeline.dedup import cc_star_labels
-
-    e = _adversarial_edges(spark)
-    new_lbl, new_rounds = cc_star_labels(e)
-    old_lbl, old_rounds = _r14_cc_star_labels(e)
-    got = sorted((r["doc_id"], r["cluster_id"]) for r in new_lbl.collect())
-    want = sorted((r["doc_id"], r["cluster_id"]) for r in old_lbl.collect())
-    assert got == want
-    assert new_rounds == old_rounds
-
-
-def test_cc_star_documents_matches_label_propagation(spark, tables):
-    """Cross-strategy pin on real data: star and label propagation
-    must agree on the documents near-dup graph (they did at r14; the
-    r15 round-shape change must keep it so)."""
-    from data_table_spark.pipeline.dedup import dedup_clusters
-
-    star = dedup_clusters(tables["documents"].df, threshold=0.8,
-                          strategy="star")
-    label = dedup_clusters(tables["documents"].df, threshold=0.8,
-                           strategy="label")
-    s = sorted((r["doc_id"], r["cluster_id"]) for r in star.collect())
-    l = sorted((r["doc_id"], r["cluster_id"]) for r in label.collect())
-    assert s == l
 
 
 # dropped (NOT-kept) vec_id sets captured from the r14 tree (pair-

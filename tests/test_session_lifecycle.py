@@ -4,17 +4,23 @@
   (a no-Spark guard over the package source);
 - ``core.query_scope`` frees exactly the intermediates materialized
   inside it: not a caller's cached table, not another thread's scope;
-- a streaming run drops its memory-sink view before it returns.
+- a streaming run drops its memory-sink view before it returns;
+- Python workers import the package whatever the driver's cwd and
+  PYTHONPATH.
 """
 
 from __future__ import annotations
 
 import ast
 import contextvars
+import os
 import re
+import subprocess
 import sys
 import threading
 from pathlib import Path
+
+import pytest
 
 from data_table_spark.core import materialize, query_scope
 
@@ -123,3 +129,29 @@ def test_streaming_run_leaves_no_sink_view(spark):
     assert not [n for n in names if n.startswith("stream_out_")], names
     # the frame was resolved before the view was dropped
     assert out.count() > 0
+
+
+@pytest.mark.slow
+def test_python_workers_import_package_outside_checkout(tmp_path):
+    """A driver script that runs outside the checkout, with PYTHONPATH
+    unset, and only puts the checkout on its own sys.path: the Python
+    workers of a UDTF query must still import data_table_spark."""
+    from conftest import SF_DIR
+
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(_PKG.parent)!r})\n"
+        "from data_table_spark import get_spark\n"
+        "from data_table_spark.queries import QUERIES\n"
+        "spark = get_spark('worker-import')\n"
+        f"rows = QUERIES['dogroups_udtf'](spark, {SF_DIR!r}).collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("SPARK_GRAFT_CPUS", "2")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS " in out.stdout and "ROWS 0" not in out.stdout

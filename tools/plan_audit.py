@@ -70,7 +70,7 @@ SKIP = {  # fread writes files
     # writes bucketed tables; its exchange-elision contract is asserted
     # directly by tests/test_api_unit.py::test_setindex_bucketed_elides_exchange
     "setindex_bucketed",
-    # iterative label propagation executes during construction
+    # the iterative star-contraction CC executes during construction
     # (one convergence collect per round); the interesting plans are the pair
     # generators, audited under their own names
     "dedup_clusters", "embedding_dup_clusters", "dedup_keep_best",
