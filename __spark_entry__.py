@@ -42,78 +42,77 @@ def entry(spark: SparkSession) -> DataFrame:
 # tool now prints the post-window histogram too and prose quotes only
 # tool output).
 #
-# Round-15 window = rotate_window.py output for --new = the 26 queries
-# whose internals changed this optimization round (jaccard_prefix_pairs
-# local verification; the cc_star_labels fused-round consumers —
-# dedup_clusters family, split_leakfree, embedding_dup_clusters,
-# curation pipelines; semdedup_prune/_capped semi-join form; every
-# streaming query — checkpoint relocation + hygiene). Fill = the
-# 24 stalest rows (r10 latest evidence — the VERDICT r14 item-8
-# re-sampling of rows whose driver ground truth aged out).
+# Current window = rotate_window.py output for --new = the 7 chunk-stitch
+# queries whose internals changed when the ordered operators moved onto
+# one chunk assignment, one carry spine and one tie ranker (froll,
+# asof, frank, rleid, auto-chunked froll, frolladaptive and frollapply
+# twins). Fill = the stalest rows (r11/r12 latest evidence).
 # Tool output:
 #
 # # latest-evidence histogram (0 = never driver-checked):
-# #   r10: 25
-# #   r11: 40
-# #   r12: 34
-# #   r13: 49
-# #   r14: 50
-# # window covers 50 slots; oldest row left outside: r11
-# # POST-window histogram (window rows counted as r15):
 # #   r11: 30
 # #   r12: 31
 # #   r13: 44
 # #   r14: 43
-# #   r15: 50
+# #   r15: 48
+# # window covers 50 slots; oldest row left outside: r12
+# # POST-window histogram (window rows counted as r16):
+# #   r12: 13
+# #   r13: 43
+# #   r14: 43
+# #   r15: 47
+# #   r16: 50
 _PRIORITY = [
-    "jaccard_prefix_pairs",  # new
-    "curation_pipeline",  # new
-    "dedup_cluster_sizes",  # new
-    "dedup_clusters",  # new
-    "dedup_keep_best",  # new
-    "embedding_dup_clusters",  # new
-    "semdedup_prune",  # new
-    "semdedup_prune_capped",  # new
-    "split_leakfree",  # new
-    "stream_asof_enrich",  # new
-    "stream_decontaminate",  # new
-    "stream_dedup",  # new
-    "stream_neardup_screen",  # new
-    "stream_session_agg",  # new
-    "stream_session_dynamic",  # new
-    "stream_sliding_agg",  # new
-    "stream_span_screen",  # new
-    "stream_stateful_stats",  # new
-    "stream_static_join",  # new
-    "stream_stream_full_join",  # new
-    "stream_stream_join",  # new
-    "stream_stream_left_join",  # new
-    "stream_stream_right_join",  # new
-    "stream_tumbling_agg",  # new
-    "web_curation_pipeline",  # new
-    "eachi_join_agg",  # r10
-    "embedding_centroids",  # r10
-    "foverlaps_end",  # r10
-    "foverlaps_equal",  # r10
-    "froll_adaptive_median",  # r10
-    "froll_adaptive_sum",  # r10
-    "frollapply_corr",  # r10
-    "frollapply_median",  # r10
-    "fsetequal_check",  # r10
-    "funnel_stages",  # r10
-    "gforce_q1",  # r10
-    "ivf_ann_topk",  # r10
-    "jsonl_roundtrip",  # r10
-    "line_dedup_boilerplate",  # r10
-    "melt_narm",  # r10
-    "minhash_lsh_pairs",  # r10
-    "time_parts",  # r10
-    "transpose_small",  # r10
-    "vecseq_expand",  # r10
-    "vocab_topk",  # r10
-    "asof_chunked",  # r11
-    "cbindlist_zip",  # r11
-    "cj_cross",  # r11
+    "froll_chunked",  # new
+    "asof_chunked",  # new
+    "frank_chunked",  # new
+    "rleid_chunked",  # new
+    "froll_auto_chunks",  # new
+    "froll_adaptive_chunked",  # new
+    "frollapply_chunked",  # new
+    "cube_agg",  # r11
+    "date_parts",  # r11
+    "dcast_drop_false",  # r11
+    "dcast_multi_agg",  # r11
+    "dcast_pivot",  # r11
+    "dedup_exact",  # r11
+    "epoch_upsample",  # r11
+    "fdistinct_last",  # r11
+    "filter_between",  # r11
+    "filter_chin",  # r11
+    "filter_like",  # r11
+    "filter_notin",  # r11
+    "filter_scan",  # r11
+    "foverlaps_any",  # r11
+    "na_omit_cols",  # r11
+    "orc_roundtrip",  # r11
+    "pii_scrub",  # r11
+    "rowid_counter",  # r11
+    "setindex_bucketed",  # r11
+    "sketch_quantiles",  # r11
+    "sq8_ann_topk",  # r11
+    "tfidf_keywords",  # r11
+    "udtf_chunk_lateral",  # r11
+    "which_rows",  # r11
+    "winnow_dup_pairs",  # r11
+    "ann_cosine_topk",  # r12
+    "cogroup_udtf",  # r12
+    "composite_pipeline",  # r12
+    "date_round",  # r12
+    "dcast_margins",  # r12
+    "decontaminate_bloom",  # r12
+    "decontaminate_ngrams",  # r12
+    "foverlaps_start",  # r12
+    "foverlaps_within",  # r12
+    "froll_narm",  # r12
+    "funion_all",  # r12
+    "gforce_minmax_firstlast",  # r12
+    "gforce_var_sd",  # r12
+    "groupingsets_agg",  # r12
+    "inrange_semi",  # r12
+    "let_by_group",  # r12
+    "melt_multi_measure",  # r12
+    "melt_unpivot",  # r12
 ]
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

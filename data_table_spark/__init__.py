@@ -12,7 +12,8 @@ Layout:
 - streaming:   Structured Streaming surface for the events table
 """
 
-from .core import DT, N, fread_parquet, fsort, load_tables
+from .core import DT, N, fsort, load_tables
+from .sources import fread_parquet
 from .session import get_spark
 
 __all__ = ["DT", "N", "fread_parquet", "fsort", "load_tables", "get_spark"]

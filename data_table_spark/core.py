@@ -30,7 +30,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["DT", "N", "GRP", "fread_parquet", "fsort",
+__all__ = ["DT", "N", "GRP", "fsort",
            "format_dt", "print_dt", "set_print_options",
            "as_data_table", "setDT"]
 
@@ -689,12 +689,6 @@ def fsort(dt: DT, *cols: str, decreasing: bool = False,
         dt.df.orderBy(*_forder_exprs(dt.df, order, na_last)),
         order_by=_OrderList(order, na_last=na_last),
     )
-
-
-def fread_parquet(spark: SparkSession, path: str, key: Sequence[str] | None = None) -> DT:
-    """Parquet ingest for the test tables (fread's role for this repo's
-    data; CSV fread lives in sources.fread)."""
-    return DT(spark.read.parquet(path), key=key)
 
 
 _TABLE_ORDER = {

@@ -121,50 +121,15 @@ def asof_join(
     )
     u = xt.unionByName(it, allowMissingColumns=True)
 
-    from .window import _resolve_n_chunks
+    from .window import _carry_spine, _chunked_frame, _resolve_n_chunks
 
     n_chunks = _resolve_n_chunks(u, keys, n_chunks)
     chunked = n_chunks is not None and n_chunks > 1
     part = list(keys)
     if chunked:
         # value-chunk the timeline per key: equal times share a chunk,
-        # so the same-t tag tiebreak never crosses a chunk boundary.
-        # NaN times are excluded from the bounds (one NaN would make
-        # the width NaN and collapse every row into one chunk — exact
-        # but silently unsplit) and routed to the TOP chunk, where both
-        # traversals stay consistent: the chunk index is value-based,
-        # and Spark sorts NaN after +Inf asc (top chunk = end of the
-        # fwd fill) and first desc (top chunk = start of the bwd
-        # mirror). NULL times route to chunk 0 for the mirrored reason.
-        # The explicit routing matters because F.greatest/F.least SKIP
-        # null arguments and floor(NaN) IS null (see the window.py
-        # halo-stitch fix).
-        tcol = F.col("__t__").cast("double")
-        tfin = F.when(~F.isnan(tcol), tcol)
-        bounds = u.groupBy(*keys).agg(
-            F.min(tfin).alias("__tlo__"),
-            F.max(tfin).alias("__thi__"),
-        )
-        u = u.join(F.broadcast(bounds), keys, "left")
-        width = (F.col("__thi__") - F.col("__tlo__")) / F.lit(float(n_chunks))
-        u = u.withColumn(
-            "__chunk__",
-            F.when(tcol.isNotNull() & F.isnan(tcol), F.lit(n_chunks - 1))
-            .when(tcol.isNull(), F.lit(0))
-            .otherwise(
-                F.when(
-                    F.col("__tlo__").isNull() | (width <= 0), F.lit(0)
-                ).otherwise(
-                    F.least(
-                        F.lit(n_chunks - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor((tcol - F.col("__tlo__")) / width),
-                        ),
-                    )
-                )
-            ).cast("int"),
-        ).drop("__tlo__", "__thi__")
+        # so the same-t tag tiebreak never crosses a chunk boundary
+        u, _, _ = _chunked_frame(DT(u), keys, ["__t__"], n_chunks)
         part = [*keys, "__chunk__"]
 
     def fill(direction: str) -> list[Column]:
@@ -197,58 +162,46 @@ def asof_join(
 
     if chunked:
         # carry-in stitch: the prevailing values at each chunk END (for
-        # the forward fill) / START (backward) — one row per (key,
-        # chunk) out of a map-side-combined max_by/min_by — carried
-        # across the tiny chunk spine by one window, then broadcast
-        # back. Per COLUMN, not per row: the running fill skips NULL
+        # the forward fill) / START (backward), carried across the
+        # chunk spine and patched in where the in-chunk fill found
+        # nothing. Per COLUMN, not per row: the running fill skips NULL
         # payload values independently per column (a later X row with a
         # NULL in one payload column does not mask an older non-NULL),
-        # so each column's carry is its own last-non-null aggregate
-        # (max_by with a NULL-masked ordering key skips those rows). A
-        # chunk with no X rows passes the carry through
-        # (last(ignorenulls) over the spine).
+        # so each column's carry is its own last-non-null X value —
+        # max_by/min_by over an ordering key masked to NULL on I rows
+        # and NULL values. A chunk with no X rows passes the carry
+        # through (last(ignorenulls) over the spine).
+        srcs = {**{c: f"__x_{c}__" for c in x_payload}, "t": "__t__"}
         order_key = F.struct(F.col("__t__"), F.col(_TAG))
+
+        def seen(s):
+            return F.when((F.col(_TAG) == 0) & F.col(s).isNotNull(), order_key)
+
         aggs = []
-        for c in x_payload:
-            nn = F.when(F.col(f"__x_{c}__").isNotNull(), order_key)
-            aggs.append(
-                F.max_by(F.col(f"__x_{c}__"), nn).alias(f"__lastv_{c}__")
-            )
-            aggs.append(
-                F.min_by(F.col(f"__x_{c}__"), nn).alias(f"__firstv_{c}__")
-            )
-        aggs.append(F.max(F.col("__t__")).alias("__lastv_t__"))
-        aggs.append(F.min(F.col("__t__")).alias("__firstv_t__"))
-        ends = u.filter(F.col(_TAG) == 0).groupBy(*keys, "__chunk__").agg(*aggs)
-        spine = u.select(*keys, "__chunk__").distinct().join(
-            ends, [*keys, "__chunk__"], "left"
+        if need_fwd:
+            aggs += [F.max_by(F.col(s), seen(s)).alias(f"__lastv_{c}__")
+                     for c, s in srcs.items()]
+        if need_bwd:
+            aggs += [F.min_by(F.col(s), seen(s)).alias(f"__firstv_{c}__")
+                     for c, s in srcs.items()]
+
+        def carried(agg, pre):
+            return lambda w: [
+                F.last(f"__{agg}_{c}__", ignorenulls=True).over(w)
+                .alias(f"{pre}{c}__")
+                for c in srcs
+            ]
+
+        filled = _carry_spine(
+            u, keys, aggs,
+            carry=carried("lastv", "__cf_") if need_fwd else None,
+            back=carried("firstv", "__cb_") if need_bwd else None,
+            onto=filled,
         )
-        wf = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__chunk__").asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        wb = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__chunk__").desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_cols = []
-        for c in [*x_payload, "t"]:
-            carry_cols.append(
-                F.last(f"__lastv_{c}__", ignorenulls=True).over(wf)
-                .alias(f"__cf_{c}__")
-            )
-            carry_cols.append(
-                F.last(f"__firstv_{c}__", ignorenulls=True).over(wb)
-                .alias(f"__cb_{c}__")
-            )
-        carries = spine.select(*keys, "__chunk__", *carry_cols)
-        filled = filled.join(F.broadcast(carries), [*keys, "__chunk__"], "left")
         patch = []
-        for d, pre in (("fwd", "__cf_"), ("bwd", "__cb_")):
-            if (d == "fwd" and need_fwd) or (d == "bwd" and need_bwd):
-                for c in [*x_payload, "t"]:
+        for d, pre, need in (("fwd", "__cf_", need_fwd), ("bwd", "__cb_", need_bwd)):
+            if need:
+                for c in srcs:
                     patch.append(
                         F.coalesce(
                             F.col(f"__{d}_{c}__"), F.col(f"{pre}{c}__")
@@ -256,8 +209,7 @@ def asof_join(
                     )
         keep = [
             c for c in filled.columns
-            if not (c.startswith("__fwd_") or c.startswith("__bwd_"))
-            and not c.startswith(("__cf_", "__cb_"))
+            if not c.startswith(("__fwd_", "__bwd_", "__cf_", "__cb_"))
         ]
         filled = filled.select(*keep, *patch)
 

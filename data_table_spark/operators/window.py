@@ -419,222 +419,190 @@ def froll(
     return DT(dt.df.withColumns(exprs(base)), key=dt.key, order_by=dt.order_by)
 
 
+def _chunked_frame(dt: DT, by, order, n_chunks: int):
+    """The one chunk assignment of every chunk-stitch: value-chunk each
+    key's rows on the first order column, numbering the chunks in the
+    key's TRAVERSAL order — chunk 0 holds the rows the sort puts first,
+    under either direction, so no consumer reads the direction. Equal
+    values share a chunk, so ties never straddle a boundary.
+
+    NaN order values are excluded from the per-key bounds (one NaN
+    would make the width NaN and collapse every row into one chunk —
+    exact but silently unsplit). NaN and NULL rows go to the chunk
+    Spark's sort puts them in (``_ocol``): NaN sorts after +Inf, so
+    last ascending and first descending; NULL sorts first ascending and
+    last descending. They are routed before the arithmetic, which
+    would drop them into chunk 0: F.greatest skips a NULL argument and
+    floor(NaN) is 0 (test_halo_stitch_nan_order_value). Returns
+    (df + __chunk__, keys, order names)."""
+    keys = _namelist(by)
+    ordn = _namelist(order) or dt.order_by
+    if not ordn:
+        raise ValueError("n_chunks needs an ordering (order= or order_by)")
+    desc = ordn[0].startswith("-")
+    vcol = F.col(ordn[0][1:] if desc else ordn[0]).cast("double")
+    fin = F.when(~F.isnan(vcol), vcol)  # NULL for NaN, pass-through else
+    bcols = [F.min(fin).alias("__tlo__"), F.max(fin).alias("__thi__")]
+    sdf = dt.df
+    if keys:
+        sdf = sdf.join(F.broadcast(sdf.groupBy(*keys).agg(*bcols)), keys, "left")
+    else:
+        sdf = sdf.crossJoin(F.broadcast(sdf.agg(*bcols)))
+    width = (F.col("__thi__") - F.col("__tlo__")) / F.lit(float(n_chunks))
+    pos = (F.col("__thi__") - vcol) if desc else (vcol - F.col("__tlo__"))
+    first, last = F.lit(0), F.lit(n_chunks - 1)
+    chunk = (
+        F.when(F.isnan(vcol), first if desc else last)
+        .when(vcol.isNull(), last if desc else first)
+        .when(F.col("__tlo__").isNull() | (width <= 0), first)
+        .otherwise(F.least(last, F.greatest(first, F.floor(pos / width))))
+    )
+    sdf = sdf.withColumn("__chunk__", chunk.cast("int")).drop("__tlo__", "__thi__")
+    return sdf, keys, ordn
+
+
+def _carry_spine(sdf, keys, aggs, carry=None, back=None, onto=None):
+    """The one carry spine of every chunk-stitch (keys x n_chunks rows):
+
+    1. aggregate ``aggs`` per (keys, __chunk__) of ``sdf``;
+    2. ``carry(w)`` builds the carried columns over ``w``, the EXCLUSIVE
+       prefix of the key's chunks in traversal order; ``back(w)`` walks
+       it backwards (NOCB and the as-of backward fill, whose direction
+       is their meaning, not the sort's);
+    3. broadcast-join the carried columns onto ``onto`` (the rows being
+       stitched, usually ``sdf``).
+
+    With ``onto=None`` the spine itself — aggregates and carries — is
+    returned (the halo stitch pairs chunks on it)."""
+    spine = sdf.groupBy(*keys, "__chunk__").agg(*aggs)
+    before = Window.partitionBy(*keys)
+    cols = []
+    if carry:
+        cols += carry(before.orderBy(F.col("__chunk__").asc()).rowsBetween(
+            Window.unboundedPreceding, -1))
+    if back:
+        cols += back(before.orderBy(F.col("__chunk__").desc()).rowsBetween(
+            Window.unboundedPreceding, -1))
+    if onto is None:
+        return spine.select("*", *cols)
+    return onto.join(
+        F.broadcast(spine.select(*keys, "__chunk__", *cols)),
+        [*keys, "__chunk__"],
+        "left",
+    )
+
+
+def _chunked_row_number(sdf, keys, ordn, out: str = "__pos__"):
+    """Global per-key row position on a _chunked_frame WITHOUT a
+    whole-key window task: per-(key, chunk) row_number + the spine's
+    count of the rows in the chunks before. Integer adds — identical to
+    row_number over the unsplit window. Keeps __chunk__."""
+    from ..core import _ocol
+
+    w_in = Window.partitionBy(*keys, "__chunk__").orderBy(
+        *[_ocol(o) for o in ordn]
+    )
+    ranked = sdf.withColumn("__rna__", F.row_number().over(w_in))
+    return _carry_spine(
+        sdf, keys, [F.count(F.lit(1)).alias("__n__")],
+        lambda w: [F.coalesce(F.sum("__n__").over(w), F.lit(0)).alias("__off__")],
+        onto=ranked,
+    ).withColumn(
+        out, (F.col("__rna__") + F.col("__off__")).cast("int")
+    ).drop("__rna__", "__off__")
+
+
 def _ordered_chunk_stitch(
     dt: DT, exprs, by, order, n_chunks: int, hw_lo: int, hw_hi: int,
     with_rank: bool = False,
 ) -> DT:
     """Exact chunk-split evaluation of fixed-width rolling frames (the
-    SCALE.md hot-key mitigation, round-9 verdict item 3).
+    SCALE.md hot-key mitigation).
 
-    1. rows value-chunk on the first order column (per-key min/max
-       bounds broadcast; equal values share a chunk, so ties never
-       straddle a boundary);
+    1. rows chunk by _chunked_frame;
     2. each chunk is augmented with HALO copies of the hw_lo rows
-       preceding / hw_hi rows following its value range. Halo sources
-       are found through a cumulative-count chunk SPINE (tiny:
-       keys x n_chunks rows), so a sparse chunk transitively pulls
-       rows from several chunks back — exactness does not depend on
-       chunk balance;
+       preceding / hw_hi rows following it. Halo sources are found
+       through the chunk spine's row counts, so a sparse chunk
+       transitively pulls rows from several chunks back — exactness
+       does not depend on chunk balance;
     3. the caller's window expressions evaluate over (keys, chunk)
        partitions — n_chunks-way parallel per key — and halo rows are
        dropped. Every real row's frame holds the identical row
        multiset as the unsplit window, so results are bit-identical.
 
     ``with_rank=True`` additionally provides every REAL row its GLOBAL
-    per-key rank as ``__grank__`` and the key's total row count as
-    ``__gcnt__`` (chunk-local rank + the spine's cumulative offset — no
-    whole-key window), for callers whose expressions need boundary
-    positions (shift's out-of-range fill). Halo rows carry NULLs there.
+    per-key rank as ``__grank__`` (_chunked_row_number) and the key's
+    total row count as ``__gcnt__`` — no whole-key window — for callers
+    whose expressions need boundary positions (shift's out-of-range
+    fill). Halo rows carry NULLs there.
     """
-    keys = _namelist(by)
-    ordn = _namelist(order) or dt.order_by
-    if not ordn:
-        raise ValueError("n_chunks needs an ordering (order= or order_by)")
-    first = ordn[0]
-    desc = first.startswith("-")
-    vcol = F.col(first[1:] if desc else first).cast("double")
-
-    sdf = dt.df
-    # NaN order values are excluded from the bounds (one NaN would make
-    # width NaN and collapse EVERY row into the top chunk — exact but
-    # unsplit, silently losing the parallelism this exists for; the
-    # same rule as _chunked_frame). NaN rows themselves land in the
-    # top chunk via the floor/least/greatest arithmetic below, which
-    # matches Spark sorting NaN after +Inf under asc (and first under
-    # desc, where pos/chunk traversal is already reversed).
-    fin = F.when(~F.isnan(vcol), vcol)
-    bcols = [F.min(fin).alias("__tlo__"), F.max(fin).alias("__thi__")]
-    if keys:
-        bounds = sdf.groupBy(*keys).agg(*bcols)
-        sdf = sdf.join(F.broadcast(bounds), keys, "left")
-    else:
-        sdf = sdf.crossJoin(F.broadcast(sdf.agg(*bcols)))
-    width = (F.col("__thi__") - F.col("__tlo__")) / F.lit(float(n_chunks))
-    pos = (F.col("__thi__") - vcol) if desc else (vcol - F.col("__tlo__"))
-    # NaN order rows go to the chunk the GLOBAL sort puts them in: Spark
-    # sorts NaN after +Inf, so last chunk under asc, chunk 0 under desc
-    # (chunk index follows sort direction via `pos`). Without this,
-    # greatest(0, floor(NaN/width)) evaluates to 0 and a NaN row lands
-    # in chunk 0 while sorting LAST within it — shifting the spine
-    # counts and poisoning the next chunk's halo
-    # (test_halo_stitch_nan_order_value).
-    nan_chunk = F.lit(0) if desc else F.lit(n_chunks - 1)
-    # NULL order values: asc sorts NULLS FIRST (chunk 0), `.desc()` is
-    # NULLS LAST (last chunk) — same global-position rule as NaN. Both
-    # MUST be routed before the arithmetic: F.greatest/F.least SKIP
-    # null arguments (and floor(NaN) IS null), so greatest(0,
-    # floor(NULL/width)) silently evaluates to 0 and a trailing-sorted
-    # row lands in a leading chunk — shifting the spine counts and
-    # poisoning the next chunk's halo (test_halo_stitch_nan_order_value
-    # covers all four direction x NaN/NULL cases).
-    null_chunk = F.lit(n_chunks - 1) if desc else F.lit(0)
-    sdf = sdf.withColumn(
-        "__chunk__",
-        F.when(vcol.isNotNull() & F.isnan(vcol), nan_chunk)
-        .when(vcol.isNull(), null_chunk)
-        .otherwise(
-            F.when(
-                F.col("__tlo__").isNull() | (width <= 0), F.lit(0)
-            ).otherwise(
-                F.least(
-                    F.lit(n_chunks - 1),
-                    F.greatest(F.lit(0), F.floor(pos / width)),
-                )
-            )
-        ).cast("int"),
-    ).drop("__tlo__", "__thi__")
-
-    ocols = [_c for _c in ordn]
     from ..core import _ocol
 
+    sdf, keys, ordn = _chunked_frame(dt, by, order, n_chunks)
+    spine = _carry_spine(
+        sdf, keys, [F.count(F.lit(1)).alias("__n__")],
+        lambda w: [F.coalesce(F.sum("__n__").over(w), F.lit(0)).alias("__off__")],
+    )
     w_in = Window.partitionBy(*keys, "__chunk__").orderBy(
-        *[_ocol(c) for c in ocols]
+        *[_ocol(c) for c in ordn]
     )
-    w_cnt = Window.partitionBy(*keys, "__chunk__")
     ranked = sdf.withColumn("__rna__", F.row_number().over(w_in)).withColumn(
-        "__cnt__", F.count(F.lit(1)).over(w_cnt)
+        "__cnt__", F.count(F.lit(1)).over(Window.partitionBy(*keys, "__chunk__"))
     )
 
-    spine = sdf.groupBy(*keys, "__chunk__").agg(
-        F.count(F.lit(1)).alias("__scnt__")
-    )
-    wsp = (
-        Window.partitionBy(*keys)
-        .orderBy("__chunk__")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    spine = spine.withColumn("__cum__", F.sum("__scnt__").over(wsp))
-
-    def keyeq(a, b):
-        conds = [F.col(f"{a}.{k}").eqNullSafe(F.col(f"{b}.{k}")) for k in keys]
+    def halo(width: int, forward: bool):
+        """Copies of each chunk's rows within ``width`` of a boundary
+        into the neighbouring chunks: ``forward`` sends a chunk's LAST
+        rows into later chunks (preceding frames), otherwise its FIRST
+        rows into earlier ones. ``gap`` counts the rows of the chunks
+        strictly between source and target; ``edge`` the rows between a
+        row and its own chunk's boundary."""
+        s, g = spine.alias("__s__"), spine.alias("__g__")
         pred = F.lit(True)
-        for c in conds:
-            pred = pred & c
-        return pred
-
-    base_cols = [*dt.df.columns, "__chunk__"]
-    real = ranked.select(*base_cols, "__rna__").withColumn(
-        "__halo__", F.lit(False)
-    )
-    if with_rank:
-        offs = spine.select(
-            *keys, "__chunk__",
-            (F.col("__cum__") - F.col("__scnt__")).alias("__off__"),
-        )
-        real = real.join(F.broadcast(offs), [*keys, "__chunk__"], "left")
-        totals = spine.groupBy(*keys).agg(F.max("__cum__").alias("__gcnt__"))
-        if keys:
-            real = real.join(F.broadcast(totals), keys, "left")
+        for k in keys:
+            pred = pred & F.col(f"__s__.{k}").eqNullSafe(F.col(f"__g__.{k}"))
+        if forward:
+            later = F.col("__g__.__chunk__") > F.col("__s__.__chunk__")
+            gap = F.col("__g__.__off__") - F.col("__s__.__off__") - F.col("__s__.__n__")
+            edge = F.col("__cnt__") - F.col("__rna__")
         else:
-            real = real.crossJoin(F.broadcast(totals))
-        real = real.withColumn(
-            "__grank__", (F.col("__rna__") + F.col("__off__")).cast("long")
-        ).drop("__off__")
-    real = real.drop("__rna__")
-    parts = [real]
-
-    if hw_lo > 0:
-        # source chunk c -> target chunk c' > c with fewer than hw_lo
-        # rows in the chunks strictly between (gap = cum(c'-1) - cum(c))
-        s_src = spine.alias("__s__")
-        s_tgt = spine.alias("__g__")
-        pairs = s_src.join(
-            s_tgt,
-            keyeq("__s__", "__g__")
-            & (F.col("__g__.__chunk__") > F.col("__s__.__chunk__"))
-            & (
-                F.col("__g__.__cum__") - F.col("__g__.__scnt__")
-                - F.col("__s__.__cum__")
-                < hw_lo
-            ),
-        ).select(
+            later = F.col("__g__.__chunk__") < F.col("__s__.__chunk__")
+            gap = F.col("__s__.__off__") - F.col("__g__.__off__") - F.col("__g__.__n__")
+            edge = F.col("__rna__") - 1
+        pairs = s.join(g, pred & later & (gap < width)).select(
             *[F.col(f"__s__.{k}") for k in keys],
             F.col("__s__.__chunk__").alias("__c_src__"),
             F.col("__g__.__chunk__").alias("__c_tgt__"),
-            (
-                F.col("__g__.__cum__") - F.col("__g__.__scnt__")
-                - F.col("__s__.__cum__")
-            ).alias("__gap__"),
+            gap.alias("__gap__"),
         )
-        cand = ranked.filter(F.col("__cnt__") - F.col("__rna__") < hw_lo)
+        cand = ranked.filter(edge < width)
         on = cand["__chunk__"] == pairs["__c_src__"]
         for k in keys:
             on = on & cand[k].eqNullSafe(pairs[k])
-        halos = cand.join(F.broadcast(pairs), on).filter(
-            F.col("__cnt__") - F.col("__rna__") + F.col("__gap__") < hw_lo
-        )
-        parts.append(
-            halos.select(
+        return (
+            cand.join(F.broadcast(pairs), on)
+            .filter(edge + F.col("__gap__") < width)
+            .select(
                 *[cand[c] for c in dt.df.columns],
                 F.col("__c_tgt__").alias("__chunk__"),
-            ).withColumn("__halo__", F.lit(True))
+            )
+            .withColumn("__halo__", F.lit(True))
         )
 
-    if hw_hi > 0:
-        # mirror: target chunk c' < c, rows between = rna-1 + gap
-        s_src = spine.alias("__s__")
-        s_tgt = spine.alias("__g__")
-        pairs = s_src.join(
-            s_tgt,
-            keyeq("__s__", "__g__")
-            & (F.col("__g__.__chunk__") < F.col("__s__.__chunk__"))
-            & (
-                F.col("__s__.__cum__") - F.col("__s__.__scnt__")
-                - F.col("__g__.__cum__")
-                < hw_hi
-            ),
-        ).select(
-            *[F.col(f"__s__.{k}") for k in keys],
-            F.col("__s__.__chunk__").alias("__c_src__"),
-            F.col("__g__.__chunk__").alias("__c_tgt__"),
-            (
-                F.col("__s__.__cum__") - F.col("__s__.__scnt__")
-                - F.col("__g__.__cum__")
-            ).alias("__gap__"),
+    real = sdf
+    if with_rank:
+        real = _chunked_row_number(sdf, keys, ordn, out="__grank__")
+        totals = F.broadcast(
+            spine.groupBy(*keys).agg(F.sum("__n__").alias("__gcnt__"))
         )
-        cand = ranked.filter(F.col("__rna__") - 1 < hw_hi)
-        on = cand["__chunk__"] == pairs["__c_src__"]
-        for k in keys:
-            on = on & cand[k].eqNullSafe(pairs[k])
-        halos = cand.join(F.broadcast(pairs), on).filter(
-            F.col("__rna__") - 1 + F.col("__gap__") < hw_hi
-        )
-        parts.append(
-            halos.select(
-                *[cand[c] for c in dt.df.columns],
-                F.col("__c_tgt__").alias("__chunk__"),
-            ).withColumn("__halo__", F.lit(True))
-        )
-
-    aug = parts[0]
-    for p in parts[1:]:
-        # halo parts lack __grank__/__gcnt__ (with_rank): null-filled
-        aug = aug.unionByName(p, allowMissingColumns=True)
-    base = Window.partitionBy(*keys, "__chunk__").orderBy(
-        *[_ocol(c) for c in ocols]
-    )
+        real = real.join(totals, keys, "left") if keys else real.crossJoin(totals)
+    aug = real.withColumn("__halo__", F.lit(False))
+    for width, forward in ((hw_lo, True), (hw_hi, False)):
+        if width > 0:
+            # halo rows lack __grank__/__gcnt__ (with_rank): null-filled
+            aug = aug.unionByName(halo(width, forward), allowMissingColumns=True)
     out = (
-        aug.withColumns(exprs(base))
+        aug.withColumns(exprs(w_in))
         .filter(~F.col("__halo__"))
         .drop("__chunk__", "__halo__", "__grank__", "__gcnt__")
     )
@@ -734,199 +702,121 @@ def frank(
     forming a unique key — random tie-breaking on a distributed engine
     is only well-defined relative to stable row identity.
     ``n_chunks="auto"``: see ``_resolve_n_chunks``.
-    """
-    if isinstance(col, (list, tuple)):
-        return _frank_multi(
-            dt, list(col), ties=ties, by=by, desc=desc, out_col=out_col,
-            tiebreak=tiebreak, seed=seed, na_last=na_last, order=order,
-            n_chunks=n_chunks,
-        )
-    if order is not None:
-        # frankv order= (reference #5489, tests.Rraw 2386): -1 ranks
-        # descending; takes precedence over desc= with the reference's
-        # warning when both are given
-        order = int(order)
-        if order not in (1, -1):
-            raise ValueError("order must be +1 or -1")
-        if desc:
-            import warnings
 
-            warnings.warn(
-                "Both desc= and 'order' argument are provided; 'order'"
-                " will take precedence.",
-                RuntimeWarning,
-            )
-        desc = order == -1
-    n_chunks = _resolve_n_chunks(dt.df, _namelist(by), n_chunks)
-    handle_nan = nan_is_na and dict(dt.df.dtypes).get(col) in (
-        "float", "double",
-    )
-    if handle_nan and (na_last == "keep" or na_last is None):
-        # reference is_na() treats NaN as NA (R/frank.R:32): "keep"
-        # ranks both as NA, None drops both — mask NaN to NULL in a
-        # temporary rank-source column and recurse
-        src = "__rksrc__"
-        masked = dt.df.withColumn(
-            src,
-            F.when(F.isnan(F.col(col)), F.lit(None)).otherwise(F.col(col)),
-        )
-        out = frank(
-            DT(masked, key=dt.key, order_by=dt.order_by), src, ties=ties,
-            by=by, desc=desc, out_col=out_col, tiebreak=tiebreak, seed=seed,
-            na_last=na_last, n_chunks=n_chunks, nan_is_na=False,
-        )
-        return DT(out.df.drop(src), key=dt.key, order_by=dt.order_by)
-    if na_last is None:
-        # reference na.last=NA: remove NAs before ranking (R/frank.R:70)
-        kept = DT(
-            dt.df.where(F.col(col).isNotNull()),
-            key=dt.key, order_by=dt.order_by,
-        )
-        return frank(
-            kept, col, ties=ties, by=by, desc=desc, out_col=out_col,
-            tiebreak=tiebreak, seed=seed, na_last=True, n_chunks=n_chunks,
-            nan_is_na=False,
-        )
-    if n_chunks is not None and n_chunks > 1:
-        return _frank_chunked(
-            dt, col, ties, by, desc, out_col, tiebreak, seed, na_last,
-            n_chunks, handle_nan,
-        )
-    if handle_nan:
-        # two-level missing key (tests.Rraw 1988): NA outermost, NaN
-        # adjacent — na_last=True → values, NaN, NA; False → NA, NaN,
-        # values (block order fixed regardless of desc). Ties need no
-        # extra key: ordering comparison already has NaN==NaN,
-        # NULL==NULL, so rank()/dense_rank() group them.
-        lvl = (
-            F.when(F.col(col).isNull(), F.lit(2))
-            .when(F.isnan(F.col(col)), F.lit(1))
-            .otherwise(F.lit(0))
-        )
-        ocs = [
-            lvl.asc() if na_last is True else lvl.desc(),
-            F.col(col).desc() if desc else F.col(col).asc(),
-        ]
-    elif na_last is True:
-        ocs = [
-            F.col(col).desc_nulls_last()
-            if desc
-            else F.col(col).asc_nulls_last()
-        ]
-    else:
-        # False and "keep" both sort nulls first; "keep" masks below
-        ocs = [
-            F.col(col).desc_nulls_first()
-            if desc
-            else F.col(col).asc_nulls_first()
-        ]
-    part = Window.partitionBy(*_namelist(by)) if by else Window.partitionBy()
-    w = part.orderBy(*ocs)
-    if ties == "random":
-        if not tiebreak:
-            raise ValueError(
-                "ties='random' needs tiebreak= unique-key columns for a "
-                "deterministic seeded permutation"
-            )
-        salt = F.md5(
-            F.concat_ws(
-                ":",
-                F.lit(str(seed)),
-                *[F.col(t).cast("string") for t in _namelist(tiebreak)],
-            )
-        )
-        r = F.row_number().over(part.orderBy(*ocs, salt.asc()))
-    elif ties in ("first", "last"):
-        # "last" numbers the tie group in reverse (reference
-        # src/frank.c ties.method="last"); with tiebreak= the order
-        # within ties is pinned (asc for first, desc for last),
-        # otherwise it is engine order (documented nondeterminism)
-        if tiebreak:
-            tb = [
-                F.col(t).asc() if ties == "first" else F.col(t).desc()
-                for t in _namelist(tiebreak)
-            ]
-            r = F.row_number().over(part.orderBy(*ocs, *tb))
-        else:
-            r = F.row_number().over(w)
-    elif ties == "min":
-        r = F.rank().over(w)
-    elif ties == "dense":
-        r = F.dense_rank().over(w)
-    elif ties == "max":
-        # max rank of the tie group = rank + count(ties) - 1 (tie count
-        # cast int: rank dtypes stay IntegerType like the other methods)
-        tie_w = Window.partitionBy(*(_namelist(by) + [col]))
-        r = F.rank().over(w) + F.count(F.lit(1)).over(tie_w).cast("int") - 1
-    elif ties == "average":
-        tie_w = Window.partitionBy(*(_namelist(by) + [col]))
-        r = (
-            (2 * F.rank().over(w) + F.count(F.lit(1)).over(tie_w) - 1) / 2
-        ).cast("double")
-    else:
-        raise ValueError(f"bad ties: {ties}")
-    if na_last == "keep":
-        # cast the partition null count back to int so integer rank
-        # dtypes don't widen to bigint under the shift
-        nn = F.sum(F.col(col).isNull().cast("int")).over(part).cast("int")
-        shift = (nn > 0).cast("int") if ties == "dense" else nn
-        r = F.when(F.col(col).isNull(), F.lit(None)).otherwise(r - shift)
-    return DT(dt.df.withColumn(out_col, r), key=dt.key, order_by=dt.order_by)
-
-
-def _frank_multi(
-    dt: DT, cols, ties, by, out_col, na_last, order=None, desc=False,
-    tiebreak=None, seed: int = 0, n_chunks=None,
-) -> DT:
-    """frankv(cols=, order=) — MULTI-COLUMN lexicographic ranking
-    (reference R/frank.R frankv cols=; tests.Rraw 2386.05, round-13
-    port). A tie is a row equal on ALL ranked columns (Spark's
-    ordering/grouping already treats NaN==NaN and NULL==NULL). Per
-    float/double column the NaN/NA two-level key applies (NA outermost,
-    NaN adjacent — the 1988 forder rule), other dtypes use
-    nulls_first/last placement. ``order`` is ±1 per column (a scalar
-    recycles); ``desc=True`` recycles -1 and yields to ``order=`` with
-    the same precedence warning as the single-column form.
-
+    ``col`` may be a list: frankv(cols=, order=) — MULTI-COLUMN
+    lexicographic ranking (reference R/frank.R frankv cols=; tests.Rraw
+    2386.05). A tie is a row equal on ALL ranked columns (Spark's
+    ordering/grouping already treats NaN==NaN and NULL==NULL); every
+    column takes the sort key the single-column form uses. ``order`` is
+    ±1 per column (a scalar recycles); ``desc=True`` recycles -1.
     Documented subset: ``na_last`` must be True or False ("keep"/None
     are single-column semantics — whether a row is "missing" is
     ambiguous across columns) and ``n_chunks=`` is single-column only
-    (the value-chunk spine needs one ranked domain)."""
-    if n_chunks not in (None, 1):
-        raise ValueError(
-            "n_chunks= chunk-stitching is single-column only"
-        )
-    if na_last not in (True, False):
+    (the value-chunk spine needs one ranked domain).
+    """
+    multi = isinstance(col, (list, tuple))
+    cols = list(col) if multi else [col]
+    if multi and n_chunks not in (None, 1):
+        raise ValueError("n_chunks= chunk-stitching is single-column only")
+    if multi and na_last not in (True, False):
         raise ValueError(
             "multi-column frank supports na_last=True/False only "
             "(row-missingness is ambiguous across columns)"
         )
-    n = len(cols)
-    if order is None:
-        orders = [-1 if desc else 1] * n
-    else:
-        if desc:
-            import warnings
-
-            warnings.warn(
-                "Both desc= and 'order' argument are provided; 'order'"
-                " will take precedence.",
-                RuntimeWarning,
+    orders = _rank_orders(order, desc, len(cols))
+    keys = _namelist(by)
+    dtypes = dict(dt.df.dtypes)
+    sdf, off, doff = dt.df, None, None
+    if not multi:
+        desc = orders[0] == -1
+        n_chunks = _resolve_n_chunks(dt.df, keys, n_chunks)
+        handle_nan = nan_is_na and dtypes.get(col) in ("float", "double")
+        if handle_nan and (na_last == "keep" or na_last is None):
+            # reference is_na() treats NaN as NA (R/frank.R:32): "keep"
+            # ranks both as NA, None drops both — mask NaN to NULL in a
+            # temporary rank-source column and recurse
+            src = "__rksrc__"
+            masked = dt.df.withColumn(
+                src,
+                F.when(F.isnan(F.col(col)), F.lit(None)).otherwise(F.col(col)),
             )
-        orders = (
-            [int(order)] * n
-            if isinstance(order, int)
-            else [int(o) for o in order]
-        )
-        if len(orders) != n:
-            raise ValueError("order length must match cols")
+            out = frank(
+                DT(masked, key=dt.key, order_by=dt.order_by), src, ties=ties,
+                by=by, desc=desc, out_col=out_col, tiebreak=tiebreak,
+                seed=seed, na_last=na_last, n_chunks=n_chunks,
+                nan_is_na=False,
+            )
+            return DT(out.df.drop(src), key=dt.key, order_by=dt.order_by)
+        if na_last is None:
+            # reference na.last=NA: remove NAs before ranking (R/frank.R:70)
+            kept = DT(
+                dt.df.where(F.col(col).isNotNull()),
+                key=dt.key, order_by=dt.order_by,
+            )
+            return frank(
+                kept, col, ties=ties, by=by, desc=desc, out_col=out_col,
+                tiebreak=tiebreak, seed=seed, na_last=True,
+                n_chunks=n_chunks, nan_is_na=False,
+            )
+        # "keep" ranks non-NAs among themselves: the partition's NULL
+        # count comes off every rank (cast int so integer rank dtypes
+        # don't widen to bigint under the shift)
+        nn = F.sum(F.col(col).isNull().cast("int")).over(
+            Window.partitionBy(*keys)
+        ).cast("int")
+        if n_chunks is not None and n_chunks > 1:
+            sdf = _frank_spine(dt, col, keys, desc, na_last, n_chunks, handle_nan)
+            off, doff = F.col("__rb__"), F.col("__db__")
+            nn = F.col("__nn__").cast("int")
+    # "keep" sorts NULLs first like na_last=False, then masks them below
+    ocs = _rank_keys(dtypes, cols, orders, na_last is True, nan_is_na)
+    r = _tie_rank(ties, keys, ocs, cols, tiebreak, seed, off, doff)
+    if na_last == "keep":
+        shift = (nn > 0).cast("int") if ties == "dense" else nn
+        r = F.when(F.col(col).isNull(), F.lit(None)).otherwise(r - shift)
+    out = sdf.withColumn(out_col, r)
+    if off is not None:
+        out = out.drop("__chunk__", "__rb__", "__db__", "__nn__")
+    return DT(out, key=dt.key, order_by=dt.order_by)
+
+
+def _rank_orders(order, desc: bool, n: int) -> list[int]:
+    """frank's per-column directions: ``order=`` (frankv, reference
+    #5489, tests.Rraw 2386 — ±1, a scalar recycles) takes precedence
+    over ``desc=`` with the reference's warning when both are given."""
+    if order is None:
+        return [-1 if desc else 1] * n
+    orders = (
+        [int(o) for o in order]
+        if isinstance(order, (list, tuple))
+        else [int(order)] * n
+    )
+    if len(orders) != n:
+        raise ValueError("order length must match cols")
     if any(o not in (1, -1) for o in orders):
         raise ValueError("order must be +1 or -1")
-    dtypes = dict(dt.df.dtypes)
+    if desc:
+        import warnings
+
+        warnings.warn(
+            "Both desc= and 'order' argument are provided; 'order'"
+            " will take precedence.",
+            RuntimeWarning,
+        )
+    return orders
+
+
+def _rank_keys(dtypes, cols, orders, na_last: bool, nan_is_na: bool):
+    """frank's sort keys. A float/double column whose NaN is NA takes
+    the two-level missing key (0=value/1=NaN/2=NA — NA outermost, NaN
+    adjacent, tests.Rraw 1988), ascending under na_last=True and
+    descending under False, then the value in its direction; ties need
+    no extra key because Spark's ordering already has NaN==NaN and
+    NULL==NULL. Other columns place NULLs last or first."""
     ocs = []
     for c, o in zip(cols, orders):
         d = o == -1
-        if dtypes.get(c) in ("float", "double"):
+        if nan_is_na and dtypes.get(c) in ("float", "double"):
             lvl = (
                 F.when(F.col(c).isNull(), F.lit(2))
                 .when(F.isnan(F.col(c)), F.lit(1))
@@ -944,11 +834,22 @@ def _frank_multi(
                 F.col(c).desc_nulls_first() if d
                 else F.col(c).asc_nulls_first()
             )
-    part = (
-        Window.partitionBy(*_namelist(by)) if by else Window.partitionBy()
-    )
+    return ocs
+
+
+def _tie_rank(ties, keys, ocs, cols, tiebreak, seed, off=None, doff=None):
+    """The one ties= ladder (reference src/frank.c): the rank of each
+    row in the window of ``keys`` ordered by ``ocs``; ties share every
+    ranked ``cols`` value. ``off``/``doff`` are the chunk-stitch spine's
+    rows/distinct values before the row's chunk: given, the window runs
+    per (keys, __chunk__) and they lift chunk ranks to global ones;
+    unsplit they are None."""
+    part = Window.partitionBy(*keys, *([] if off is None else ["__chunk__"]))
     w = part.orderBy(*ocs)
-    tie_w = Window.partitionBy(*(_namelist(by) + [str(c) for c in cols]))
+
+    def lift(r, o):
+        return r if o is None else r + o
+
     if ties == "random":
         if not tiebreak:
             raise ValueError(
@@ -962,172 +863,77 @@ def _frank_multi(
                 *[F.col(t).cast("string") for t in _namelist(tiebreak)],
             )
         )
-        r = F.row_number().over(part.orderBy(*ocs, salt.asc()))
+        r = lift(F.row_number().over(part.orderBy(*ocs, salt.asc())), off)
     elif ties in ("first", "last"):
+        # "last" numbers the tie group in reverse (reference
+        # src/frank.c ties.method="last"); with tiebreak= the order
+        # within ties is pinned (asc for first, desc for last),
+        # otherwise it is engine order (documented nondeterminism)
         if tiebreak:
             tb = [
                 F.col(t).asc() if ties == "first" else F.col(t).desc()
                 for t in _namelist(tiebreak)
             ]
-            r = F.row_number().over(part.orderBy(*ocs, *tb))
-        else:
-            r = F.row_number().over(w)
+            w = part.orderBy(*ocs, *tb)
+        r = lift(F.row_number().over(w), off)
     elif ties == "min":
-        r = F.rank().over(w)
+        r = lift(F.rank().over(w), off)
     elif ties == "dense":
-        r = F.dense_rank().over(w)
-    elif ties == "max":
-        r = F.rank().over(w) + F.count(F.lit(1)).over(tie_w).cast("int") - 1
-    elif ties == "average":
-        r = (
-            (2 * F.rank().over(w) + F.count(F.lit(1)).over(tie_w) - 1) / 2
-        ).cast("double")
+        r = lift(F.dense_rank().over(w), doff)
+    elif ties in ("max", "average"):
+        # the tie group's size; max = its min rank + size - 1 (size cast
+        # int: rank dtypes stay IntegerType like the other methods)
+        size = F.count(F.lit(1)).over(Window.partitionBy(*keys, *cols))
+        lo = lift(F.rank().over(w), off)
+        if ties == "max":
+            r = lo + size.cast("int") - 1
+        else:
+            r = ((2 * lo + size - 1) / 2).cast("double")
     else:
         raise ValueError(f"bad ties: {ties}")
-    return DT(dt.df.withColumn(out_col, r), key=dt.key, order_by=dt.order_by)
-
-
-def _frank_chunked(
-    dt: DT, col, ties, by, desc, out_col, tiebreak, seed, na_last,
-    n_chunks: int, handle_nan: bool = False,
-) -> DT:
-    """Chunk-stitched frank (see frank's n_chunks doc). Value chunks
-    come from the shared _chunked_frame (equal values share a chunk,
-    so tie groups never straddle a boundary — tie counts and dense
-    groups stay chunk-local facts); NULLs move to a dedicated chunk —
-    and, when NaN is missing (handle_nan), NaNs move to a SECOND
-    dedicated chunk adjacent to it, NA outermost (tests.Rraw 1988) —
-    that traverses FIRST for na_last False/"keep" and LAST for
-    na_last=True (the reference sorts NAs last as one tie group —
-    R/frank.R:52). Global rank = within-(key, chunk) rank + the
-    spine's cumulative row count before the chunk (cumulative
-    distinct-value count for dense)."""
-    if ties == "random" and not tiebreak:
-        raise ValueError(
-            "ties='random' needs tiebreak= unique-key columns for a "
-            "deterministic seeded permutation"
-        )
-    sdf, keys, _ = _chunked_frame(dt, by, order=[col], n_chunks=n_chunks)
-    chunk = F.when(F.col(col).isNull(), F.lit(-1)).otherwise(
-        F.col("__chunk__")
-    )
-    if handle_nan:
-        # NaN gets its own chunk (-2): one tie group adjacent to the
-        # NA chunk, inside it in traversal order (values, NaN, NA
-        # under na_last=True; NA, NaN, values under False)
-        chunk = (
-            F.when(F.col(col).isNull(), F.lit(-1))
-            .when(F.isnan(F.col(col)), F.lit(-2))
-            .otherwise(F.col("__chunk__"))
-        )
-    sdf = sdf.withColumn("__chunk__", chunk)
-    # traversal key: ascending value order (or negated for desc), with
-    # the null (and NaN) chunk pinned first (na_last False/"keep") or
-    # last (na_last=True) regardless of direction — NA outermost
-    null_first = na_last is not True
-    if desc:
-        null_tk = F.lit(-(n_chunks + 2)) if null_first else F.lit(2)
-        nan_tk = F.lit(-(n_chunks + 1)) if null_first else F.lit(1)
-        tk = (
-            F.when(F.col("__chunk__") == -1, null_tk)
-            .when(F.col("__chunk__") == -2, nan_tk)
-            .otherwise(-F.col("__chunk__"))
-        )
-    else:
-        null_tk = F.lit(-2) if null_first else F.lit(n_chunks + 1)
-        nan_tk = F.lit(-1) if null_first else F.lit(n_chunks)
-        tk = (
-            F.when(F.col("__chunk__") == -1, null_tk)
-            .when(F.col("__chunk__") == -2, nan_tk)
-            .otherwise(F.col("__chunk__"))
-        )
-    sdf = sdf.withColumn("__tk__", tk)
-
-    spine = sdf.groupBy(*keys, "__tk__").agg(
-        F.count(F.lit(1)).alias("__cnt__"),
-        (
-            F.count_distinct(F.col(col))
-            + F.max(F.col(col).isNull().cast("long"))
-        ).alias("__nd__"),
-        F.sum(F.col(col).isNull().cast("long")).alias("__nulls__"),
-    )
-    wsp = (
-        Window.partitionBy(*keys)
-        .orderBy("__tk__")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wall = Window.partitionBy(*keys).orderBy("__tk__").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offs = spine.select(
-        *keys, "__tk__",
-        F.coalesce(F.sum("__cnt__").over(wsp), F.lit(0)).alias("__rb__"),
-        F.coalesce(F.sum("__nd__").over(wsp), F.lit(0)).alias("__db__"),
-        F.sum("__nulls__").over(wall).alias("__nn__"),
-    )
-    sdf = sdf.join(F.broadcast(offs), [*keys, "__tk__"], "left")
-
-    c = F.col(col).desc_nulls_first() if desc else F.col(col).asc_nulls_first()
-    w_c = Window.partitionBy(*keys, "__tk__").orderBy(c)
-    if ties == "random":
-        salt = F.md5(
-            F.concat_ws(
-                ":",
-                F.lit(str(seed)),
-                *[F.col(t).cast("string") for t in _namelist(tiebreak)],
-            )
-        )
-        r = F.row_number().over(
-            Window.partitionBy(*keys, "__tk__").orderBy(c, salt.asc())
-        ) + F.col("__rb__")
-    elif ties in ("first", "last"):
-        if tiebreak:
-            tb = [
-                F.col(t).asc() if ties == "first" else F.col(t).desc()
-                for t in _namelist(tiebreak)
-            ]
-            r = F.row_number().over(
-                Window.partitionBy(*keys, "__tk__").orderBy(c, *tb)
-            ) + F.col("__rb__")
-        else:
-            r = F.row_number().over(w_c) + F.col("__rb__")
-    elif ties == "min":
-        r = F.rank().over(w_c) + F.col("__rb__")
-    elif ties == "dense":
-        r = F.dense_rank().over(w_c) + F.col("__db__")
-    elif ties == "max":
-        tie_w = Window.partitionBy(*(_namelist(by) + [col]))
-        r = (
-            F.rank().over(w_c) + F.col("__rb__")
-            + F.count(F.lit(1)).over(tie_w) - 1
-        )
-    elif ties == "average":
-        tie_w = Window.partitionBy(*(_namelist(by) + [col]))
-        r = (
-            (
-                2 * (F.rank().over(w_c) + F.col("__rb__"))
-                + F.count(F.lit(1)).over(tie_w) - 1
-            ) / 2
-        ).cast("double")
-    else:
-        raise ValueError(f"bad ties: {ties}")
-    if ties != "average":
-        # unsplit rank()/dense_rank()/row_number() are IntegerType; the
-        # long spine offsets must not widen the output schema
+    if off is not None and ties != "average":
+        # the long spine offsets must not widen the IntegerType rank
         r = r.cast("int")
-    if na_last == "keep":
-        shift = (
-            (F.col("__nn__") > 0).cast("int")
-            if ties == "dense"
-            else F.col("__nn__")
-        )
-        r = F.when(F.col(col).isNull(), F.lit(None)).otherwise(r - shift)
-        if ties != "average":
-            r = r.cast("int")
-    out = sdf.withColumn(out_col, r).drop(
-        "__chunk__", "__tk__", "__rb__", "__db__", "__nn__"
+    return r
+
+
+def _frank_spine(dt: DT, col, keys, desc, na_last, n_chunks: int,
+                 handle_nan: bool):
+    """Chunk-stitched frank's rows (see frank's n_chunks doc): chunks
+    come from _chunked_frame on the ranked column (equal values share
+    a chunk, so tie groups never straddle a boundary — tie counts and
+    dense groups stay chunk-local facts). NULLs move to a dedicated
+    chunk — and, when NaN is missing (handle_nan), NaNs to a SECOND one
+    adjacent to it, NA outermost (tests.Rraw 1988) — traversed FIRST
+    for na_last False/"keep" and LAST for na_last=True (the reference
+    sorts NAs last as one tie group — R/frank.R:52). The spine carries
+    the rows (__rb__), distinct values (__db__, for dense) and NULLs
+    (__nn__, for "keep") of the chunks before each row's."""
+    sdf, _, _ = _chunked_frame(
+        dt, keys, [f"-{col}" if desc else col], n_chunks
     )
-    return DT(out, key=dt.key, order_by=dt.order_by)
+    first = na_last is not True
+    chunk = F.when(F.col(col).isNull(), F.lit(-2 if first else n_chunks + 1))
+    if handle_nan:
+        chunk = chunk.when(F.isnan(F.col(col)), F.lit(-1 if first else n_chunks))
+    sdf = sdf.withColumn("__chunk__", chunk.otherwise(F.col("__chunk__")))
+    isnull = F.col(col).isNull().cast("long")
+    return _carry_spine(
+        sdf, keys,
+        [
+            F.count(F.lit(1)).alias("__cnt__"),
+            (F.count_distinct(F.col(col)) + F.max(isnull)).alias("__nd__"),
+            F.sum(isnull).alias("__nulls__"),
+        ],
+        lambda w: [
+            F.coalesce(F.sum(a).over(w), F.lit(0)).alias(b)
+            for a, b in (
+                ("__cnt__", "__rb__"), ("__nd__", "__db__"),
+                ("__nulls__", "__nn__"),
+            )
+        ],
+        onto=sdf,
+    )
 
 
 @_carries_probe
@@ -1172,11 +978,10 @@ def _rleid_chunked(
     dt: DT, cols, by, order, out_col: str, n_chunks: int
 ) -> DT:
     """Chunk-stitched rleid (see rleid's n_chunks doc). Within-chunk
-    run ids + spine offsets: offset(c) = cumulative run count of the
-    chunks before c MINUS the cumulative count of boundary merges up
-    to and including c's own leading boundary (a run straddling k
-    boundaries loses k double-counts — the cumulative form chains
-    exactly)."""
+    run ids + spine offsets: offset(c) = the run count of the chunks
+    before c MINUS the boundary merges up to and including c's own
+    leading boundary (a run straddling k boundaries loses k
+    double-counts — the cumulative form chains exactly)."""
     from ..core import _ocol
 
     names = _namelist(cols)
@@ -1196,37 +1001,33 @@ def _rleid_chunked(
         sdf.withColumn("__lrle__", F.sum(flag).over(cum_in).cast("long"))
         .withColumn("__rn__", rn)
     )
-    spine = local.groupBy(*keys, "__chunk__").agg(
-        F.max("__lrle__").alias("__runs__"),
-        F.min_by(packed, F.col("__rn__")).alias("__first__"),
-        F.max_by(packed, F.col("__rn__")).alias("__last__"),
-    )
-    desc0 = ordn[0].startswith("-")
-    wsp = Window.partitionBy(*keys).orderBy(
-        F.col("__chunk__").desc() if desc0 else F.col("__chunk__").asc()
-    )
-    prev_last = F.lag("__last__").over(wsp)
-    # field-wise null-safe equality (a struct EqualNullSafe would treat
-    # a struct with null FIELDS as a plain value; the run semantics are
-    # per-column NA == NA)
-    eq = F.lit(True)
-    for c in names:
-        eq = eq & F.col("__first__")[c].eqNullSafe(prev_last[c])
-    merge = F.when(prev_last.isNotNull() & eq, F.lit(1)).otherwise(F.lit(0))
-    spine = spine.withColumn(
-        "__off__",
-        (
-            F.coalesce(
-                F.sum("__runs__").over(
-                    wsp.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-            - F.sum(merge).over(wsp.rowsBetween(Window.unboundedPreceding, 0))
-        ).cast("long"),
-    ).select(*keys, "__chunk__", "__off__")
+
+    def carry(w):
+        # every spine row holds a non-NULL struct, so the last one
+        # before is exactly the previous chunk's last row
+        prev_last = F.last("__last__").over(w)
+        # field-wise null-safe equality (a struct EqualNullSafe would
+        # treat a struct with null FIELDS as a plain value; the run
+        # semantics are per-column NA == NA)
+        eq = F.lit(True)
+        for c in names:
+            eq = eq & F.col("__first__")[c].eqNullSafe(prev_last[c])
+        merge = F.when(prev_last.isNotNull() & eq, F.lit(1)).otherwise(F.lit(0))
+        before = F.coalesce(F.sum("__runs__").over(w), F.lit(0)) - F.coalesce(
+            F.sum(merge).over(w), F.lit(0)
+        )
+        return [(before - merge).cast("long").alias("__off__")]
+
     out = (
-        local.join(F.broadcast(spine), [*keys, "__chunk__"], "left")
+        _carry_spine(
+            local, keys,
+            [
+                F.max("__lrle__").alias("__runs__"),
+                F.min_by(packed, F.col("__rn__")).alias("__first__"),
+                F.max_by(packed, F.col("__rn__")).alias("__last__"),
+            ],
+            carry, onto=local,
+        )
         .withColumn(out_col, (F.col("__lrle__") + F.col("__off__")).cast("long"))
         .drop("__chunk__", "__lrle__", "__rn__", "__off__")
     )
@@ -1249,7 +1050,9 @@ def rowid(
     n_chunks = _resolve_n_chunks(dt.df, _namelist(cols), n_chunks)
     if n_chunks is not None and n_chunks > 1:
         return DT(
-            _chunked_row_number(dt, cols, order, n_chunks, out=out_col),
+            _chunked_row_number(
+                *_chunked_frame(dt, cols, order, n_chunks), out=out_col
+            ).drop("__chunk__"),
             key=dt.key,
             order_by=dt.order_by,
         )
@@ -1263,85 +1066,29 @@ def rowid(
     )
 
 
-def _chunked_frame(dt: DT, by, order, n_chunks: int):
-    """Shared chunk assignment for the running-operator carry stitch:
-    value-chunk each key's rows on the first order column (equal values
-    share a chunk). NaN order values are excluded from the min/max
-    bounds (a single NaN would otherwise poison the chunk width) and
-    routed to the HIGHEST chunk — consistent with Spark ordering NaN
-    after +Inf under asc (and first under desc, which consumers express
-    by reversing chunk traversal). Returns (df+__chunk__, keys, order
-    names)."""
-    keys = _namelist(by)
-    ordn = _namelist(order) or dt.order_by
-    if not ordn:
-        raise ValueError("n_chunks needs an ordering (order= or order_by)")
-    first = ordn[0]
-    vcol = F.col(first[1:] if first.startswith("-") else first).cast("double")
-    sdf = dt.df
-    fin = F.when(~F.isnan(vcol), vcol)  # NULL for NaN, pass-through else
-    bcols = [F.min(fin).alias("__tlo__"), F.max(fin).alias("__thi__")]
-    if keys:
-        sdf = sdf.join(F.broadcast(sdf.groupBy(*keys).agg(*bcols)), keys, "left")
-    else:
-        sdf = sdf.crossJoin(F.broadcast(sdf.agg(*bcols)))
-    width = (F.col("__thi__") - F.col("__tlo__")) / F.lit(float(n_chunks))
-    sdf = sdf.withColumn(
-        "__chunk__",
-        F.when(vcol.isNotNull() & F.isnan(vcol), F.lit(n_chunks - 1))
-        .otherwise(
-            F.coalesce(
-                F.when(F.col("__tlo__").isNull() | (width <= 0), F.lit(0))
-                .otherwise(
-                    F.least(
-                        F.lit(n_chunks - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor((vcol - F.col("__tlo__")) / width),
-                        ),
-                    )
-                ),
-                F.lit(0),
-            )
-        ).cast("int"),
-    ).drop("__tlo__", "__thi__")
-    return sdf, keys, ordn
-
-
 def _running_fill_chunked(
     dt: DT, cols, by, order, suffix: str, n_chunks: int, reverse: bool
 ) -> DT:
     """Chunk-stitched LOCF/NOCB (the hot-key mitigation for running
-    fills — round-9 verdict item 3, same carry-in shape as
-    asof_join(n_chunks=)): per-(key, chunk) running fill + a per-column
-    last-non-null chunk summary (rank-keyed max_by), carried across the
-    tiny chunk spine by one window and broadcast back; output =
-    coalesce(in-chunk fill, carry). Exact for every column
-    independently (NULL runs spanning several chunks chain through the
-    spine's last(ignorenulls))."""
+    fills, same carry-in shape as asof_join(n_chunks=)): per-(key,
+    chunk) running fill + a per-column last-non-null chunk summary
+    (rank-keyed max_by), carried across the chunk spine — backwards for
+    NOCB — and coalesced in: output = coalesce(in-chunk fill, carry).
+    Exact for every column independently (NULL runs spanning several
+    chunks chain through the spine's last(ignorenulls))."""
     from ..core import _ocol, _oflip
 
     sdf, keys, ordn = _chunked_frame(dt, by, order, n_chunks)
     names = _namelist(cols)
-    # NaN participates as NA (same rule as the unsplit path's _nan_na);
-    # masked into temp source columns so an original column kept in the
-    # output (suffix != "") is untouched
-    dtypes = dict(sdf.dtypes)
-    sdf = sdf.withColumns({
-        f"__src_{c}__": (
-            F.when(F.isnan(F.col(c)), F.lit(None)).otherwise(F.col(c))
-            if dtypes.get(c) in ("double", "float")
-            else F.col(c)
-        )
-        for c in names
-    })
+    # NaN participates as NA, masked into temp source columns so an
+    # original column kept in the output (suffix != "") is untouched
+    sdf = sdf.withColumns({f"__src_{c}__": _nan_na(dt, c) for c in names})
     eff = [_oflip(c) for c in ordn] if reverse else list(ordn)
     w_in = Window.partitionBy(*keys, "__chunk__").orderBy(
         *[_ocol(c) for c in eff]
     )
     frame = w_in.rowsBetween(Window.unboundedPreceding, 0)
-    rn = F.row_number().over(w_in)
-    ranked = sdf.withColumn("__rn__", rn)
+    ranked = sdf.withColumn("__rn__", F.row_number().over(w_in))
     aggs = [
         F.max_by(
             F.col(f"__src_{c}__"),
@@ -1349,24 +1096,19 @@ def _running_fill_chunked(
         ).alias(f"__end_{c}__")
         for c in names
     ]
-    ends = ranked.groupBy(*keys, "__chunk__").agg(*aggs)
-    spine = sdf.select(*keys, "__chunk__").distinct().join(
-        ends, [*keys, "__chunk__"], "left"
-    )
-    wsp = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__chunk__").desc() if reverse else F.col("__chunk__").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = spine.select(
-        *keys, "__chunk__",
-        *[
-            F.last(f"__end_{c}__", ignorenulls=True).over(wsp)
+
+    def carry(w):
+        return [
+            F.last(f"__end_{c}__", ignorenulls=True).over(w)
             .alias(f"__carry_{c}__")
             for c in names
-        ],
+        ]
+
+    joined = _carry_spine(
+        ranked, keys, aggs,
+        carry=None if reverse else carry, back=carry if reverse else None,
+        onto=sdf,
     )
-    joined = sdf.join(F.broadcast(carries), [*keys, "__chunk__"], "left")
     out = {
         c + suffix: F.coalesce(
             F.last(F.col(f"__src_{c}__"), ignorenulls=True).over(frame),
@@ -1499,37 +1241,17 @@ def cumfn(
             .orderBy(*[_ocol(c) for c in ordn])
             .rowsBetween(Window.unboundedPreceding, 0)
         )
-        ends = sdf.groupBy(*keys, "__chunk__").agg(
-            *[fns[fun](F.col(c)).alias(f"__tot_{c}__") for c in names]
-        )
-        spine = sdf.select(*keys, "__chunk__").distinct().join(
-            ends, [*keys, "__chunk__"], "left"
-        )
-        # _chunked_frame's chunk index is VALUE-based; under a desc
-        # first order key the global traversal runs high chunk -> low,
-        # so the carry accumulates over HIGHER chunks (the same
-        # direction rule _rleid_chunked and _running_fill_chunked
-        # apply; missing here until round 10 — cumfn(n_chunks=) with a
-        # desc order silently accumulated the wrong chunks' totals)
-        desc0 = ordn[0].startswith("-")
-        wsp = (
-            Window.partitionBy(*keys)
-            .orderBy(
-                F.col("__chunk__").desc() if desc0
-                else F.col("__chunk__").asc()
-            )
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
         comb = {"sum": F.sum, "count": F.sum, "min": F.min,
                 "max": F.max, "prod": F.product}[fun]
-        carries = spine.select(
-            *keys, "__chunk__",
-            *[
-                comb(F.col(f"__tot_{c}__")).over(wsp).alias(f"__carry_{c}__")
+        joined = _carry_spine(
+            sdf, keys,
+            [fns[fun](F.col(c)).alias(f"__tot_{c}__") for c in names],
+            lambda w: [
+                comb(F.col(f"__tot_{c}__")).over(w).alias(f"__carry_{c}__")
                 for c in names
             ],
+            onto=sdf,
         )
-        joined = sdf.join(F.broadcast(carries), [*keys, "__chunk__"], "left")
         out = {}
         for c in names:
             name = f"{c}_cum{fun}" if give_names else c
@@ -1688,53 +1410,12 @@ def frollapply_multi(
     )
 
 
-def _chunked_row_number(dt: DT, by, order, n_chunks: int, out: str = "__pos__"):
-    """Global per-key row position WITHOUT a whole-key window task:
-    per-(key, value-chunk) row_number + the spine's exclusive
-    cumulative chunk-count carry (broadcast back). Integer adds —
-    identical to row_number over the unsplit window."""
-    from ..core import _ocol
-
-    sdf, keys, ordn = _chunked_frame(dt, by, order, n_chunks)
-    w_in = Window.partitionBy(*keys, "__chunk__").orderBy(
-        *[_ocol(o) for o in ordn]
-    )
-    # value-based chunk index: reverse the spine under a desc first
-    # order key (global traversal is high chunk -> low there)
-    wsp = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__chunk__").desc() if ordn[0].startswith("-")
-            else F.col("__chunk__").asc()
-        )
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        sdf.groupBy(*keys, "__chunk__")
-        .agg(F.count(F.lit(1)).alias("__n_tot__"))
-        .select(
-            *keys,
-            "__chunk__",
-            F.coalesce(F.sum("__n_tot__").over(wsp), F.lit(0)).alias(
-                "__n_car__"
-            ),
-        )
-    )
-    return (
-        sdf.withColumn("__rn_in__", F.row_number().over(w_in))
-        .join(F.broadcast(carry), [*keys, "__chunk__"], "left")
-        .withColumn(out, (F.col("__rn_in__") + F.col("__n_car__")).cast("int"))
-        .drop("__rn_in__", "__n_car__", "__chunk__")
-    )
-
-
 def _adaptive_running_chunked(dt: DT, c, by, order, n_chunks: int,
                               c2=None):
     """Chunk-stitched (__pos__, __cs__, __cc__) for frolladaptive (see
-    its n_chunks doc): per-(key, value-chunk) row_number / running
-    DECIMAL sum / running non-null count, plus one tiny spine of
-    per-chunk totals combined by an EXCLUSIVE running window and
-    broadcast back. All three carries are associative (integer adds and
+    its n_chunks doc): per-(key, chunk) row_number / running DECIMAL
+    sum / running non-null count, plus the chunk spine's totals of the
+    chunks before. All three carries are associative (integer adds and
     DECIMAL adds), so the stitched columns equal the unsplit plan's
     bit-for-bit. ``c2=`` threads a SECOND running DECIMAL sum (the sum
     of squares var/sd needs) through the same windows and spine — one
@@ -1753,39 +1434,24 @@ def _adaptive_running_chunked(dt: DT, c, by, order, n_chunks: int,
     )
     if c2 is not None:
         base = base.withColumn("__cs2_in__", F.sum(c2).over(cum_in))
-    ends = sdf.groupBy(*keys, "__chunk__").agg(
-        F.count(F.lit(1)).alias("__n_tot__"),
-        F.sum(c).alias("__s_tot__"),
-        F.count(c).alias("__c_tot__"),
-        *([F.sum(c2).alias("__s2_tot__")] if c2 is not None else []),
-    )
-    # value-based chunk index: reverse the spine under a desc first
-    # order key (global traversal is high chunk -> low there)
-    wsp = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__chunk__").desc() if ordn[0].startswith("-")
-            else F.col("__chunk__").asc()
-        )
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = ends.select(
-        *keys,
-        "__chunk__",
-        F.coalesce(F.sum("__n_tot__").over(wsp), F.lit(0)).alias("__n_car__"),
-        F.coalesce(
-            F.sum("__s_tot__").over(wsp), F.lit(0).cast("decimal(18,4)")
-        ).alias("__s_car__"),
-        F.coalesce(F.sum("__c_tot__").over(wsp), F.lit(0)).alias("__c_car__"),
-        *([
-            F.coalesce(
-                F.sum("__s2_tot__").over(wsp),
-                F.lit(0).cast("decimal(38,8)"),
-            ).alias("__s2_car__")
-        ] if c2 is not None else []),
-    )
+    # (total, carry, zero): the carry is 0 before the first chunk
+    sums = [
+        (F.count(F.lit(1)), "__n_car__", F.lit(0)),
+        (F.sum(c), "__s_car__", F.lit(0).cast("decimal(18,4)")),
+        (F.count(c), "__c_car__", F.lit(0)),
+        *([(F.sum(c2), "__s2_car__", F.lit(0).cast("decimal(38,8)"))]
+          if c2 is not None else []),
+    ]
     out = (
-        base.join(F.broadcast(carry), [*keys, "__chunk__"], "left")
+        _carry_spine(
+            sdf, keys,
+            [tot.alias(f"__tot{i}__") for i, (tot, _, _) in enumerate(sums)],
+            lambda w: [
+                F.coalesce(F.sum(f"__tot{i}__").over(w), zero).alias(car)
+                for i, (_, car, zero) in enumerate(sums)
+            ],
+            onto=base,
+        )
         .withColumn("__pos__", (F.col("__pos_in__") + F.col("__n_car__")).cast("int"))
         .withColumn(
             "__cs__",
@@ -2181,7 +1847,9 @@ def _frolladaptive_expand(
         srcv = F.when(F.isnan(F.col(col)), F.lit(None)).otherwise(F.col(col))
     n_chunks = _resolve_n_chunks(dt.df, grp, n_chunks)
     if n_chunks is not None and n_chunks > 1:
-        base = _chunked_row_number(dt, by, order, n_chunks)
+        base = _chunked_row_number(
+            *_chunked_frame(dt, by, order, n_chunks)
+        ).drop("__chunk__")
     else:
         base = dt.df.withColumn(
             "__pos__", F.row_number().over(win(dt, by=by, order=order))

@@ -62,3 +62,20 @@ def test_oracle_coverage_complete():
     assert q == set(_registry())
     assert o <= q
     assert not (q - o), f"queries without oracles: {sorted(q - o)}"
+
+
+def test_driver_window_is_fifty_registered_names():
+    """The driver's correctness gate reads the FIRST 50 entries of
+    ``queries()``: ``_PRIORITY`` must fill all of them with distinct
+    registered names (a stale or unregistered name silently shrinks the
+    window — regenerate it with tools/rotate_window.py)."""
+    import sys
+
+    sys.path.insert(0, str(REPO))
+    import __spark_entry__ as entry
+
+    window = entry._PRIORITY
+    assert len(window) == 50, len(window)
+    assert len(set(window)) == 50, "duplicate names in _PRIORITY"
+    missing = [q for q in window if q not in _registry()]
+    assert not missing, f"unregistered names in _PRIORITY: {missing}"

@@ -1036,6 +1036,8 @@ def _sig(df, col):
 @SET
 @given(ts=ordvals, desc=st.booleans(), nc=st.integers(2, 5))
 def test_froll_stitch_equivalence_property(spark, ts, desc, nc):
+    """The halo stitch: froll, and shift(fill=), whose out-of-range
+    fill reads the stitch's global rank and count (with_rank)."""
     from data_table_spark.operators.window import froll
 
     pdf = _rows(ts)
@@ -1045,14 +1047,19 @@ def test_froll_stitch_equivalence_property(spark, ts, desc, nc):
     a = froll(dt, "sum", "v", 3, by=["g"]).df
     b = froll(dt, "sum", "v", 3, by=["g"], n_chunks=nc).df
     assert _sig(a, "v_rollsum_3") == _sig(b, "v_rollsum_3")
+    for type_ in ("lag", "lead"):
+        a = shift(dt, "v", 2, fill=-1.0, type_=type_, by=["g"]).df
+        b = shift(dt, "v", 2, fill=-1.0, type_=type_, by=["g"], n_chunks=nc).df
+        col = f"v_{type_}_2"
+        assert _sig(a, col) == _sig(b, col), type_
 
 
 @SET
 @given(ts=ordvals, desc=st.booleans(), nc=st.integers(2, 5))
 def test_cumfn_stitch_equivalence_property(spark, ts, desc, nc):
-    """Covers BOTH directions: the value-based chunk index means a desc
-    first order key must reverse the carry spine (the r10 fix — cumfn
-    silently accumulated the wrong chunks' totals under desc)."""
+    """Covers BOTH directions: chunks are numbered in traversal order,
+    so the carry spine needs no direction of its own (cumfn once
+    accumulated the wrong chunks' totals under a desc first key)."""
     from data_table_spark.operators.window import cumfn
 
     pdf = _rows(ts)
@@ -1066,19 +1073,34 @@ def test_cumfn_stitch_equivalence_property(spark, ts, desc, nc):
 
 
 @SET
-@given(ts=ordvals, nc=st.integers(2, 5))
-def test_nafill_stitch_equivalence_property(spark, ts, nc):
-    from data_table_spark.operators.window import nafill_locf
+@example(
+    ts=[float(i) for i in range(12)], desc=True, nc=3,
+    holes=[False, True, True, False, True, True, True, False, True, True,
+           False, True, False, False],
+)
+@given(
+    ts=ordvals, desc=st.booleans(), nc=st.integers(2, 5),
+    holes=st.lists(st.booleans(), min_size=14, max_size=14),
+)
+def test_nafill_stitch_equivalence_property(spark, ts, desc, nc, holes):
+    """LOCF and NOCB with n_chunks= vs unsplit, both directions of the
+    first order key. The example is the descending-order fault: with
+    v = [1,NA,NA,4,NA,NA,NA,8,NA,NA,11,NA] over t = 0..11 ordered by
+    -t, the stitched LOCF read 8 at t=11 (unsplit: NA) and NOCB read 11
+    instead of 4 at t=4..6, because the spine walked chunks by value
+    instead of in traversal order."""
+    from data_table_spark.operators.window import nafill_locf, nafill_nocb
 
     pdf = _rows(ts)
     pdf["rid"] = range(len(pdf))
-    # fill the VALUE column with nulls too (the fill target)
-    pdf.loc[pdf.index % 3 == 0, "v"] = None
+    # the fill target: distinct values, so a wrong carry is visible
+    pdf["v"] = [None if holes[i] else float(i + 1) for i in range(len(pdf))]
     sdf = spark.createDataFrame(pdf)
-    dt = DT(sdf, order_by=["t", "rid"])
-    a = nafill_locf(dt, "v", by=["g"]).df
-    b = nafill_locf(dt, "v", by=["g"], n_chunks=nc).df
-    assert _sig(a, "v") == _sig(b, "v")
+    dt = DT(sdf, order_by=["-t" if desc else "t", "rid"])
+    for fill in (nafill_locf, nafill_nocb):
+        a = fill(dt, "v", by=["g"]).df
+        b = fill(dt, "v", by=["g"], n_chunks=nc).df
+        assert _sig(a, "v") == _sig(b, "v"), fill.__name__
 
 
 @SET
@@ -1099,11 +1121,15 @@ def test_frank_stitch_equivalence_property(spark, ts, desc, nc):
 
 
 @SET
-@given(ts=ordvals, nc=st.integers(2, 5))
-def test_rleid_stitch_equivalence_property(spark, ts, nc):
+@given(
+    ts=ordvals, nc=st.integers(2, 5),
+    order=st.sampled_from([["rid"], ["t", "rid"], ["-t", "rid"]]),
+)
+def test_rleid_stitch_equivalence_property(spark, ts, nc, order):
     """rleid(n_chunks=) vs unsplit: random runs (values drawn from a
     tiny domain force boundary-straddling runs; NULL==NULL counts as
-    same-run per the reference rule)."""
+    same-run per the reference rule), chunked on the row id or on the
+    NULL/NaN-bearing t in either direction."""
     from data_table_spark.operators.window import rleid
 
     pdf = _rows(ts)
@@ -1114,37 +1140,78 @@ def test_rleid_stitch_equivalence_property(spark, ts, nc):
     ]
     sdf = spark.createDataFrame(pdf)
     dt = DT(sdf, order_by=["rid"])
-    a = rleid(dt, "runv", by=["g"], order=["rid"]).df
-    b = rleid(dt, "runv", by=["g"], order=["rid"], n_chunks=nc).df
+    a = rleid(dt, "runv", by=["g"], order=order).df
+    b = rleid(dt, "runv", by=["g"], order=order, n_chunks=nc).df
     assert _sig(a, "rleid") == _sig(b, "rleid")
 
 
 @SET
+@given(ts=ordvals, desc=st.booleans(), nc=st.integers(2, 5))
+def test_rank_carry_stitch_equivalence_property(spark, ts, desc, nc):
+    """The chunked-rank carries vs unsplit under random NULL/NaN/tie
+    order values, both directions: rowid (_chunked_row_number),
+    frolladaptive sum (the running-sum spine) and max (the halo stitch
+    with its global rank)."""
+    from data_table_spark.operators.window import frolladaptive, rowid
+
+    pdf = _rows(ts)
+    pdf["rid"] = range(len(pdf))
+    pdf["n"] = [i % 3 + 1 for i in range(len(pdf))]
+    sdf = spark.createDataFrame(pdf)
+    dt = DT(sdf, order_by=["-t" if desc else "t", "rid"])
+    a = rowid(dt, "g").df
+    b = rowid(dt, "g", n_chunks=nc).df
+    assert _sig(a, "rowid") == _sig(b, "rowid")
+    for fun in ("sum", "max"):
+        a = frolladaptive(dt, "v", "n", by=["g"], fun=fun).df
+        b = frolladaptive(dt, "v", "n", by=["g"], fun=fun, n_chunks=nc).df
+        assert _sig(a, "v_adaptive") == _sig(b, "v_adaptive"), fun
+
+
+times = st.lists(
+    st.one_of(
+        st.integers(0, 20).map(float), st.none(), st.just(float("nan"))
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+@SET
 @given(
-    xts=st.lists(st.integers(0, 20), min_size=1, max_size=8),
-    its=st.lists(st.integers(0, 20), min_size=1, max_size=8),
+    xts=times,
+    its=times,
     roll=st.sampled_from([True, "nocb", "nearest"]),
     nc=st.integers(2, 5),
 )
 def test_asof_stitch_equivalence_property(spark, xts, its, roll, nc):
     """asof_join(n_chunks=) vs unsplit over random X/I timelines with
-    duplicate and exactly-matching times (the tag tiebreak cases)."""
+    duplicate and exactly-matching times (the tag tiebreak cases) and
+    NULL/NaN times, which the chunking routes to the chunk Spark's sort
+    puts them in."""
     from data_table_spark.operators.asof import asof_join
 
     x = DT(spark.createDataFrame(
-        [(1, float(t), float(j)) for j, t in enumerate(xts)],
-        ["k", "tx", "xv"],
+        [(1, t, float(j)) for j, t in enumerate(xts)],
+        "k long, tx double, xv double",
     ))
     i = DT(spark.createDataFrame(
-        [(1, float(t)) for t in its], ["k", "ti"]
+        [(1, t) for t in its], "k long, ti double"
     ))
+
+    def canon(v):
+        # NULL and NaN are not orderable against numbers: tag them
+        if v is None:
+            return (0, 0.0)
+        return (1, 0.0) if v != v else (2, v)
 
     def run(n):
         out = asof_join(
             x, i, on=["k"], time_x="tx", time_i="ti", roll=roll, n_chunks=n
         ).df
         return sorted(
-            (r["ti"], r["xv"]) for r in out.select("ti", "xv").collect()
+            (canon(r["ti"]), canon(r["xv"]))
+            for r in out.select("ti", "xv").collect()
         )
 
     assert run(None) == run(nc)
