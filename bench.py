@@ -1,11 +1,15 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 dir named in ``main``) in a ``get_spark`` session (sized to the
+machine; ``SPARK_GRAFT_CPUS`` overrides the slots) and prints ONE JSON
+line::
 
     {"metric": "total_headline_sec", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "sf": 0.1,
+     "queries_task_cpu_s": {"q1": sec, ...}, "total_task_cpu_s": N,
+     "ambient_probe": {"start": sec, "end": sec}, "conf": {...},
+     "input_layout": {...}, "released_rdds": {"q1": n, ...}}
 
 Each query is measured REPS (3) times and the per-query MEDIAN is
 reported: one-shot numbers on this box carry +/-50% ambient noise
@@ -18,16 +22,23 @@ which frees the intermediates it materialized outside the timer. No
 per-query caching — every rep re-scans parquet, so the real scan cost
 stays in.
 
-Timing action — RE-BASELINED in round 8. Through BENCH_r07 the action
-was ``df.count()``; Catalyst prunes Window operators under a bare
-count (row count is window-invariant), so the window-shaped queries
-(froll_mean_sum, shift_lag_lead, the window half of asof) were timing
-a scan-only plan. The action is now a full-width reduction —
-``count(*) + sum(xxhash64(all columns) % p)`` — which forces every
-output column to be computed while still collecting one row. r8 window
--query numbers are therefore HIGHER than r7's for the honest reason;
-cross-round continuity for the unaffected queries is unchanged and the
-legacy-14 subtotal is emitted for the diff.
+Two readings per query. ``queries`` is wall seconds, the headline
+series. ``queries_task_cpu_s`` is the executor CPU-seconds of
+every task the query's jobs ran (build jobs included), summed over the
+reps and divided by REPS, read from Spark's status store through
+perfbench's ``SparkProbe``; an ambient stall stretches wall time but
+not task CPU. The only in-run control is ``ambient_probe``: gforce_q1
+timed once at session start and once at session end.
+
+One series, ``value`` = the sum of ``queries``, re-based twice:
+
+- round 8: the headline set grew from 14 to 19 queries, and the timing
+  action changed from ``df.count()`` to the full-width reduction of
+  ``fingerprint`` (a bare count lets Catalyst prune Window operators,
+  so the window-shaped queries had timed a scan-only plan);
+- round 9: line_dedup_boilerplate joined, making the 20 of ``HEADLINE``.
+
+Across a re-base compare per-query entries, not totals.
 
 Measurement core: ``fingerprint`` (the timed action), ``time_median``
 (median-of-reps, every sample inside ``core.query_scope``),
@@ -85,10 +96,6 @@ HEADLINE = [
     # r9 continuation addition:
     "line_dedup_boilerplate",  # line-level boilerplate removal (CCNet family)
 ]
-
-# The headline set was 14 queries through BENCH_r07; the legacy subtotal
-# is reported alongside so cross-round continuity stays one subtraction.
-LEGACY14 = HEADLINE[:14]
 
 
 def scan_parallel_copy(sf_dir: str, target_bytes: int = 512 << 10,
@@ -239,6 +246,8 @@ def fingerprint(sdf) -> tuple[int, int | None]:
 
 
 def main() -> None:
+    from perfbench.probes import SparkProbe
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # scan-parallel input layout (see scan_parallel_copy). Any failure
     # building the copy falls back to the original dir — the bench line
@@ -250,13 +259,11 @@ def main() -> None:
               file=sys.stderr)
         data_dir, layout_info = sf_dir, {"mode": "original", "error": str(e)}
     spark = start_session("data-table-spark-bench", data_dir)
+    stages = SparkProbe(spark)
 
-    # Ambient probes (VERDICT r6 item 2): the same fixed query timed once
-    # at session start and once at session end, plus the session conf that
-    # could move timings. BENCH_r06 read 1.54x r5 on byte-identical code;
-    # with these in the artifact, a driver-side ambient shift is
-    # measurable from the JSON itself (probe_end/probe_start far from 1
-    # == the box moved under us mid-run).
+    # The in-run control: the same fixed query timed once at session
+    # start and once at session end, plus the session conf that could
+    # move timings (end/start far from 1 == the box moved mid-run).
     def probe() -> float:
         t = time_median(lambda: QUERIES["gforce_q1"](spark, data_dir), 1)
         return round(t.median, 4)
@@ -267,106 +274,48 @@ def main() -> None:
         "spark.sql.files.maxPartitionBytes", "spark.master",
     ]
     conf = {k: spark.conf.get(k, None) for k in conf_keys}
+    probe_start = probe()
 
-    # Ambient NORMALIZATION (VERDICT r9 "Next round" #2): three rounds of
-    # legacy14 drift (9.78 -> 11.70 -> 14.91 s) were each adjudicated as
-    # host noise only via out-of-band quiet-box reruns. Make the artifact
-    # self-normalizing instead: interleave the fixed probe query BETWEEN
-    # every headline block and report each headline as a RATIO to the
-    # mean of its two adjacent probes. The ratio is unitless and
-    # host-speed-invariant — a slow box inflates numerator and
-    # denominator together — so cross-round regression reads straight
-    # off queries_norm / total_*_norm without a quiet-box appeal. Raw
-    # seconds stay in `queries` for continuity with BENCH_r01-r09.
-    probes: list[float] = [probe()]
-    probe_start = probes[0]
-
-    names = [n for n in HEADLINE if n in QUERIES]
     # max(1, ·): reps<=0 would silently skip every query and emit a fake
     # all-zero benchmark line
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    # fall back: if a headline name is missing, still produce a line
     timings: dict[str, float] = {}
-    probe_pair: dict[str, tuple[float, float]] = {}
+    task_cpu: dict[str, float] = {}
     released: dict[str, int] = {}
-    for name in names:
-        fn = QUERIES[name]
+    for name in HEADLINE:
+        stages.new_jobs()  # start the job window at this query
         try:
-            t = time_median(lambda: fn(spark, data_dir), reps)
+            t = time_median(lambda: QUERIES[name](spark, data_dir), reps)
         except Exception as e:  # one broken query must not kill the line
             print(f"# {name}: FAILED {e}", file=sys.stderr)
-            # still close the probe bracket so the series stays an
-            # honest record of the whole run
-            probes.append(probe())
             continue
+        cpu = stages.stage_totals(stages.new_jobs())["task_cpu_s"] / reps
         if t.released:
             released[name] = t.released
         timings[name] = round(t.median, 4)
-        probes.append(probe())
-        probe_pair[name] = (probes[-2], probes[-1])
+        task_cpu[name] = round(cpu, 4)
         detail = "/".join(f"{s:.2f}" for s in t.samples)
-        print(
-            f"# {name}: median {timings[name]:.3f}s of [{detail}] "
-            f"({t.n} rows; local probe {probes[-2]:.2f}/{probes[-1]:.2f})",
-            file=sys.stderr,
-        )
+        print(f"# {name}: median {timings[name]:.3f}s of [{detail}] "
+              f"({t.n} rows; task CPU {cpu:.2f}s per rep)", file=sys.stderr)
 
-    probe_end = probes[-1]
-    # per-query ambient-normalized ratio: median seconds over the mean of
-    # the two probes bracketing that query's reps (NOT the global probe
-    # median — ambient load moves WITHIN a run; the r9 builder measured a
-    # 13.8-18.6s spread on same-code back-to-back runs)
-    norm = {
-        name: round(t / ((probe_pair[name][0] + probe_pair[name][1]) / 2), 4)
-        for name, t in timings.items()
-        if name in probe_pair and sum(probe_pair[name]) > 0
-    }
-    total = round(sum(timings.values()), 4)
-    legacy14 = round(sum(timings.get(n, 0.0) for n in LEGACY14), 4)
+    probe_end = probe()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.1
     print(json.dumps({
         "metric": "total_headline_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # continuity + ambient diagnostics (extra keys; driver ignores)
-        "total_legacy14_sec": legacy14,
-        # continuity key per headline-set size (VERDICT r8 item 8): when
-        # the set grows, the old series stays one subtraction away —
-        # headline19 is the r8/r9 set
-        "total_headline19_sec": round(
-            sum(timings.get(n, 0.0) for n in HEADLINE[:19]), 4
-        ),
-        # headline20 adds line_dedup_boilerplate (r9 continuation)
-        "total_headline20_sec": round(
-            sum(timings.get(n, 0.0) for n in HEADLINE[:20]), 4
-        ),
+        # executor CPU-seconds of every task the query's jobs ran (build
+        # jobs included), per rep: host stalls stretch wall time but not
+        # CPU time
+        "queries_task_cpu_s": task_cpu,
+        "total_task_cpu_s": round(sum(task_cpu.values()), 4),
         "ambient_probe": {"start": probe_start, "end": probe_end},
-        # ambient-normalized series (VERDICT r9 #2): each headline as a
-        # ratio to the mean of its two bracketing probe runs. Unitless;
-        # compare THESE across rounds — host slowdown cancels. The full
-        # probe series is included so the noise profile of the run is
-        # reconstructible from the artifact alone.
-        "queries_norm": norm,
-        "total_legacy14_norm": round(
-            sum(norm.get(n, 0.0) for n in LEGACY14), 4
-        ),
-        "total_headline_norm": round(sum(norm.values()), 4),
-        # coverage of the normalized series (ADVICE r10): a headline
-        # that errored or whose probe bracket summed to <=0 is absent
-        # from queries_norm, which would make total_*_norm quietly
-        # incomparable across rounds — name the gaps explicitly
-        "norm_covered": len(norm),
-        "norm_missing": sorted(set(names) - set(norm)),
-        "probe_series": [round(p, 4) for p in probes],
         "conf": conf,
-        # r15 additive diagnostics: input layout of this run (see
-        # scan_parallel_copy) and the per-entry count of intermediates
-        # freed by the query_scope around each of time_median's samples
         "input_layout": layout_info,
         "released_rdds": released,
     }))

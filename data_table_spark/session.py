@@ -1,6 +1,10 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[32]``; the configs below are chosen so the
+Local sessions are sized to the machine they run on, by one rule
+(``session_size``): ``local[N]`` with N the CPUs this process may run
+on, and a driver heap of a quarter of the machine's memory (at least
+1 GB), as data.table sizes its thread team from the machine at run time
+(reference: src/openmp-utils.c:66). The configs below are chosen so the
 same code scales to a multi-executor cluster:
 
 - AQE on (runtime partition coalescing, skew-join splitting) — replaces
@@ -13,6 +17,7 @@ same code scales to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+from typing import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -31,7 +36,6 @@ _DEFAULTS = {
     # (the BENCH_r09/r10 "tail clips mid-stream" nit) and add nothing in
     # headless runs
     "spark.ui.showConsoleProgress": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # the oracle differential collect-compares full result frames; at
     # sf10 sweep scale row-level outputs exceed the 1g default cap
     # (funion_all hit it) — raise it for local tooling, a cluster
@@ -50,11 +54,26 @@ _DEFAULTS = {
 }
 
 
+def session_size(env: Mapping[str, str] = os.environ) -> dict[str, str]:
+    """The one session-sizing rule: ``spark.master`` and
+    ``spark.driver.memory`` for a local session on this machine.
+
+    Slots are the CPUs this process may run on (its affinity mask, not
+    the host's core count); the driver heap is a quarter of MemTotal,
+    at least 1024m. ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``,
+    when set and non-empty, replace the slot count and the heap verbatim
+    (no clamping), so a run at a chosen size records that size."""
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    # physical pages x page size is /proc/meminfo's MemTotal
+    mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    mem = env.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1024, mem_mb // 4)}m"
+    return {"spark.master": f"local[{cpus}]", "spark.driver.memory": mem}
+
+
 def get_spark(app_name: str = "data-table-spark", **overrides: str) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = dict(_DEFAULTS)
+    """Build (or fetch) the tuned SparkSession, sized by ``session_size``."""
+    builder = SparkSession.builder.appName(app_name)
+    conf = {**_DEFAULTS, **session_size()}
     conf.update({k: str(v) for k, v in overrides.items()})
     for k, v in conf.items():
         builder = builder.config(k, v)

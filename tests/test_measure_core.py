@@ -8,21 +8,30 @@ the plan-text scrub of tools/plan_fingerprint.py.
 - time_median runs each sample inside core.query_scope: the sample's
   checkpoint blocks are freed after it, so no sample inherits
   another's, and a caller's own cached tables stay cached.
+- scan_parallel_copy, the bench's input layout, is the same table
+  (schema and rows equal through pyarrow) for every sf0.1 table, and
+  the big tables actually split.
 - scrub renumbers the session-global HOF lambda counters per plan by
   first occurrence: counters drop out, lambda identity does not.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import importlib.util
 import os
+import shutil
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from bench import fingerprint, time_median
+from bench import fingerprint, scan_parallel_copy, time_median
+from conftest import SF_DIR
 from data_table_spark.core import materialize
+
+# the bench's scale: its lineitem is big enough to split into parts
+SF01 = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
 
 
 def test_fingerprint_hashes_map_column(spark):
@@ -72,6 +81,24 @@ def test_time_median_keeps_a_callers_cache(spark):
         assert set(jsc.getPersistentRDDs().keySet().toArray()) == cached
     finally:
         mine.unpersist(True)
+
+
+def test_scan_parallel_copy_is_same_table():
+    import pyarrow.parquet as pq
+
+    d, info = scan_parallel_copy(SF01)
+    try:
+        assert info["mode"] == "scan_parallel"
+        for p in sorted(glob.glob(f"{SF01}/*.parquet")):
+            name = os.path.basename(p)
+            orig = pq.read_table(p)
+            new = pq.read_table(os.path.join(d, name))
+            assert orig.schema == new.schema, name
+            assert orig.equals(new), name
+        # the point of the exercise: the big tables actually split
+        assert info["n_parts"]["lineitem.parquet"] > 1
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _scrub():

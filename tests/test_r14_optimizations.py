@@ -160,32 +160,6 @@ def test_word_shingles_nonempty_iff_token_count(spark):
     assert old == new == {1, 2, 6}
 
 
-def test_spread_stream_is_row_preserving(spark):
-    """spread_stream is a pure round-robin repartition: the streaming
-    result through it is the exact row multiset of the batch input."""
-    import tempfile
-
-    from data_table_spark.streaming import (
-        DOCUMENTS_SCHEMA,
-        run_available_now,
-        spread_stream,
-    )
-
-    rows = [
-        (i, f"text {i} body words", "en", "src", 20) for i in range(25)
-    ]
-    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    with tempfile.TemporaryDirectory() as d:
-        docs.coalesce(1).write.mode("overwrite").parquet(f"{d}/docs")
-        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(
-            f"{d}/docs"
-        )
-        out = run_available_now(
-            spread_stream(stream), output_mode="append"
-        ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, docs.collect()))
-
-
 def test_cogroup_arrow_query_fn_matches_pandas_twin(spark):
     """Pins the q_cogroup pandas->Arrow switch: the Arrow per-key fn
     (pyarrow Tables, Python-Decimal spend sum) emits the SAME rows as
